@@ -23,6 +23,17 @@ re-run safety the reference gets from staging COPY + PK constraints. The
 reference's per-table "Table N data ingested" prints (:616,645,672,703,
 736) become the returned report dict.
 
+The five loads run concurrently, and so do the five qc checks, through
+:func:`operators.materialize.overlap` (one driver thread per table), so
+the executors fill one table's idle gaps with another's tasks. That is
+safe because each load writes its own warehouse directory, each table
+has its own ``Observation``, and no cross-table constraint applies at
+load time (the reference's foreign keys are not enforced here; FK
+orphans are a data-quality check on the stored tables). The cost: every
+load caches its increment until its write ends, so peak executor
+storage is the sum of the five cached increments, not the largest one.
+A one-table dict runs inline on the calling thread.
+
 Collectors land driver-side files exactly as the reference does (pandas
 ``to_csv`` of an HTTP/REST payload, :72,219,263-278): pass ``fetchers``
 to pull real feeds through :func:`sources.readers.fetch_to_landing`; by
@@ -36,9 +47,11 @@ from __future__ import annotations
 import csv
 import os
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
+from flu_data_pipeline_spark.operators.materialize import overlap
 from flu_data_pipeline_spark.plans import flu_fixtures as fx
 from flu_data_pipeline_spark.plans.flu_tables import (
     build_county_region,
@@ -53,7 +66,7 @@ from flu_data_pipeline_spark.session import ensure_session_defaults
 from flu_data_pipeline_spark.sources.readers import fetch_to_landing, read_csv
 from flu_data_pipeline_spark.sources.writers import (
     idempotent_append,
-    validate_primary_key,
+    primary_key_counts,
 )
 
 #: (filename, fixture rows, fixture header) per source feed
@@ -129,7 +142,7 @@ def ingest(
 ) -> tuple[dict[str, int], dict[str, dict]]:
     """Idempotent warehouse load (:559-733): anti-join append per table,
     keyed on the logical PK; returns (rows appended, observed metrics)
-    per table.
+    per table. The tables load concurrently (see the module docstring).
 
     In-flight metrics ride ``df.observe`` (an Observation per table):
     build-output row count and per-PK-column null counts are accumulated
@@ -141,37 +154,39 @@ def ingest(
     from pyspark.sql import functions as F
 
     os.makedirs(warehouse_dir, exist_ok=True)
-    appended: dict[str, int] = {}
-    observed: dict[str, dict] = {}
-    for name, df in tables.items():
+
+    def load(name: str, df: DataFrame) -> tuple[int, dict]:
         obs = Observation(f"load_{name}")
         metrics = [F.count(F.lit(1)).alias("rows_built")]
         for k in PRIMARY_KEYS[name]:
             metrics.append(
                 F.sum(F.col(k).isNull().cast("long")).alias(f"null_{k}")
             )
-        df_obs = df.observe(obs, *metrics)
-        appended[name] = idempotent_append(
+        n = idempotent_append(
             spark,
-            df_obs,
+            df.observe(obs, *metrics),
             os.path.join(warehouse_dir, name),
             PRIMARY_KEYS[name],
         )
-        observed[name] = dict(obs.get)
+        return n, dict(obs.get)
+
+    loaded = overlap(*(partial(load, n, df) for n, df in tables.items()))
+    appended = {n: rows for n, (rows, _) in zip(tables, loaded)}
+    observed = {n: obs for n, (_, obs) in zip(tables, loaded)}
     return appended, observed
 
 
 def qc(spark: SparkSession, warehouse_dir: str) -> dict[str, dict[str, int]]:
     """Post-load checks (the reference's per-table confirmations, made
-    assertable): warehouse row count and PK-duplicate count per table."""
-    report = {}
-    for name in STAR_SCHEMA:
+    assertable): warehouse row count and PK-duplicate count per table,
+    both from one read of the stored table; the tables run concurrently."""
+
+    def check(name: str) -> dict[str, int]:
         df = spark.read.parquet(os.path.join(warehouse_dir, name))
-        report[name] = {
-            "rows": df.count(),
-            "pk_duplicates": validate_primary_key(df, name),
-        }
-    return report
+        rows, dups = primary_key_counts(df, name)
+        return {"rows": rows, "pk_duplicates": dups}
+
+    return dict(zip(STAR_SCHEMA, overlap(*(partial(check, n) for n in STAR_SCHEMA))))
 
 
 def run_pipeline(

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
+from flu_data_pipeline_spark.operators.materialize import overlap
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -60,31 +61,6 @@ def _cos_sql(a: str, b: str) -> str:
         f"v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)), (x, y) -> x + y))"
     )
     return f"({d} / ({na} * {nb}))"
-
-
-def _overlap(*thunks):
-    """Run independent Spark driver actions concurrently and return
-    their results in call order (guide §2.6 — overlap independent
-    jobs). The multi-phase serving evals chain several MUTUALLY
-    INDEPENDENT blocking driver actions (eager localCheckpoints, probe
-    collects) that otherwise serialize on the driver while the cluster
-    idles between them; submitting them from a small thread pool lets
-    the scheduler back-fill executors freed by one job's stragglers
-    with the next job's tasks. Each thunk runs the exact job it ran
-    sequentially — same plan, same shuffles, same results — only the
-    wall-clock overlap changes, so oracle hashes are untouched by
-    construction. Spark's scheduler is explicitly designed for
-    concurrent jobs from driver threads (FIFO: earlier submissions get
-    resources first, later ones back-fill). Exceptions propagate to
-    the caller exactly as in the sequential form (the first failing
-    thunk's error raises at its position's result())."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        return [f.result() for f in futures]
 
 
 @register(
@@ -4540,7 +4516,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 wave 2 (guide §2.6): truth read, SQ8 bounds, and probe
     # ranking are mutually independent blocking jobs — overlap them.
-    brute, bounds, ranked = _overlap(_brute, _bounds, _ranked)
+    brute, bounds, ranked = overlap(_brute, _bounds, _ranked)
 
     def _level(p: int) -> DataFrame:
         probes = ranked.filter(F.col("prn") <= p).select(
@@ -4592,7 +4568,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-level plan, scan, or assertion — only their wall-clock
     # overlap (the per-level PartitionFilters assert still runs and
     # still fails the query loudly).
-    scored_levels = _overlap(
+    scored_levels = overlap(
         *[lambda p=p: _level(p) for p in _FRONTIER_NPROBES]
     )
     out = None
@@ -4861,7 +4837,7 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 wave 2 (guide §2.6): truth read, corpus PQ-encode, ADC
     # tables, and probe ranking are mutually independent — overlap.
-    brute, codes, adc, ranked = _overlap(_brute, _codes, _adc, _ranked)
+    brute, codes, adc, ranked = overlap(_brute, _codes, _adc, _ranked)
 
     def _level(p: int) -> DataFrame:
         probes = ranked.filter(F.col("prn") <= p).select(
@@ -4900,7 +4876,7 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # upfront checkpoints + their own directory-pruned scans — run the
     # (collect + scored-checkpoint) pairs concurrently; per-level
     # plans, scans, and the PartitionFilters assert are unchanged.
-    scored_levels = _overlap(
+    scored_levels = overlap(
         *[lambda p=p: _level(p) for p in _FRONTIER_NPROBES]
     )
     out = None
@@ -5146,7 +5122,7 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # r11 wave 2 (guide §2.6): the base-index build and the probe
     # ranking depend only on the trained centroids — overlap them.
-    idx_pre, probes = _overlap(_idx_pre, _probes)
+    idx_pre, probes = overlap(_idx_pre, _probes)
     idx_new = (
         assign_best(emb.filter(is_new), "embedding", "vec_id", cents)
         .select("vec_id", "cluster")
@@ -5198,7 +5174,7 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the two phases' truth builds are four mutually independent
     # blocking checkpoints (each reads only its checkpointed index /
     # corpus + the checkpointed probes) — overlap all four.
-    scored_post, scored_pre, truth_post, truth_pre = _overlap(
+    scored_post, scored_pre, truth_post, truth_pre = overlap(
         lambda: _scored_for(idx_post),
         lambda: _scored_for(idx_pre),
         lambda: truth_over(emb).localCheckpoint(eager=True),
@@ -5661,7 +5637,7 @@ def _semdedup_incremental_frames(
     # 0.98 s/5 jobs + 0.43 s/8 jobs back-to-back at sf0.1). Overlap
     # them: same plans, same shuffles, same results — only the
     # wall-clock overlap changes, exactly the wave-2 frontier shape.
-    kept, asgnew = _overlap(
+    kept, asgnew = overlap(
         lambda: kept_plan.localCheckpoint(eager=False),
         lambda: asgnew_plan.localCheckpoint(eager=False),
     )
@@ -6456,7 +6432,7 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return probes, ids
 
-    cb, (probes, ids) = _overlap(
+    cb, (probes, ids) = overlap(
         lambda: _pq_trained_codebooks(emb), _probes_and_ids
     )
     j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")

@@ -150,7 +150,8 @@ def idempotent_append(
     idempotence check nothing extra).
     """
     deduped = df.dropDuplicates(list(pk_cols))
-    if os.path.exists(path):
+    exists = os.path.exists(path)
+    if exists:
         # Layout guard: appending under a different partitioning than
         # the stored table silently produces a mixed directory tree
         # (some rows in col=... dirs, some flat) that reads back but
@@ -182,7 +183,12 @@ def idempotent_append(
     new_rows = new_rows.cache()
     try:
         n = new_rows.count()
-        if n > 0:
+        # an unpartitioned first load writes even when empty: a
+        # schema-only table is what the reference's CREATE TABLE leaves,
+        # and readers (qc, the report API) need the table to exist. An
+        # empty partitioned write leaves no partition directories, so
+        # the layout guard would refuse the next append; skip it.
+        if n > 0 or not (exists or partition_cols):
             w = new_rows.write.mode("append")
             if partition_cols:
                 w = w.partitionBy(*partition_cols)
@@ -192,13 +198,26 @@ def idempotent_append(
     return n
 
 
+def primary_key_counts(df: DataFrame, table: str) -> tuple[int, int]:
+    """(row count, duplicated PK tuples) of ``df`` from one aggregate over
+    the per-key counts, so a table is read once for both."""
+    pk = list(PRIMARY_KEYS[table])
+    row = (
+        df.groupBy(*pk)
+        .count()
+        .agg(
+            F.sum("count").alias("rows"),
+            F.count(F.when(F.col("count") > 1, 1)).alias("duplicates"),
+        )
+        .first()
+    )
+    return row["rows"] or 0, row["duplicates"]
+
+
 def validate_primary_key(df: DataFrame, table: str) -> int:
     """PK-constraint check (the reference's DDL guarantee, S7): number of
     duplicated PK tuples — must be 0."""
-    pk = list(PRIMARY_KEYS[table])
-    return (
-        df.groupBy(*pk).count().filter("count > 1").count()
-    )
+    return primary_key_counts(df, table)[1]
 
 
 def validate_foreign_key(child: DataFrame, parent: DataFrame, key: str) -> int:

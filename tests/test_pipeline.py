@@ -72,3 +72,63 @@ def test_pipeline_accepts_injected_fetchers(spark, tmp_path):
         },
     )
     assert out["qc"]["county_region"]["rows"] == 39
+
+
+def _warehouse_rows(spark, warehouse):
+    import os as _os
+    from collections import Counter
+
+    def rows(name):
+        df = spark.read.parquet(_os.path.join(warehouse, name))
+        return Counter(tuple(r) for r in df.collect())
+
+    return {name: rows(name) for name in STAR_SCHEMA}
+
+
+def test_concurrent_ingest_equals_one_table_calls(spark, tmp_path):
+    """One ingest call loads the five tables concurrently; it must give the
+    same report and warehouse as one single-table call per table (the
+    inline path)."""
+    from flu_data_pipeline_spark import pipeline as pl
+
+    landing = {
+        name: pl.collect(name, str(tmp_path / "landing"))
+        for name in ("rhino", "census", "fluview")
+    }
+    together = str(tmp_path / "together")
+    apart = str(tmp_path / "apart")
+
+    appended, observed = {}, {}
+    for name, df in pl.build_tables(spark, landing).items():
+        a, o = pl.ingest(spark, {name: df}, apart)
+        appended.update(a)
+        observed.update(o)
+
+    got = pl.ingest(spark, pl.build_tables(spark, landing), together)
+    assert got == (appended, observed)
+    assert _warehouse_rows(spark, together) == _warehouse_rows(spark, apart)
+
+
+def test_empty_first_load_creates_table(spark, tmp_path):
+    """A feed that lands only its header appends 0 rows; the first load
+    still creates the (schema-only) table, so qc reads it, and a re-run
+    appends nothing anywhere."""
+    import csv as _csv
+    from io import StringIO
+
+    from flu_data_pipeline_spark.plans import flu_fixtures as fx
+
+    buf = StringIO()
+    _csv.writer(buf).writerow(fx.FLUVIEW_COLS)
+    payload = buf.getvalue().encode()
+    fetchers = {"fluview": ("https://example.invalid/fluview.csv", lambda url: payload)}
+    landing = str(tmp_path / "landing")
+    warehouse = str(tmp_path / "warehouse")
+
+    first = run_pipeline(spark, landing, warehouse, fetchers=fetchers)
+    assert first["appended"]["historics"] == 0
+    assert first["qc"]["historics"] == {"rows": 0, "pk_duplicates": 0}
+
+    second = run_pipeline(spark, landing, warehouse, fetchers=fetchers)
+    assert all(n == 0 for n in second["appended"].values()), second["appended"]
+    assert second["qc"] == first["qc"]

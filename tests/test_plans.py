@@ -489,7 +489,7 @@ def test_serving_truth_fingerprint_invalidation(spark):
 
 
 def test_overlap_order_and_error_propagation():
-    """_overlap (r11 wave 2, guide §2.6) must return thunk results in
+    """overlap (r11 wave 2) must return thunk results in
     CALL order regardless of completion order (the serving evals zip
     level results back to their nprobe constants positionally), and a
     failing thunk's exception must reach the caller exactly as in the
@@ -499,7 +499,7 @@ def test_overlap_order_and_error_propagation():
 
     import pytest
 
-    from flu_data_pipeline_spark.plans.similarity_queries import _overlap
+    from flu_data_pipeline_spark.operators.materialize import overlap
 
     def slow():
         _time.sleep(0.2)
@@ -508,14 +508,34 @@ def test_overlap_order_and_error_propagation():
     def fast():
         return "fast"
 
-    assert _overlap(slow, fast) == ["slow", "fast"]
-    assert _overlap(fast) == ["fast"]
+    assert overlap(slow, fast) == ["slow", "fast"]
+    assert overlap(fast) == ["fast"]
 
     def boom():
         raise AssertionError("partition pruning did not engage")
 
     with pytest.raises(AssertionError, match="partition pruning"):
-        _overlap(fast, boom, slow)
+        overlap(fast, boom, slow)
+
+
+def test_overlap_threads_inherit_local_properties(spark):
+    """Jobs a thunk submits must carry the caller's local properties (job
+    description and group), so concurrent phases stay attributable.
+    PySpark pins each Python thread to its own JVM thread; a plain pool
+    thread starts with none of the caller's properties."""
+    from flu_data_pipeline_spark.operators.materialize import overlap
+
+    sc = spark.sparkContext
+    key = "spark.job.description"
+    sc.setLocalProperty(key, "overlap-caller")
+    try:
+        got = overlap(
+            lambda: sc.getLocalProperty(key),
+            lambda: sc.getLocalProperty(key),
+        )
+    finally:
+        sc.setLocalProperty(key, None)
+    assert got == ["overlap-caller", "overlap-caller"]
 
 
 def test_aqe_coalesce_assertion_has_teeth(spark):

@@ -106,6 +106,15 @@ def test_idempotent_append_partition_layout_guard(spark, tmp_path):
         idempotent_append(
             spark, df, target, ("pk",), partition_cols=("v",)
         )
+    # an empty first append into a partitioned target creates nothing,
+    # so the next append still sets the layout
+    late = str(tmp_path / "late_tbl")
+    assert idempotent_append(
+        spark, df.limit(0), late, ("pk",), partition_cols=("part",)
+    ) == 0
+    assert idempotent_append(
+        spark, df, late, ("pk",), partition_cols=("part",)
+    ) == 2
     # flat table + partitioned append: refused the other way too
     flat = str(tmp_path / "flat_tbl")
     assert idempotent_append(spark, df, flat, ("pk",)) == 2
