@@ -47,75 +47,11 @@ def main() -> int:
             ("driver_sweep", [sys.executable, "scripts/driver_sweep.py"])
         )
     failed = [label for label, cmd in checks if not run(label, cmd)]
-    canary_verdict_line()
     if failed:
         print(f"CLOSE RED: {', '.join(failed)}")
         return 1
     print("CLOSE GREEN: all gates passed")
     return 0
-
-
-def canary_verdict_line() -> None:
-    """One-line mechanized two-axis arbitration (round 10 — VERDICT r9
-    #1): take the most recent recoverable sf0.1 reading as "current"
-    and run bench.arbitrate against everything before it, so the
-    layout-smear-vs-regression call (frozen canary-16 = smear-sensitive
-    small axis; frozen heavy-4 = executor-bound axis a smear can't
-    move) is printed mechanically against BOTH anchors — the prior
-    reading AND the last committed driver artifact. Informational —
-    load smears are a rerun, not a gate failure; a red gate would train
-    rounds to ignore it under ambient load."""
-    sys.path.insert(0, ROOT)
-    try:
-        import bench
-    except Exception as ex:  # pragma: no cover - import guard only
-        print(f"canary: unavailable ({ex})")
-        return
-    records = bench.reading_records(ROOT, 0.1)
-    if len(records) < 2:
-        print("canary: no-prior (fewer than 2 sf0.1 readings)")
-        return
-    # "current" = the most recent CANARY-bearing record, not blindly
-    # records[-1]: a heavy-only record (artifact where just the heavy
-    # block was recoverable) would otherwise print canary-16 n/a /
-    # no-prior even though older canary readings exist (ADVICE r10).
-    cur_idx = max(
-        (
-            i
-            for i, r in enumerate(records)
-            if r["canary_total_median"] is not None
-        ),
-        default=len(records) - 1,
-    )
-    cur, prior = records[cur_idx], records[:cur_idx]
-    if not prior:
-        print("canary: no-prior (no reading before the current one)")
-        return
-    verdict, cr, hr = bench.arbitrate(
-        cur["canary_total_median"],
-        cur["heavy_total_median"],
-        prior,
-        # heavy anchors must share the CURRENT reading's cost basis —
-        # a pre-reanchor reading replayed here anchors against its own
-        # basis, not whatever the ledger has moved on to
-        heavy_basis=cur.get("heavy_basis")
-        or bench._HEAVY_BASIS_HISTORY[0][0],
-    )
-    def _axis(label, val, ratios):
-        v = f"{val:.2f}s" if val is not None else "n/a"
-        return (
-            f"{label} {v} (vs_prev {ratios['ratio_vs_prev']} "
-            f"[{ratios['prev_source']}], vs_last_round "
-            f"{ratios['ratio_vs_last_round']} "
-            f"[{ratios['last_round_source']}])"
-        )
-    print(
-        f"canary: {verdict} — current {cur['source']}: "
-        + _axis("canary-16", cur["canary_total_median"], cr)
-        + "; "
-        + _axis("heavy-4", cur["heavy_total_median"], hr)
-        + f"; threshold {bench.CANARY_FLAT_THRESHOLD}"
-    )
 
 
 if __name__ == "__main__":

@@ -1,11 +1,11 @@
 #!/usr/bin/env python
-"""Dump `.explain("formatted")` for named queries into plans/r12/.
+"""Dump `.explain("formatted")` for named queries into plans/<round>/.
 
-    python scripts/dump_r12_plan.py name1,name2 suffix [sf_dir]
+    python scripts/dump_plan.py <round> name1,name2 suffix [sf_dir]
 
-Writes plans/r12/<name>_<suffix>.txt — the before/after plan evidence
-for OPTIMIZATION_r12.md (the judge checks plan-shape claims against
-these files).
+Writes plans/<round>/<name>_<suffix>.txt — the before/after plan
+evidence for OPTIMIZATION_<round>.md (plan-shape claims there are
+checked against these files).
 """
 
 from __future__ import annotations
@@ -20,16 +20,17 @@ from flu_data_pipeline_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    names = sys.argv[1].split(",")
-    suffix = sys.argv[2]
-    sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
+    rnd = sys.argv[1]
+    names = sys.argv[2].split(",")
+    suffix = sys.argv[3]
+    sf_dir = sys.argv[4] if len(sys.argv) > 4 else "/root/testdata/sf0.1"
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r12",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="dump-r12-plan")
+    spark = get_spark(app_name=f"dump-{rnd}-plan")
     for name in names:
         df = REGISTRY[name].builder(spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
