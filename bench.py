@@ -43,11 +43,11 @@ import os
 import statistics
 import sys
 import time
-from contextlib import contextmanager
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
+from flu_data_pipeline_spark.operators.materialize import job_label  # noqa: E402
 from flu_data_pipeline_spark.plans import REGISTRY  # noqa: E402
 from flu_data_pipeline_spark.session import get_spark  # noqa: E402
 from perfbench.spans import StatusStore  # noqa: E402
@@ -65,19 +65,6 @@ CPU_REGRESSION_RATIO = 1.25
 
 SIDECAR = "bench_last.json"
 TIMED_RUNS = 5
-
-
-@contextmanager
-def job_label(spark, name: str):
-    """Every job submitted inside the block, from this thread or from
-    threads it starts through ``overlap``, carries ``name`` as its job
-    description."""
-    sc = spark.sparkContext
-    sc.setJobDescription(name)
-    try:
-        yield
-    finally:
-        sc.setJobDescription(None)
 
 
 def measure(store: StatusStore, thunk) -> tuple[float, dict]:

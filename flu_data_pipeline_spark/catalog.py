@@ -1,10 +1,23 @@
-"""Table catalog: register the driver's parquet tables as temp views.
+"""Table catalog: the parquet scan layer and its schema resolution.
 
 The driver test data (TESTDATA.md) is a TPC-H-ish star schema plus
 ``events`` (event stream), ``documents`` (text corpus) and ``embeddings``
 (vector table). All queries in :mod:`flu_data_pipeline_spark.plans` load
 through here so the scan layer is a single choke point (one place to switch
 to bucketed tables / a real metastore at scale).
+
+The choke point also owns schema resolution, the job a metastore does for
+a warehouse. A schema-inferring ``spark.read.parquet`` submits a one-task
+Spark job to read a footer on every call, even when the files have not
+changed. :func:`read_parquet` infers a path's schema once and memoizes it
+per absolute path; later reads of the same file state pass the memoized
+schema and submit no job. The identity of a file state is the sorted
+``(relpath, inode, mtime_ns, size)`` of every file under the path plus
+the session confs that change what inference returns
+(:data:`INFERENCE_CONFS`), so any rewrite, append or conf flip
+re-infers. Its blind spot: a file rewritten in place keeping the same
+inode, size and ``mtime_ns`` keeps its old schema. The memo is in-process
+metadata only; nothing is persisted.
 """
 
 from __future__ import annotations
@@ -13,6 +26,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from flu_data_pipeline_spark.session import ensure_session_defaults
 
@@ -28,6 +42,76 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+#: Session confs that change the schema parquet inference returns; their
+#: values are part of every memo entry's identity.
+INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+#: absolute path -> (identity, schema) of its last inference. One memo per
+#: process, as a metastore is one per warehouse: the identity, not the
+#: caller, decides whether an entry applies. Threads (``overlap``) share it
+#: without a lock: an entry is replaced as one tuple whose identity was
+#: taken before its inference ran, so a race costs at most a repeated
+#: inference, never a schema served for a file state it does not match.
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _raise(err: OSError) -> None:
+    raise err
+
+
+def _file_state(path: str) -> tuple | None:
+    """Sorted ``(relpath, st_ino, st_mtime_ns, st_size)`` of every file
+    under ``path`` (a single file is its own state), or None when the
+    path cannot be listed on the local file system."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return (("", st.st_ino, st.st_mtime_ns, st.st_size),)
+        if not os.path.isdir(path):
+            return None
+        state = []
+        for root, _, files in os.walk(path, onerror=_raise):
+            for name in files:
+                full = os.path.join(root, name)
+                st = os.stat(full)
+                state.append(
+                    (os.path.relpath(full, path), st.st_ino, st.st_mtime_ns, st.st_size)
+                )
+        return tuple(sorted(state))
+    except OSError:
+        return None
+
+
+def _read(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
+    """:func:`read_parquet` plus the schema it resolved."""
+    state = _file_state(path)
+    if state is None:
+        df = spark.read.parquet(path)
+        return df, df.schema
+    key = os.path.abspath(path)
+    identity = (state, tuple(spark.conf.get(k) for k in INFERENCE_CONFS))
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == identity:
+        return spark.read.schema(hit[1]).parquet(path), hit[1]
+    df = spark.read.parquet(path)
+    schema = df.schema
+    _SCHEMAS[key] = (identity, schema)
+    return df, schema
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema only when the
+    path's file state or the inference confs changed since the last read
+    in this process (see the module docstring). A path that cannot be
+    listed locally falls back to the plain schema-inferring read."""
+    return _read(spark, path)[0]
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -50,8 +134,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     session gets the same read behavior (nanosAsLong + UTC tz are
     runtime-settable and must be on before the read is analyzed)."""
     ensure_session_defaults(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    for f in df.schema.fields:
+    df, schema = _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    for f in schema.fields:
         if f.name == "ts" and f.dataType.typeName() == "long":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif f.name == "ts" and f.dataType.typeName() == "timestamp_ntz":

@@ -32,7 +32,9 @@ load time (the reference's foreign keys are not enforced here; FK
 orphans are a data-quality check on the stored tables). The cost: every
 load caches its increment until its write ends, so peak executor
 storage is the sum of the five cached increments, not the largest one.
-A one-table dict runs inline on the calling thread.
+A one-table dict runs inline on the calling thread. Every job a load or
+a check submits carries the label ``ingest:<table>`` / ``qc:<table>``
+(:func:`operators.materialize.job_label`).
 
 Collectors land driver-side files exactly as the reference does (pandas
 ``to_csv`` of an HTTP/REST payload, :72,219,263-278): pass ``fetchers``
@@ -51,7 +53,8 @@ from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 
-from flu_data_pipeline_spark.operators.materialize import overlap
+from flu_data_pipeline_spark.catalog import read_parquet
+from flu_data_pipeline_spark.operators.materialize import job_label, overlap
 from flu_data_pipeline_spark.plans import flu_fixtures as fx
 from flu_data_pipeline_spark.plans.flu_tables import (
     build_county_region,
@@ -162,12 +165,13 @@ def ingest(
             metrics.append(
                 F.sum(F.col(k).isNull().cast("long")).alias(f"null_{k}")
             )
-        n = idempotent_append(
-            spark,
-            df.observe(obs, *metrics),
-            os.path.join(warehouse_dir, name),
-            PRIMARY_KEYS[name],
-        )
+        with job_label(spark, f"ingest:{name}"):
+            n = idempotent_append(
+                spark,
+                df.observe(obs, *metrics),
+                os.path.join(warehouse_dir, name),
+                PRIMARY_KEYS[name],
+            )
         return n, dict(obs.get)
 
     loaded = overlap(*(partial(load, n, df) for n, df in tables.items()))
@@ -182,8 +186,9 @@ def qc(spark: SparkSession, warehouse_dir: str) -> dict[str, dict[str, int]]:
     both from one read of the stored table; the tables run concurrently."""
 
     def check(name: str) -> dict[str, int]:
-        df = spark.read.parquet(os.path.join(warehouse_dir, name))
-        rows, dups = primary_key_counts(df, name)
+        with job_label(spark, f"qc:{name}"):
+            df = read_parquet(spark, os.path.join(warehouse_dir, name))
+            rows, dups = primary_key_counts(df, name)
         return {"rows": rows, "pk_duplicates": dups}
 
     return dict(zip(STAR_SCHEMA, overlap(*(partial(check, n) for n in STAR_SCHEMA))))

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.catalog import load_table, read_parquet
 from flu_data_pipeline_spark.plans.registry import register
 
 _BITS = 8  # 8 bits/dim → 16-bit Morton code, 256 z-buckets of 256 cells
@@ -744,7 +744,7 @@ def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
     bench=True,
 )
 def dpp_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fact = spark.read.parquet(_dpp_fact_path(spark, sf_dir))
+    fact = read_parquet(spark, _dpp_fact_path(spark, sf_dir))
     sel = (
         load_table(spark, sf_dir, "orders")
         .filter(

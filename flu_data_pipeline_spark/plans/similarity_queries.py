@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.catalog import load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.materialize import overlap
 from flu_data_pipeline_spark.plans.registry import register
@@ -3084,8 +3084,8 @@ def ivf_layout_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     wprobe = Window.partitionBy("query_id").orderBy(
         F.asc("cdist"), F.asc("cluster")
     )
@@ -3235,12 +3235,12 @@ def ivf_index_ingest_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    cdf = spark.read.parquet(cents_path)
+    cdf = read_parquet(spark, cents_path)
     is_new = (F.col("vec_id") % _INGEST_MOD) == _INGEST_REM
     # base counts come from the INDEX's partition column (the layout is
     # the source of truth for what is already serving)
     base = (
-        spark.read.parquet(fact_path)
+        read_parquet(spark, fact_path)
         .filter(~is_new)
         .groupBy(F.col("list_id").alias("cluster"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("base_n"))
@@ -3342,8 +3342,8 @@ def rag_retrieval_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     wprobe = Window.partitionBy("query_id").orderBy(
         F.asc("cdist"), F.asc("cluster")
     )
@@ -4118,8 +4118,8 @@ def ivf_pruning_files_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     wprobe = Window.partitionBy("query_id").orderBy(
         F.asc("cdist"), F.asc("cluster")
     )
@@ -4312,7 +4312,7 @@ def _serving_truth(
     branch (pq_rerank, binary rerank), where the eager form was a pure
     job barrier (r11 wave 2, guide §2.6/§5)."""
     return (
-        spark.read.parquet(_serving_truth_path(spark, sf_dir))
+        read_parquet(spark, _serving_truth_path(spark, sf_dir))
         .filter(F.col("metric") == metric)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=eager)
@@ -4465,8 +4465,8 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     queries = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
     ).select(
@@ -4751,8 +4751,8 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     queries = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
     ).select(
@@ -6390,8 +6390,8 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     queries = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
     ).select(
@@ -6945,8 +6945,8 @@ def pq_rerank_hydration_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap = 100
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
-    fact = spark.read.parquet(fact_path)
-    cdf = spark.read.parquet(cents_path)
+    fact = read_parquet(spark, fact_path)
+    cdf = read_parquet(spark, cents_path)
     queries = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
     ).select(
@@ -7562,7 +7562,7 @@ def _nnd_graph_path(spark: SparkSession, sf_dir: str) -> str:
     tags=("similarity", "ann", "graph", "dedup", "llm"),
 )
 def ann_nndescent_mutual_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    g = spark.read.parquet(_nnd_graph_path(spark, sf_dir))
+    g = read_parquet(spark, _nnd_graph_path(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
     ncnt = emb.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
     nedge = g.agg(F.count(F.lit(1)).cast("bigint").alias("n_graph_edges"))
@@ -7759,7 +7759,7 @@ def _beam_hop_sql(h: int) -> str:
 def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     from flu_data_pipeline_spark.operators.clustering import sqdist
 
-    g = spark.read.parquet(_nnd_graph_path(spark, sf_dir)).select("u", "v")
+    g = read_parquet(spark, _nnd_graph_path(spark, sf_dir)).select("u", "v")
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)

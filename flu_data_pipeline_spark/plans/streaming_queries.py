@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.catalog import read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64_sql
 from flu_data_pipeline_spark.plans.registry import register
 from flu_data_pipeline_spark.plans.window_queries import SESSIONS_CTE_SQL
@@ -44,7 +45,7 @@ def _read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     because the sibling tables' schemas differ."""
     import os
 
-    raw_schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw_schema = read_parquet(spark, os.path.join(sf_dir, "events.parquet")).schema
     stream = (
         spark.readStream.schema(raw_schema)
         .option("pathGlobFilter", "events.parquet")
@@ -483,8 +484,8 @@ def _register_semdedup_stream() -> None:
             twolevel_assign,
         )
 
-        raw_schema = spark.read.parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
+        raw_schema = read_parquet(
+            spark, os.path.join(sf_dir, "embeddings.parquet")
         ).schema
         stream = (
             spark.readStream.schema(raw_schema)
@@ -557,8 +558,8 @@ def _register_paragraph_stream() -> None:
     ) -> DataFrame:
         import os
 
-        raw_schema = spark.read.parquet(
-            os.path.join(sf_dir, "documents.parquet")
+        raw_schema = read_parquet(
+            spark, os.path.join(sf_dir, "documents.parquet")
         ).schema
         stream = (
             spark.readStream.schema(raw_schema)
@@ -622,7 +623,7 @@ def _register_quality_gate_stream() -> None:
         import os
 
         # 1) batch fit (frozen model)
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
         _, history = _qc_fit(_qc_features(docs))
         q = history[-1]
         b0, b1, b2 = q["q0"] / 1e9, q["q1"] / 1e9, q["q2"] / 1e9
@@ -731,8 +732,8 @@ def _register_binary_signature_stream() -> None:
     ) -> DataFrame:
         import os
 
-        raw_schema = spark.read.parquet(
-            os.path.join(sf_dir, "embeddings.parquet")
+        raw_schema = read_parquet(
+            spark, os.path.join(sf_dir, "embeddings.parquet")
         ).schema
         stream = (
             spark.readStream.schema(raw_schema)
@@ -803,7 +804,7 @@ def _register_doremi_stream() -> None:
         import os
 
         # 1) batch fit (frozen model) — train-offline / ingest-online
-        docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        docs = read_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
         _, history = _qc_fit(_qc_features(docs))
         q = history[-1]
         b0, b1, b2 = q["q0"] / 1e9, q["q1"] / 1e9, q["q2"] / 1e9

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.catalog import load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.dedup import tokenize
 from flu_data_pipeline_spark.plans.registry import register
@@ -5086,8 +5086,8 @@ def corpus_cleaned_write_pipeline(
             f"idempotent replay appended {rerun} rows — the cleaned-"
             f"corpus write path is not replay-safe"
         )
-    back = spark.read.parquet(corpus)
-    man = spark.read.parquet(manifest)
+    back = read_parquet(spark, corpus)
+    man = read_parquet(spark, manifest)
     per = back.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("cleaned_chars").cast("bigint").alias("cleaned_chars_total"),

@@ -13,7 +13,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> str:
+    """The local master size and default shuffle partition count,
+    ``$SPARK_GRAFT_CPUS`` (32 when unset), read when a session is built
+    or configured, not when this module is imported."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
 
 #: Correctness- and perf-load-bearing confs that are runtime-settable
 #: (`spark.conf.set` on an already-built session). Every registered query
@@ -92,7 +98,7 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     try:
         if spark.conf.get("spark.sql.shuffle.partitions") == "200":
             spark.conf.set(
-                "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
+                "spark.sql.shuffle.partitions", default_cpus()
             )
     except Exception:
         pass
@@ -116,13 +122,13 @@ def get_spark(
       semantics for its percent cleaner) instead of raising.
     - Arrow enabled: fast createDataFrame/toPandas and pandas UDFs.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

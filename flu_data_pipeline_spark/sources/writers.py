@@ -17,6 +17,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.catalog import read_parquet
 from flu_data_pipeline_spark.schemas import PRIMARY_KEYS
 
 
@@ -164,7 +165,7 @@ def idempotent_append(
                 f"{tuple(partition_cols) or '()'} — repartition the "
                 f"table (rewrite) instead of mixing layouts"
             )
-        existing = spark.read.parquet(path).select(
+        existing = read_parquet(spark, path).select(
             *[F.col(c).alias(f"__ex_{c}") for c in pk_cols]
         )
         # Null-safe key equality: a composite key with a null component
@@ -267,7 +268,7 @@ def merge_upsert(
         .drop("__rn")
     )
     if os.path.exists(path):
-        existing = spark.read.parquet(path)
+        existing = read_parquet(spark, path)
         n_updated = (
             increment.select(*keys).join(existing.select(*keys), keys, "left_semi").count()
         )
@@ -279,7 +280,7 @@ def merge_upsert(
         merged = increment
     staging = path.rstrip("/") + ".__staging__"
     merged.write.mode("overwrite").parquet(staging)
-    final = spark.read.parquet(staging)
+    final = read_parquet(spark, staging)
     final.write.mode("overwrite").parquet(path)
     # best-effort cleanup of the staging dir (local/DFS path)
     import shutil
@@ -343,7 +344,7 @@ def delete_rows(
     keys = list(pk_cols)
     if not os.path.exists(path):
         return 0
-    existing = spark.read.parquet(path)
+    existing = read_parquet(spark, path)
     key_rows = keys_df.select(*keys).distinct()
     kept = existing.join(key_rows, keys, "left_anti")
     n_before = existing.count()
@@ -352,7 +353,7 @@ def delete_rows(
         return 0
     staging = path.rstrip("/") + ".__staging__"
     kept.write.mode("overwrite").parquet(staging)
-    spark.read.parquet(staging).write.mode("overwrite").parquet(path)
+    read_parquet(spark, staging).write.mode("overwrite").parquet(path)
     shutil.rmtree(staging, ignore_errors=True)
     return n_before - n_after
 
@@ -379,8 +380,8 @@ def write_bucketed(
     Registered in the session catalog via ``saveAsTable`` (bucket
     metadata lives in the catalog, not the parquet footer); at scale the
     same call targets a real metastore. Read back with
-    ``spark.table(table)`` — a plain ``spark.read.parquet(path)`` sees
-    the files but not the bucket spec.
+    ``spark.table(table)`` — a plain parquet read of ``path`` sees the
+    files but not the bucket spec.
     """
     (
         df.write.mode(mode)

@@ -132,3 +132,43 @@ def test_empty_first_load_creates_table(spark, tmp_path):
     second = run_pipeline(spark, landing, warehouse, fetchers=fetchers)
     assert all(n == 0 for n in second["appended"].values()), second["appended"]
     assert second["qc"] == first["qc"]
+
+
+def test_ingest_and_qc_jobs_carry_their_table_label(spark, tmp_path):
+    """Every job the five-table ingest and qc submit carries its table's
+    label after the caller's own description; the one-table inline path
+    gives the caller its description back."""
+    from perfbench.spans import StatusStore
+
+    from flu_data_pipeline_spark import pipeline as pl
+    from flu_data_pipeline_spark.operators.materialize import job_label
+
+    landing = {
+        name: pl.collect(name, str(tmp_path / "landing"))
+        for name in ("rhino", "census", "fluview")
+    }
+    warehouse = str(tmp_path / "warehouse")
+    tables = pl.build_tables(spark, landing)
+    store = StatusStore(spark)
+    sc = spark.sparkContext
+
+    def labels_of(thunk):
+        token = store.mark()
+        thunk()
+        jobs, _ = store._read()
+        return [j.get("description") for j in jobs if j["jobId"] > token[0]]
+
+    with job_label(spark, "dag"):
+        ingested = labels_of(lambda: pl.ingest(spark, tables, warehouse))
+        checked = labels_of(lambda: pl.qc(spark, warehouse))
+        assert sc.getLocalProperty("spark.job.description") == "dag"
+    assert set(ingested) == {f"dag/ingest:{t}" for t in STAR_SCHEMA}
+    assert set(checked) == {f"dag/qc:{t}" for t in STAR_SCHEMA}
+
+    with job_label(spark, "dag"):
+        one = labels_of(
+            lambda: pl.ingest(spark, {"historics": tables["historics"]}, warehouse)
+        )
+        assert sc.getLocalProperty("spark.job.description") == "dag"
+    assert set(one) == {"dag/ingest:historics"}
+    assert sc.getLocalProperty("spark.job.description") is None

@@ -65,3 +65,50 @@ def test_events_ts_ns_to_us_truncation_pinned(spark_stock, duck):
         "count(*) AS n FROM events"
     ).fetchone()
     assert (got["mn"], got["mx"], got["us_sum"], got["n"]) == want
+
+
+def test_cpu_count_is_read_when_the_session_is_built(spark, monkeypatch):
+    """``$SPARK_GRAFT_CPUS`` set after the engine was imported still sizes
+    both the local master and the shuffle partitions (the variable used
+    to be read once at import, so a late setting gave local[N] with the
+    import-time partition count)."""
+    from types import SimpleNamespace
+
+    from flu_data_pipeline_spark import session as session_mod
+    from flu_data_pipeline_spark.session import ensure_session_defaults
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+
+    s = stockify(spark.newSession())
+    ensure_session_defaults(s)
+    assert s.conf.get("spark.sql.shuffle.partitions") == "3"
+
+    class Built(Exception):
+        pass
+
+    class Recorder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            self.conf["master"] = master
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            raise Built
+
+    rec = Recorder()
+    monkeypatch.setattr(session_mod, "SparkSession", SimpleNamespace(builder=rec))
+    try:
+        session_mod.get_spark()
+    except Built:
+        pass
+    assert rec.conf["master"] == "local[3]"
+    assert rec.conf["spark.sql.shuffle.partitions"] == "3"

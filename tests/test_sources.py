@@ -7,7 +7,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.catalog import load_table, read_parquet
 from flu_data_pipeline_spark.schemas import CENSUS_RAW, FLUVIEW_RAW
 from flu_data_pipeline_spark.sources.readers import (
     fetch_to_landing,
@@ -768,3 +768,157 @@ def test_cleaned_corpus_pipeline_runtime(spark, tmp_path):
     _, _, rerun3, _ = _cleaned_corpus_paths(spark, SF_SMOKE, base_dir=base)
     assert rerun3 == 0
     assert spark.read.parquet(corpus).count() == docs.count()
+
+
+# ---------------------------------------------------------------------------
+# catalog.read_parquet: one schema inference per file state
+# ---------------------------------------------------------------------------
+
+
+def _read_counting_jobs(spark, path):
+    """``read_parquet(spark, path)`` and the number of Spark jobs it
+    submitted, read from the status store."""
+    from perfbench.spans import StatusStore
+
+    store = StatusStore(spark)
+    token = store.mark()
+    df = read_parquet(spark, path)
+    return df, store.since(token)["jobs"]
+
+
+def test_read_parquet_second_read_of_unchanged_file_runs_no_job(spark, tmp_path):
+
+    path = str(tmp_path / "t")
+    spark.range(20).selectExpr("id", "CAST(id AS STRING) AS s").write.parquet(path)
+    first, inferred = _read_counting_jobs(spark, path)
+    again, memoized = _read_counting_jobs(spark, path)
+    assert inferred >= 1 and memoized == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_read_parquet_overwritten_file_returns_new_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({"a": [1, 2, 3]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    got = read_parquet(spark, path)
+    assert got.columns == ["b", "c"]
+    assert [tuple(r) for r in got.collect()] == [("x", 1.5)]
+
+
+def test_read_parquet_append_to_directory_reinfers(spark, tmp_path):
+
+    path = str(tmp_path / "grow")
+    spark.range(5).write.parquet(path)
+    read_parquet(spark, path)
+    assert _read_counting_jobs(spark, path)[1] == 0
+    spark.range(5, 8).write.mode("append").parquet(path)
+    grown, jobs = _read_counting_jobs(spark, path)
+    assert jobs >= 1
+    assert grown.count() == 8
+
+
+def test_read_parquet_nanos_conf_flip_reinfers(spark, tmp_path):
+    """The memoized schema must not outlive the conf it was inferred
+    under: with ``nanosAsLong`` off a TIMESTAMP(NANOS) column is
+    unreadable, so a read after the flip has to fail in inference rather
+    than serve the long-typed schema inferred with it on."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+
+    path = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1_000, 2_000], pa.timestamp("ns"))}), path)
+    s = spark.newSession()
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    s.conf.set(key, "true")
+    assert dict(read_parquet(s, path).dtypes)["ts"] == "bigint"
+    assert _read_counting_jobs(s, path)[1] == 0
+    s.conf.set(key, "false")
+    with pytest.raises(Exception, match="TIMESTAMP\\(NANOS"):
+        read_parquet(s, path)
+    s.conf.set(key, "true")
+    assert dict(read_parquet(s, path).dtypes)["ts"] == "bigint"
+
+
+def test_read_parquet_partitioned_directory_matches_plain_read(spark, tmp_path):
+    import re
+
+
+    path = str(tmp_path / "lists")
+    (
+        spark.range(40)
+        .selectExpr("id AS vec_id", "CAST(id % 4 AS INT) AS list_id", "id * 0.5 AS x")
+        .write.partitionBy("list_id")
+        .parquet(path)
+    )
+    plain = spark.read.parquet(path)
+    read_parquet(spark, path)
+    memo = read_parquet(spark, path)  # served from the memoized schema
+    assert memo.columns == plain.columns == ["vec_id", "x", "list_id"]
+    assert memo.schema == plain.schema
+    assert sorted(memo.collect()) == sorted(plain.collect())
+    one = memo.filter(F.col("list_id") == 2)
+    assert one.count() == 10
+    plan = one._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*list_id", plan), plan
+
+
+def test_read_parquet_concurrent_readers_get_their_own_schema(spark, tmp_path):
+    """The memo is shared by driver threads (``overlap``): many threads
+    reading two tables of different schemas, with a short switch
+    interval, must each get the schema and rows of the path they read."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    paths = {
+        "ab": (str(tmp_path / "ab"), ["a", "b"]),
+        "xyz": (str(tmp_path / "xyz"), ["x", "y", "z"]),
+    }
+    spark.range(3).selectExpr("id AS a", "id AS b").write.parquet(paths["ab"][0])
+    spark.range(4).selectExpr("id AS x", "id AS y", "id AS z").write.parquet(paths["xyz"][0])
+
+    def read(key):
+        path, cols = paths[key]
+        df = read_parquet(spark, path)
+        return df.columns == cols and df.count() == len(cols) + 1
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(read, k) for k in ("ab", "xyz") * 8]
+            got = [f.result(timeout=120) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert got == [True] * 16
+
+
+def test_no_schema_inferring_parquet_read_outside_catalog():
+    """Every parquet read in the package goes through
+    ``catalog.read_parquet``, so a bare read that infers the schema with a
+    Spark job on every call cannot come back."""
+    import glob
+    import re
+
+    root = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "flu_data_pipeline_spark",
+    )
+    bare = re.compile(r"\.read\s*\.\s*(parquet\s*\(|format\(\s*['\"]parquet)")
+    offenders = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        if os.path.relpath(path, root) == "catalog.py":
+            continue
+        with open(path) as fh:
+            text = fh.read()
+        for m in bare.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            offenders.append(f"{os.path.relpath(path, root)}:{line}")
+    assert not offenders, f"bare parquet reads (use catalog.read_parquet): {offenders}"
