@@ -8,7 +8,7 @@ local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
      "queries": {"q": sec, ...}, "sf": ...,
      "queries_median": {...}, "value_median": ...,
      "work": {"q": {"cpu_s", "jobs", "shuffle_bytes", "spill_bytes",
-                    "peak_exec_mem_mb"}, ...},
+                    "peak_exec_mem_mb", "compiles"}, ...},
      "max_run": {"jobs": ..., "stages": ...},
      "verdict": "flat" | "work-regression" | "no-prior", "vs_prior": {...}}
 
@@ -20,10 +20,11 @@ column is materialized on the executors and discarded, nothing is
 collected to the driver (a bare ``count()`` would let Catalyst prune
 unreferenced computed columns). Each query is warmed immediately before
 its 5 timed runs, not in a separate all-queries pass: a global warmup
-lets later queries evict earlier queries' JIT code from the code cache,
-so the timed runs would re-pay deopt/re-JIT. ``queries`` is the best of
-the first 3 runs (the series of the committed BENCH_r*.json records),
-``queries_median`` the median of all 5.
+lets later queries evict earlier queries' JIT code from the code cache
+and their compiled classes from Spark's codegen class cache, so the
+timed runs would re-pay compilation and deopt/re-JIT. ``queries`` is
+the best of the first 3 runs (the series of the committed
+BENCH_r*.json records), ``queries_median`` the median of all 5.
 
 ``work`` is the median per run of the executor work Spark's status
 store holds for the jobs and stages each run created (perfbench's
@@ -34,6 +35,13 @@ exactly from run to run and executor CPU does not follow ambient host
 load the way wall time does, so the verdict is taken on work against
 one anchor, the previous ``bench_last.json`` at the same sf, over the
 queries both readings ran.
+
+``compiles`` is the median per run of the generated-code compilations
+(Janino) the run caused, the count of Spark's ``CodegenMetrics``
+compilation-time histogram read before and after the run, also outside
+its timing. A warmed query whose classes fit Spark's codegen class cache
+(``session.CODEGEN_CACHE_MAX_ENTRIES``) reads 0; a positive value means
+its runs recompile. It is reported only, not part of the verdict.
 """
 
 from __future__ import annotations
@@ -49,10 +57,11 @@ sys.path.insert(0, ROOT)
 
 from flu_data_pipeline_spark.operators.materialize import job_label  # noqa: E402
 from flu_data_pipeline_spark.plans import REGISTRY  # noqa: E402
-from flu_data_pipeline_spark.session import get_spark  # noqa: E402
+from flu_data_pipeline_spark.session import codegen_compiles, get_spark  # noqa: E402
 from perfbench.spans import StatusStore  # noqa: E402
 
-WORK_KEYS = ("cpu_s", "jobs", "shuffle_bytes", "spill_bytes", "peak_exec_mem_mb")
+WORK_KEYS = ("cpu_s", "jobs", "shuffle_bytes", "spill_bytes", "peak_exec_mem_mb",
+             "compiles")
 
 #: Summed executor CPU of the shared queries may rise this much over the
 #: anchor before the verdict reads ``work-regression``. Set just above
@@ -67,16 +76,19 @@ SIDECAR = "bench_last.json"
 TIMED_RUNS = 5
 
 
-def measure(store: StatusStore, thunk) -> tuple[float, dict]:
-    """Wall seconds of ``thunk()`` and the executor work of the jobs and
-    stages it created. The store is read before and after, outside the
-    timed span."""
+def measure(spark, store: StatusStore, thunk) -> tuple[float, dict]:
+    """Wall seconds of ``thunk()``, the executor work of the jobs and
+    stages it created, and the compilations it caused. The store and the
+    compile counter are read before and after, outside the timed span."""
     token = store.mark()
+    compiled = codegen_compiles(spark)
     t0 = time.perf_counter()
     thunk()
     sec = time.perf_counter() - t0
+    compiled = codegen_compiles(spark) - compiled
     work = store.since(token)
     work["shuffle_bytes"] = work["shuffle_read_bytes"] + work["shuffle_write_bytes"]
+    work["compiles"] = compiled
     return sec, work
 
 
@@ -147,10 +159,10 @@ def sweep(spark, sf_dir: str, queries: list[str], repo: str = ROOT) -> dict:
             qd.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
         with job_label(spark, name):
-            run()  # warmup: JIT/codegen/IO caches for THIS query
+            run()  # warmup: JIT, codegen class and IO caches for THIS query
             secs, runs = [], []
             for _ in range(TIMED_RUNS):
-                sec, w = measure(store, run)
+                sec, w = measure(spark, store, run)
                 secs.append(sec)
                 runs.append(w)
         timings[name] = round(min(secs[:3]), 4)

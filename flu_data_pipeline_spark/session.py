@@ -21,6 +21,24 @@ def default_cpus() -> str:
     return os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+#: Size of Spark's JVM-wide LRU cache of compiled generated classes
+#: (``spark.sql.codegen.cache.maxEntries``, Spark's default 100). A loop
+#: over a working set larger than an LRU cache misses on every lookup,
+#: so each warm query re-runs Janino and then runs the reloaded class
+#: interpreted until the JIT compiles it again. Measured working sets
+#: (Spark's ``CodegenMetrics`` compile counter, 4-CPU VM): the first
+#: pass of perfbench's 7-query ``operator_batch`` compiles ~200 distinct
+#: classes, the first ``etl_load`` iteration ~220. At the default every
+#: later pass recompiled ~223 classes and every later iteration ~310; at
+#: 1000 (4.5x the larger set) both recompile 0. Memory: the small cache
+#: costs more, since every recompile loads a new class (~450 more loaded
+#: classes per batch pass, against ~30 at 1000); after four batch passes
+#: Metaspace read 166.3 MB at the default and 159.3 MB at 1000. A static
+#: conf: it is read once per JVM, so it is set at launch here and cannot
+#: be applied by :func:`ensure_session_defaults`.
+CODEGEN_CACHE_MAX_ENTRIES = 1000
+
+
 #: Correctness- and perf-load-bearing confs that are runtime-settable
 #: (`spark.conf.set` on an already-built session). Every registered query
 #: builder applies these to the session it is handed (see
@@ -76,6 +94,14 @@ def ensure_session_defaults(spark: SparkSession) -> SparkSession:
     semantics. Non-settable confs are skipped rather than failing the
     query (the expression-level guards — try_cast, explicit UTC-safe
     projections — keep core semantics intact either way).
+
+    Static confs cannot be applied here: a runtime ``conf.set`` of one
+    (``spark.sql.codegen.cache.maxEntries``, for instance) raises
+    CANNOT_MODIFY_STATIC_CONFIG, which the loop below would swallow
+    silently. So they never go in :data:`ENGINE_RUNTIME_CONFS`;
+    :func:`get_spark` sets them at launch, and
+    ``_warn_if_code_cache_not_applied`` warns about a live session that
+    runs without them.
 
     A single sentinel conf.get short-circuits the ~12 py4j round-trips
     when the session is already configured (builders are called in tight
@@ -169,16 +195,24 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
-        # Whole-stage codegen emits one compiled class per stage; a session
-        # that executes hundreds of distinct queries (the registry sweep,
-        # the 41-query bench) overflows the JVM's default 240 MB code
-        # cache, after which JIT-compiled query code is evicted and
-        # re-runs pay multi-second deopt/re-JIT penalties (measured 9 s
-        # on a 0.7 s query after a full bench warmup). Launch-time conf;
-        # ignored if the JVM already exists, which is fine — the engine
-        # still runs, just without the headroom. SPARK_GRAFT_CODE_CACHE
-        # overrides the size (used by the bench suite-size-sensitivity
-        # experiment, BASELINE.md "JIT code-cache headroom").
+        # Two separate caches keep a warm query's generated code: Spark's
+        # cache of compiled classes (Janino output, keyed by source; sized
+        # by the static conf below) and the JVM's JIT code cache (machine
+        # code for those classes' hot methods). A miss in either makes a
+        # warm query pay compilation again.
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
+        # The JIT code cache: a session that executes hundreds of
+        # distinct queries (the registry sweep, the 41-query bench)
+        # overflows the JVM's default 240 MB code cache, after which
+        # JIT-compiled query code is evicted and re-runs pay multi-second
+        # deopt/re-JIT penalties (measured 9 s on a 0.7 s query after a
+        # full bench warmup). Launch-time conf; ignored if the JVM already
+        # exists, which is fine — the engine still runs, just without the
+        # headroom. SPARK_GRAFT_CODE_CACHE overrides the size (used by the
+        # bench suite-size-sensitivity experiment, BASELINE.md "JIT
+        # code-cache headroom").
         .config(
             "spark.driver.extraJavaOptions",
             "-XX:ReservedCodeCacheSize="
@@ -194,18 +228,34 @@ def get_spark(
     return spark
 
 
-def _warn_if_code_cache_not_applied(spark: SparkSession) -> None:
-    """Detect the silent launch-mode gap in the JIT headroom conf.
+def codegen_compiles(spark: SparkSession) -> int:
+    """Generated-code compilations (Janino) this JVM has run so far: the
+    count of Spark's ``CodegenMetrics`` compilation-time histogram. A
+    class served from the codegen class cache does not count."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
-    ``spark.driver.extraJavaOptions`` only takes effect when THIS
-    process launches the JVM; under an existing gateway or
-    ``spark-submit`` the 1g ReservedCodeCacheSize the bench methodology
-    relies on silently does not apply, and bench numbers would compare
-    different JIT-eviction regimes. Read the live JVM's input arguments
-    via the RuntimeMXBean and warn loudly when the requested value is
-    absent — detection only, never a failure (the engine is correct
-    either way; only steady-state bench timing is affected).
+
+def _warn_if_code_cache_not_applied(spark: SparkSession) -> None:
+    """Detect the silent launch-mode gaps in the two code-cache confs.
+
+    Both are launch-time settings that silently do not apply to a JVM or
+    session someone else built (an existing gateway, ``spark-submit``, a
+    harness, or an earlier session that ``getOrCreate`` returns):
+
+    - ``spark.driver.extraJavaOptions`` only takes effect when THIS
+      process launches the JVM, so the 1g ReservedCodeCacheSize the bench
+      methodology relies on may be absent. Read the live JVM's input
+      arguments via the RuntimeMXBean.
+    - ``spark.sql.codegen.cache.maxEntries`` is a static conf, fixed when
+      the context was built. Read the live session's value.
+
+    Warn loudly when either is below the engine's value — detection only,
+    never a failure (the engine is correct either way; only steady-state
+    timing is affected).
     """
+    import warnings
+
     try:
         jvm_args = list(
             spark.sparkContext._jvm.java.lang.management.ManagementFactory
@@ -231,8 +281,6 @@ def _warn_if_code_cache_not_applied(spark: SparkSession) -> None:
         # any equivalent-or-larger setting (2g, 1024m, …) satisfies the
         # bench methodology; warn only when absent or below 1 GiB
         if not sizes or max(sizes) < 1024:
-            import warnings
-
             warnings.warn(
                 "JVM is running WITHOUT -XX:ReservedCodeCacheSize=1g "
                 "(pre-existing gateway or spark-submit launch): bench "
@@ -245,3 +293,17 @@ def _warn_if_code_cache_not_applied(spark: SparkSession) -> None:
             )
     except Exception:
         pass  # py4j introspection is best-effort; never block a session
+    try:
+        entries = int(spark.conf.get("spark.sql.codegen.cache.maxEntries", "100"))
+    except Exception:
+        return
+    if entries < CODEGEN_CACHE_MAX_ENTRIES:
+        warnings.warn(
+            f"session runs with spark.sql.codegen.cache.maxEntries={entries} "
+            f"(engine value {CODEGEN_CACHE_MAX_ENTRIES}; a static conf, "
+            "fixed when the context was built): warm queries whose "
+            "generated classes do not fit recompile them on every run; "
+            "pass the conf to your launcher for comparable numbers.",
+            RuntimeWarning,
+            stacklevel=3,
+        )

@@ -1,6 +1,7 @@
 """Unit tests for bench.py: the work verdict against the previous
-reading, the sidecar, the printed record's contract keys, and the job
-labels that attribute every job to its query."""
+reading, the sidecar, the printed record's contract keys, the job
+labels that attribute every job to its query, and the per-run compile
+count."""
 
 from __future__ import annotations
 
@@ -23,7 +24,7 @@ _spec.loader.exec_module(bench)
 
 def _work(cpu_s, jobs=3):
     return {"cpu_s": cpu_s, "jobs": jobs, "shuffle_bytes": 0,
-            "spill_bytes": 0, "peak_exec_mem_mb": 0.0}
+            "spill_bytes": 0, "peak_exec_mem_mb": 0.0, "compiles": 0}
 
 
 def test_verdict_no_prior():
@@ -93,9 +94,10 @@ def test_bench_sidecar_roundtrip(tmp_path):
 def test_median_work_is_per_key():
     runs = [_work(c, jobs=j) for c, j in ((0.3, 4), (0.1, 5), (0.2, 4))]
     runs[1]["peak_exec_mem_mb"] = 64.0
+    runs[2]["compiles"] = 3
     assert bench.median_work(runs) == {
         "cpu_s": 0.2, "jobs": 4, "shuffle_bytes": 0, "spill_bytes": 0,
-        "peak_exec_mem_mb": 0.0,
+        "peak_exec_mem_mb": 0.0, "compiles": 0,
     }
 
 
@@ -121,10 +123,10 @@ def test_jobs_from_overlap_threads_carry_the_label(spark):
     from perfbench.spans import StatusStore
 
     store = StatusStore(spark)
-    _, one = bench.measure(store, lambda: spark.range(100).count())
+    _, one = bench.measure(spark, store, lambda: spark.range(100).count())
     token = store.mark()
     with bench.job_label(spark, "bench-label-test"):
-        _, work = bench.measure(store, lambda: overlap(
+        _, work = bench.measure(spark, store, lambda: overlap(
             lambda: spark.range(100).count(),
             lambda: spark.range(200).count(),
         ))
@@ -135,3 +137,28 @@ def test_jobs_from_overlap_threads_carry_the_label(spark):
     assert {j.get("description") for j in labelled} == {"bench-label-test"}
     # the label is cleared after the block
     assert spark.sparkContext.getLocalProperty("spark.job.description") is None
+
+
+def test_warmed_query_timed_runs_compile_nothing(spark):
+    """``compiles`` counts the generated classes a run compiles: a
+    projection no earlier query used compiles some, and the timed runs
+    of a warmed registry query compile none (its classes stay in the
+    codegen class cache)."""
+    from perfbench.spans import StatusStore
+
+    store = StatusStore(spark)
+    unseen = spark.range(1).selectExpr("id * 48611 + 104729 AS unseen")
+    _, fresh = bench.measure(
+        spark, store, lambda: unseen.write.format("noop").mode("overwrite").save()
+    )
+    assert fresh["compiles"] >= 1
+
+    qd = bench.REGISTRY["pricing_summary"]
+
+    def run():
+        qd.builder(spark, SF_SMOKE).write.format("noop").mode("overwrite").save()
+
+    run()
+    runs = [bench.measure(spark, store, run)[1] for _ in range(3)]
+    assert [r["compiles"] for r in runs] == [0, 0, 0]
+    assert bench.median_work(runs)["compiles"] == 0

@@ -5,17 +5,25 @@ SparkSession. These tests force driver-stock confs and verify that
 (a) ensure_session_defaults flips the load-bearing ones back at runtime,
 (b) the events table is readable on a stock session whichever parquet
 timestamp flavor the generator used (TIMESTAMP(NANOS) → long →
-timestamp_micros, or TIMESTAMP(MICROS) NTZ → cast), and (c) the µs
+timestamp_micros, or TIMESTAMP(MICROS) NTZ → cast), (c) the µs
 semantics of ``events.ts`` are pinned against DuckDB so the two engines
-can never diverge on the epoch-micros value.
+can never diverge on the epoch-micros value, and (d) the launch-time
+codegen class cache is sized by ``get_spark``, holds a working set
+larger than Spark's default, and is warned about when a session runs
+with a smaller one.
 """
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
-from flu_data_pipeline_spark.session import ENGINE_RUNTIME_CONFS
+from flu_data_pipeline_spark.session import (
+    CODEGEN_CACHE_MAX_ENTRIES,
+    ENGINE_RUNTIME_CONFS,
+    codegen_compiles,
+)
 
 from .conftest import SF_ORACLE, stockify
 
@@ -112,3 +120,54 @@ def test_cpu_count_is_read_when_the_session_is_built(spark, monkeypatch):
         pass
     assert rec.conf["master"] == "local[3]"
     assert rec.conf["spark.sql.shuffle.partitions"] == "3"
+    assert rec.conf["spark.sql.codegen.cache.maxEntries"] == str(
+        CODEGEN_CACHE_MAX_ENTRIES
+    )
+
+
+def test_second_pass_over_more_than_100_classes_compiles_nothing(spark):
+    """A warm loop whose generated classes outnumber Spark's default
+    codegen class cache (100 entries, LRU) recompiled every class on
+    every pass. 60 distinct one-row projections compile ~120 classes;
+    with the cache ``get_spark`` sizes, the second pass over the same 60
+    compiles none."""
+    def one_pass():
+        for i in range(60):
+            df = spark.range(1).selectExpr(f"id * 7 + {7_340_033 + i} AS v")
+            df.write.format("noop").mode("overwrite").save()
+
+    before = codegen_compiles(spark)
+    one_pass()
+    first = codegen_compiles(spark) - before
+    one_pass()
+    second = codegen_compiles(spark) - before - first
+    assert first > 100, first
+    assert second == 0, second
+
+
+def test_small_codegen_class_cache_is_warned_about(spark):
+    """A session built elsewhere (a harness, ``spark-submit``, an earlier
+    ``getOrCreate``) keeps its own static ``maxEntries``; the launch-time
+    check reads the live value and warns when it is below the engine's."""
+    import warnings
+    from types import SimpleNamespace
+
+    from flu_data_pipeline_spark.session import _warn_if_code_cache_not_applied
+
+    def session_with(entries):
+        def get(key, default=None):
+            if key == "spark.sql.codegen.cache.maxEntries":
+                return entries
+            return spark.conf.get(key, default)
+
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=get), sparkContext=spark.sparkContext
+        )
+
+    with pytest.warns(RuntimeWarning, match="maxEntries=100"):
+        _warn_if_code_cache_not_applied(session_with("100"))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        _warn_if_code_cache_not_applied(session_with(str(CODEGEN_CACHE_MAX_ENTRIES)))
+        _warn_if_code_cache_not_applied(spark)
+    assert not [w for w in caught if "maxEntries" in str(w.message)]
