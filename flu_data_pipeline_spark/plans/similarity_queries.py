@@ -2522,6 +2522,78 @@ def embedding_top_pc_power_iteration(
     return out.orderBy("dim")
 
 
+def _nested_level_recall(
+    spark: SparkSession,
+    scored: DataFrame,
+    truth: DataFrame,
+    levels: tuple[int, ...],
+    score_order: Column,
+    level: str = "nprobe",
+    rank: str = "prn",
+) -> DataFrame:
+    """Recall@3 and candidate volume of every level of a NESTED sweep,
+    derived from ONE scored frame. ``scored`` holds (query_id,
+    neighbor_id, ``rank``, score columns) at the widest level; level p
+    keeps the candidates with ``rank <= p`` (probe rank for nprobe
+    sweeps, shortlist rank for rerank depths). A candidate's score
+    depends only on (query, vector), so each level's top-3 (by
+    ``score_order``, ties by neighbor_id) and candidate count equal
+    those of scoring the level on its own — the incremental top-k reuse
+    of the EDBT 2020 framework. ``truth`` is the exact top-3 as
+    (query_id, neighbor_id). Returns (``level``, n_truth_slots, n_hit,
+    recall_at_3, n_candidates), one row per level; a level with no
+    candidates still reports its row, with n_candidates 0."""
+    # NOT NULL: the inner level joins then infer no isnotnull filter the
+    # outer ones lack, so all uses of the level table share one
+    # broadcast exchange
+    lv = F.broadcast(
+        spark.createDataFrame([(p,) for p in levels], f"{level} int not null")
+    )
+    cand = lv.join(scored, F.col(rank) <= F.col(level))
+    wtop = Window.partitionBy(level, "query_id").orderBy(
+        score_order, F.asc("neighbor_id")
+    )
+    top3 = (
+        cand.withColumn("rn", F.row_number().over(wtop))
+        .filter(F.col("rn") <= 3)
+        .select(
+            F.col(level).alias("a_lvl"),
+            F.col("query_id").alias("a_qid"),
+            F.col("neighbor_id").alias("a_nid"),
+        )
+    )
+    ncand = cand.groupBy(level).agg(F.count(F.lit(1)).alias("n_cand"))
+    hit = F.col("a_nid").isNotNull()
+    return (
+        lv.crossJoin(truth)
+        .join(
+            top3,
+            (F.col("a_lvl") == F.col(level))
+            & (F.col("a_qid") == F.col("query_id"))
+            & (F.col("a_nid") == F.col("neighbor_id")),
+            "left",
+        )
+        .groupBy(level)
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_truth_slots"),
+            F.sum(hit.cast("int")).cast("long").alias("n_hit"),
+            F.round(
+                F.sum(hit.cast("int")).cast("double") / F.count(F.lit(1)), 6
+            ).alias("recall_at_3"),
+        )
+        .join(ncand, level, "left")
+        .select(
+            level,
+            "n_truth_slots",
+            "n_hit",
+            "recall_at_3",
+            F.coalesce(F.col("n_cand"), F.lit(0))
+            .cast("bigint")
+            .alias("n_candidates"),
+        )
+    )
+
+
 _NPROBES = (1, 2, 4)
 
 
@@ -2601,8 +2673,11 @@ def _nprobe_sweep_oracle() -> str:
     f"nprobe = {_NPROBES} from ONE trained quantizer — the table that "
     "picks the probe count before deployment, the similarity-side "
     "analogue of dedup_threshold_sweep. Assignments are computed once "
-    "and checkpointed; each probe level re-joins the same inverted "
-    "lists (fan-out = nprobe x list size, the quantity being measured). "
+    "and checkpointed; candidates are scored once at the widest level "
+    "and tagged with their list's probe rank, and each level is the "
+    "prn <= nprobe slice of that frame (the levels are nested, so its "
+    "top-3 and fan-out = nprobe x list size, the quantity being "
+    "measured, are those of searching the level alone). "
     "Training, search, and truth all replay exactly in unrolled SQL on "
     "both engines.",
     tags=("similarity", "ivf", "quality", "eval"),
@@ -2655,55 +2730,27 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
         )
         .withColumn("prn", F.row_number().over(wprobe))
+        .filter(F.col("prn") <= max(_NPROBES))
     )
-    out = None
-    for p in _NPROBES:
-        probes = ranked_probes.filter(F.col("prn") <= p).select(
-            "query_id", "q_emb", F.col("cluster").alias("probe_cluster")
-        )
-        cand = F.broadcast(probes).join(
+    # score once at the widest level; each level is the prn <= p slice
+    scored = (
+        F.broadcast(ranked_probes)
+        .join(
             assigned,
-            (F.col("cluster_id") == F.col("probe_cluster"))
+            (F.col("cluster_id") == F.col("cluster"))
             & (F.col("vec_id") != F.col("query_id")),
         )
-        scored = cand.select(
+        .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
+            "prn",
             cosine(F.col("q_emb"), F.col("embedding")).alias("cos_raw"),
-        ).localCheckpoint(eager=True)
-        ncand = scored.agg(F.count(F.lit(1)).alias("n_candidates"))
-        wtop = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_raw"), F.asc("neighbor_id")
         )
-        approx = (
-            scored.withColumn("rn", F.row_number().over(wtop))
-            .filter(F.col("rn") <= 3)
-            .select(
-                F.col("query_id").alias("a_qid"),
-                F.col("neighbor_id").alias("a_nid"),
-            )
-        )
-        hit = F.col("a_nid").isNotNull()
-        row = (
-            brute.join(
-                approx,
-                (F.col("query_id") == F.col("a_qid"))
-                & (F.col("neighbor_id") == F.col("a_nid")),
-                "left",
-            )
-            .agg(
-                F.lit(p).alias("nprobe"),
-                F.count(F.lit(1)).alias("n_truth_slots"),
-                F.sum(hit.cast("int")).cast("long").alias("n_hit"),
-                F.round(
-                    F.sum(hit.cast("int")).cast("double") / F.count(F.lit(1)),
-                    6,
-                ).alias("recall_at_3"),
-            )
-            .crossJoin(F.broadcast(ncand))
-        )
-        out = row if out is None else out.unionAll(row)
-    return out.orderBy("nprobe")
+        .localCheckpoint(eager=True)
+    )
+    return _nested_level_recall(
+        spark, scored, brute, _NPROBES, F.desc("cos_raw")
+    ).orderBy("nprobe")
 
 
 # ---------------------------------------------------------------------------
@@ -4303,7 +4350,7 @@ def _serving_truth(
     as (query_id, neighbor_id) — the drop-in replacement for the four
     serving evals' former in-query brute stages. Checkpointed (150
     rows) so a consumer that joins it into several plan branches (the
-    frontier references it once per code x nprobe cell) reuses one
+    frontier references it once per code type) reuses one
     in-memory frame instead of re-scanning the parquet per branch —
     the exact plan shape the old in-query brute had. ``eager=False``
     keeps that reuse but materializes inside the first consuming job
@@ -4438,11 +4485,15 @@ _SQ8_RECON_EXPR = (
     "for: recall@3 against exact brute-force truth AND candidate "
     f"volume (the cost axis) at nprobe = {_FRONTIER_NPROBES} x code "
     "type (flat float vs SQ8 int8 asymmetric), all served from the "
-    "MATERIALIZED list_id-partitioned IVF layout — each probe level "
-    "collects its list ids at the serving edge (O(queries x nprobe) "
-    "ints) and scans a directory-pruned slice (PartitionFilters "
-    "asserted per level, the self-proving layout discipline), so the "
-    "measured n_candidates is literally the rows each configuration "
+    "MATERIALIZED list_id-partitioned IVF layout — the widest level's "
+    "list ids are collected once at the serving edge (O(queries x "
+    "nprobe) ints) and scanned as a directory-pruned slice "
+    "(PartitionFilters asserted, the self-proving layout discipline); "
+    "candidates are scored once, tagged with their list's probe rank, "
+    "and each level is the prn <= nprobe slice of that one scored "
+    "frame (the levels are nested and a score depends only on (query, "
+    "vector), so each level's top-3 is the one its own search finds), "
+    "and n_candidates is the rows each configuration's pruned scan "
     "reads. nprobe=8 probes every list: the flat row pins recall 1.0 "
     "by construction and the sq8 row isolates pure quantization loss; "
     "lower levels price recall against bytes scanned — the "
@@ -4518,99 +4569,58 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranking are mutually independent blocking jobs — overlap them.
     brute, bounds, ranked = overlap(_brute, _bounds, _ranked)
 
-    def _level(p: int) -> DataFrame:
-        probes = ranked.filter(F.col("prn") <= p).select(
-            "query_id", "q_emb", F.col("cluster").alias("probe_cluster")
-        )
-        # serving edge: this level's probed list ids (tiny int set)
-        ids = sorted(
-            {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
-        )
-        pruned = fact.filter(F.col("list_id").isin(ids))
-        _assert_partition_pruned(pruned)
-        # SQ8 reconstruction is query-INDEPENDENT: hoist it below the
-        # probe join so the 64-element dequantize runs once per scanned
-        # corpus row, not once per (candidate x query) pair — at 50
-        # queries the pair-level form re-evaluated it up to 50x per row
-        # (round-10; values bit-identical, the oracle still scores per
-        # pair because SQL CTEs have no cost model to care about).
-        # ADVICE r10 suggested semi-join-filtering to the probed lists
-        # before dequantizing — already the case: `pruned` is filtered
-        # to EXACTLY this level's probed list ids, and every id is some
-        # query's probe, so each scanned row survives the join (only
-        # the <=|Q| self-pairs are dequantized and dropped). No wasted
-        # work to reclaim.
-        pruned_sq8 = pruned.crossJoin(F.broadcast(bounds)).select(
-            "list_id",
-            "vec_id",
-            "embedding",
-            F.expr(_SQ8_RECON_EXPR).alias("emb_sq8"),
-        )
-        return (
-            pruned_sq8.join(
-                F.broadcast(probes),
-                (F.col("list_id") == F.col("probe_cluster"))
-                & (F.col("vec_id") != F.col("query_id")),
-            )
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                cosine(F.col("q_emb"), F.col("embedding")).alias("cos_flat"),
-                cosine(F.col("q_emb"), F.col("emb_sq8")).alias("cos_sq8"),
-            )
-            .localCheckpoint(eager=True)
-        )
-
-    # r11 wave 2 (guide §2.6): the nprobe levels are independent of
-    # one another — each reads only the upfront checkpoints (ranked,
-    # bounds) and its own directory-pruned scan. Running the four
-    # (collect + scored-checkpoint) pairs concurrently changes no
-    # per-level plan, scan, or assertion — only their wall-clock
-    # overlap (the per-level PartitionFilters assert still runs and
-    # still fails the query loudly).
-    scored_levels = overlap(
-        *[lambda p=p: _level(p) for p in _FRONTIER_NPROBES]
+    # Score once at the widest level, keeping each candidate's probe
+    # rank: the levels are nested (prn <= p), so every level's list-id
+    # set is a subset of this scan's and its candidates are exactly
+    # the prn <= p rows of the scored frame (_nested_level_recall).
+    # The one PartitionFilters assert on the widest scan therefore
+    # covers every level's reads.
+    probes = ranked.filter(F.col("prn") <= max(_FRONTIER_NPROBES)).select(
+        "query_id", "q_emb", F.col("cluster").alias("probe_cluster"), "prn"
     )
-    out = None
-    for p, scored in zip(_FRONTIER_NPROBES, scored_levels):
-        ncand = scored.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates")
+    # serving edge: the probed list ids (tiny int set)
+    ids = sorted(
+        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
+    )
+    pruned = fact.filter(F.col("list_id").isin(ids))
+    _assert_partition_pruned(pruned)
+    # SQ8 reconstruction is query-INDEPENDENT: hoist it below the
+    # probe join so the 64-element dequantize runs once per scanned
+    # corpus row, not once per (candidate x query) pair — at 50
+    # queries the pair-level form re-evaluated it up to 50x per row
+    # (round-10; values bit-identical, the oracle still scores per
+    # pair because SQL CTEs have no cost model to care about). Every
+    # scanned list id is some query's probe, so each scanned row
+    # survives the join (only the <=|Q| self-pairs are dequantized
+    # and dropped).
+    pruned_sq8 = pruned.crossJoin(F.broadcast(bounds)).select(
+        "list_id",
+        "vec_id",
+        "embedding",
+        F.expr(_SQ8_RECON_EXPR).alias("emb_sq8"),
+    )
+    scored = (
+        pruned_sq8.join(
+            F.broadcast(probes),
+            (F.col("list_id") == F.col("probe_cluster"))
+            & (F.col("vec_id") != F.col("query_id")),
         )
-        for code, col in (("flat", "cos_flat"), ("sq8", "cos_sq8")):
-            wtop = Window.partitionBy("query_id").orderBy(
-                F.desc(col), F.asc("neighbor_id")
-            )
-            approx = (
-                scored.withColumn("rn", F.row_number().over(wtop))
-                .filter(F.col("rn") <= 3)
-                .select(
-                    F.col("query_id").alias("a_qid"),
-                    F.col("neighbor_id").alias("a_nid"),
-                )
-            )
-            hit = F.col("a_nid").isNotNull()
-            row = (
-                brute.join(
-                    approx,
-                    (F.col("query_id") == F.col("a_qid"))
-                    & (F.col("neighbor_id") == F.col("a_nid")),
-                    "left",
-                )
-                .agg(
-                    F.lit(code).alias("code"),
-                    F.lit(p).cast("int").alias("nprobe"),
-                    F.count(F.lit(1)).cast("bigint").alias("n_truth_slots"),
-                    F.sum(hit.cast("int")).cast("long").alias("n_hit"),
-                    F.round(
-                        F.sum(hit.cast("int")).cast("double")
-                        / F.count(F.lit(1)),
-                        6,
-                    ).alias("recall_at_3"),
-                )
-                .crossJoin(F.broadcast(ncand))
-            )
-            out = row if out is None else out.unionAll(row)
-    return out.orderBy("code", "nprobe")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            "prn",
+            cosine(F.col("q_emb"), F.col("embedding")).alias("cos_flat"),
+            cosine(F.col("q_emb"), F.col("emb_sq8")).alias("cos_sq8"),
+        )
+        .localCheckpoint(eager=True)
+    )
+    flat, sq8 = (
+        _nested_level_recall(
+            spark, scored, brute, _FRONTIER_NPROBES, F.desc(col)
+        ).select(F.lit(code).alias("code"), "*")
+        for code, col in (("flat", "cos_flat"), ("sq8", "cos_sq8"))
+    )
+    return flat.unionAll(sq8).orderBy("code", "nprobe")
 
 
 @register(
@@ -4729,7 +4739,8 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="The PQ rows of the serving tuning table — completing the "
     "(flat / SQ8 / PQ) code-type triple with ann_serving_frontier: "
     "the same nprobe sweep off the materialized list_id-partitioned "
-    "IVF layout (per-level PartitionFilters asserted), but candidates "
+    "IVF layout (one pruned scan at the widest level, PartitionFilters "
+    "asserted, each level its prn <= nprobe slice), but candidates "
     f"are scored by PQ asymmetric distance ({_PQ_M} int64 table "
     "lookups per neighbor, database vectors never touched after "
     "encoding — ann_pq_adc's fixed-point ADC) and recall@3 is "
@@ -4782,9 +4793,9 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    # codes/adc are read by EVERY level's scoring job — eager (inside
-    # the overlap below) so one materialization serves all four levels
-    # without the lazy form's racy first-use inside concurrent jobs.
+    # codes/adc are eager (inside the overlap below), so they
+    # materialize concurrently with the truth read and probe ranking
+    # instead of serially inside the scoring job.
     def _codes():
         return (
             vecsub.join(F.broadcast(centsub), "j")
@@ -4839,92 +4850,53 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tables, and probe ranking are mutually independent — overlap.
     brute, codes, adc, ranked = overlap(_brute, _codes, _adc, _ranked)
 
-    def _level(p: int) -> DataFrame:
-        probes = ranked.filter(F.col("prn") <= p).select(
-            "query_id", F.col("cluster").alias("probe_cluster")
-        )
-        ids = sorted(
-            {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
-        )
-        pruned = fact.select("vec_id", "list_id").filter(
-            F.col("list_id").isin(ids)
-        )
-        _assert_partition_pruned(pruned)
-        cand = pruned.join(
-            F.broadcast(probes),
-            (F.col("list_id") == F.col("probe_cluster"))
-            & (F.col("vec_id") != F.col("query_id")),
-        ).select("query_id", F.col("vec_id").alias("neighbor_id"))
-        adc_r = (
-            adc.withColumnRenamed("query_id", "a_qid")
-            .withColumnRenamed("j", "a_j")
-        )
-        return (
-            cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
-            .join(
-                F.broadcast(adc_r),
-                (F.col("query_id") == F.col("a_qid"))
-                & (F.col("j") == F.col("a_j"))
-                & (F.col("code") == F.col("cent_id")),
-            )
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.sum("d9").cast("long").alias("dist9"))
-            .localCheckpoint(eager=True)
-        )
-
-    # r11 wave 2 (guide §2.6): the four nprobe levels read only the
-    # upfront checkpoints + their own directory-pruned scans — run the
-    # (collect + scored-checkpoint) pairs concurrently; per-level
-    # plans, scans, and the PartitionFilters assert are unchanged.
-    scored_levels = overlap(
-        *[lambda p=p: _level(p) for p in _FRONTIER_NPROBES]
+    # one pruned scan at the widest level, candidates tagged with their
+    # probe rank; each level is its prn <= p slice (see
+    # ann_serving_frontier)
+    probes = ranked.filter(F.col("prn") <= max(_FRONTIER_NPROBES)).select(
+        "query_id", F.col("cluster").alias("probe_cluster"), "prn"
     )
-    out = None
-    for p, scored in zip(_FRONTIER_NPROBES, scored_levels):
-        # r11 (guide §2.4): count the checkpointed scored frame instead
-        # of re-running the pruned scan + probe join. Exactly one
-        # scored group per candidate pair: (query_id, neighbor_id) is
-        # unique in cand (a vector lives in one list; probes are unique
-        # per level), codes has exactly M rows per vector, and the ADC
-        # table carries every (query, j, code) cell — the joins can
-        # neither drop nor duplicate a candidate.
-        ncand = scored.agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates")
+    ids = sorted(
+        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
+    )
+    pruned = fact.select("vec_id", "list_id").filter(
+        F.col("list_id").isin(ids)
+    )
+    _assert_partition_pruned(pruned)
+    cand = pruned.join(
+        F.broadcast(probes),
+        (F.col("list_id") == F.col("probe_cluster"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "prn")
+    adc_r = (
+        adc.withColumnRenamed("query_id", "a_qid")
+        .withColumnRenamed("j", "a_j")
+    )
+    # Exactly one scored group per candidate pair, so counting scored
+    # rows counts candidates: (query_id, neighbor_id) is unique in cand
+    # (a vector lives in one list, which has one probe rank per query),
+    # codes has exactly M rows per vector, and the ADC table carries
+    # every (query, j, code) cell — the joins can neither drop nor
+    # duplicate a candidate.
+    scored = (
+        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
+        .join(
+            F.broadcast(adc_r),
+            (F.col("query_id") == F.col("a_qid"))
+            & (F.col("j") == F.col("a_j"))
+            & (F.col("code") == F.col("cent_id")),
         )
-        wtop = Window.partitionBy("query_id").orderBy(
-            F.asc("dist9"), F.asc("neighbor_id")
+        .groupBy("query_id", "neighbor_id", "prn")
+        .agg(F.sum("d9").cast("long").alias("dist9"))
+        .localCheckpoint(eager=True)
+    )
+    return (
+        _nested_level_recall(
+            spark, scored, brute, _FRONTIER_NPROBES, F.asc("dist9")
         )
-        approx = (
-            scored.withColumn("rn", F.row_number().over(wtop))
-            .filter(F.col("rn") <= 3)
-            .select(
-                F.col("query_id").alias("p_qid"),
-                F.col("neighbor_id").alias("p_nid"),
-            )
-        )
-        hit = F.col("p_nid").isNotNull()
-        row = (
-            brute.join(
-                approx,
-                (F.col("query_id") == F.col("p_qid"))
-                & (F.col("neighbor_id") == F.col("p_nid")),
-                "left",
-            )
-            .agg(
-                F.lit("pq").alias("code"),
-                F.lit(p).cast("int").alias("nprobe"),
-                F.count(F.lit(1)).cast("bigint").alias("n_truth_slots"),
-                F.sum(hit.cast("int")).cast("long").alias("n_hit"),
-                F.round(
-                    F.sum(hit.cast("int")).cast("double")
-                    / F.count(F.lit(1)),
-                    6,
-                ).alias("recall_at_3"),
-            )
-            .crossJoin(F.broadcast(ncand))
-        )
-        out = row if out is None else out.unionAll(row)
-    return out.orderBy("nprobe")
+        .select(F.lit("pq").alias("code"), "*")
+        .orderBy("nprobe")
+    )
 
 
 @register(
@@ -5154,11 +5126,11 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("query_id", "neighbor_id")
         )
 
-    def _scored_for(idx: DataFrame) -> DataFrame:
+    def _scored_post() -> DataFrame:
         return (
             F.broadcast(probes)
             .join(
-                idx,
+                idx_post,
                 (F.col("cluster") == F.col("probe_cluster"))
                 & (F.col("vec_id") != F.col("query_id")),
             )
@@ -5170,15 +5142,20 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    # r11 wave 2 (guide §2.6): the two phases' candidate-scoring jobs
-    # and the two phases' truth builds are four mutually independent
-    # blocking checkpoints (each reads only its checkpointed index /
-    # corpus + the checkpointed probes) — overlap all four.
-    scored_post, scored_pre, truth_post, truth_pre = overlap(
-        lambda: _scored_for(idx_post),
-        lambda: _scored_for(idx_pre),
+    # r11 wave 2 (guide §2.6): the candidate-scoring job and the two
+    # phases' truth builds are mutually independent blocking
+    # checkpoints (each reads only its checkpointed index / corpus +
+    # the checkpointed probes) — overlap all three.
+    scored_post, truth_post, truth_pre = overlap(
+        _scored_post,
         lambda: truth_over(emb).localCheckpoint(eager=True),
         lambda: truth_over(base).localCheckpoint(eager=True),
+    )
+    # idx_pre is idx_post without the refresh rows, filed by the same
+    # frozen quantizer, so the pre-phase candidates are exactly the
+    # post-phase candidates that are not refresh rows
+    scored_pre = scored_post.filter(
+        (F.col("neighbor_id") % _INGEST_MOD) != _INGEST_REM
     )
     out = None
     for phase, idx, truth, scored in (
@@ -6527,56 +6504,18 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)
     )
-    sizes = spark.createDataFrame(
-        [(s,) for s in _RERANK_SIZES], "shortlist_size int"
-    )
-    wr = Window.partitionBy("shortlist_size", "query_id").orderBy(
-        F.asc("l2"), F.asc("neighbor_id")
-    )
-    top3 = (
-        F.broadcast(sizes)
-        .join(hydr, F.col("srn") <= F.col("shortlist_size"))
-        .withColumn("rrn", F.row_number().over(wr))
-        .filter(F.col("rrn") <= 3)
-        .select(
-            F.col("shortlist_size").alias("p_size"),
-            F.col("query_id").alias("p_qid"),
-            F.col("neighbor_id").alias("p_nid"),
-        )
-    )
-    nrr = (
-        F.broadcast(sizes)
-        .join(hydr, F.col("srn") <= F.col("shortlist_size"))
-        .groupBy("shortlist_size")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_reranked"))
-    )
-    hit = F.col("p_nid").isNotNull()
+    # the shortlist depths are nested (srn <= size): every depth is a
+    # slice of the one hydrated, exactly scored shortlist
     return (
-        F.broadcast(sizes)
-        .crossJoin(brute)
-        .join(
-            top3,
-            (F.col("p_size") == F.col("shortlist_size"))
-            & (F.col("p_qid") == F.col("query_id"))
-            & (F.col("p_nid") == F.col("neighbor_id")),
-            "left",
+        _nested_level_recall(
+            spark, hydr, brute, _RERANK_SIZES, F.asc("l2"),
+            level="shortlist_size", rank="srn",
         )
-        .groupBy("shortlist_size")
-        .agg(
-            F.lit("pq+rerank").alias("code"),
-            F.lit(_RERANK_NPROBE).cast("int").alias("nprobe"),
-            F.count(F.lit(1)).cast("bigint").alias("n_truth_slots"),
-            F.sum(hit.cast("int")).cast("long").alias("n_hit"),
-            F.round(
-                F.sum(hit.cast("int")).cast("double") / F.count(F.lit(1)), 6
-            ).alias("recall_at_3"),
-        )
-        .join(nrr, "shortlist_size")
         .select(
-            "code",
-            F.col("shortlist_size").cast("int").alias("shortlist_size"),
-            "nprobe",
-            "n_reranked",
+            F.lit("pq+rerank").alias("code"),
+            "shortlist_size",
+            F.lit(_RERANK_NPROBE).cast("int").alias("nprobe"),
+            F.col("n_candidates").alias("n_reranked"),
             "n_truth_slots",
             "n_hit",
             "recall_at_3",

@@ -174,7 +174,10 @@ BNLJ_AUDITED: dict[str, str] = {
     # broadcasts:
     "revenue_change_contribution": "a",  # (a) 1-row delta_total
     "text_term_burstiness": "a",  # (a) 1-row corpus doc count
-    "ann_nprobe_sweep": "ab",  # (b) 5 query vectors + (a) 1-row cand counts
+    "ann_nprobe_sweep": "bc",  # (b) 5 query vectors + 3-row nprobe
+                                 #     level enum crossed onto the
+                                 #     truth; (c) prn <= nprobe
+                                 #     threshold joins (deliberate)
     "graph_degree_powerlaw": "a",  # (a) 1-row avg-shared edge cutoff
     "ts_cross_correlation": "b",  # (b) 9-row lag enum broadcast
     # round-4 scale twins (operators/ranking.py global_ntile): (a)
@@ -234,14 +237,19 @@ BNLJ_AUDITED: dict[str, str] = {
     "text_hashed_embedding_projection": "b",  # (b) 2048x64 literal
                                  #     projection grid (range x range)
     # round-7 additions:
-    "ann_serving_frontier": "ab",  # (a) 1-row SQ8 min/max bounds agg;
-                                 #     (b) 50 query vectors + k-row
+    "ann_serving_frontier": "abc",  # (a) 1-row SQ8 min/max bounds
+                                 #     agg; (b) 50 query vectors + k-row
                                  #     centroid/probe broadcasts,
-                                 #     id<>id brute truth
-    "ann_serving_frontier_pq": "ab",  # (a) 1-row candidate-count agg;
-                                 #     (b) 50 query vectors + 16x8
+                                 #     id<>id brute truth, 4-row nprobe
+                                 #     level enum crossed onto the
+                                 #     truth; (c) prn <= nprobe
+                                 #     threshold joins (deliberate)
+    "ann_serving_frontier_pq": "bc",  # (b) 50 query vectors + 16x8
                                  #     codebook/ADC-table broadcasts,
-                                 #     id<>id L2 brute truth
+                                 #     id<>id L2 brute truth, 4-row
+                                 #     nprobe level enum crossed onto
+                                 #     the truth; (c) prn <= nprobe
+                                 #     threshold joins (deliberate)
     "ann_ingest_drift_recall": "ab",  # (a) 1-row rows-indexed /
                                  #     candidate-count aggs crossed;
                                  #     (b) 6 query vectors + k-row

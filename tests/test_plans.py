@@ -381,6 +381,69 @@ def test_ivf_layout_pruning_assertion_has_teeth(spark):
     REGISTRY["ivf_layout_pruning_gain"].builder(spark, SF_ORACLE)
 
 
+def test_nested_level_recall_matches_per_level_search(spark):
+    """_nested_level_recall derives every level of a nested sweep from
+    one scored frame; each level must equal filtering to rank <= level
+    and searching that slice alone. Cases: a tie at the top-3 cut
+    broken by neighbor_id, ascending and descending score order, a
+    query with fewer than 3 candidates at level 1 (query 1), a query
+    with none there (query 2), and a level with no candidates at all
+    (level 0), which must still report its row."""
+    from pyspark.sql import functions as F
+
+    from flu_data_pipeline_spark.plans.similarity_queries import (
+        _nested_level_recall,
+    )
+
+    # (query_id, neighbor_id, prn, score); tied rows arrive in
+    # descending neighbor_id order, so only the tie-break keeps the
+    # lowest ids
+    scored_rows = [
+        (1, 16, 3, 0.7), (1, 15, 3, 0.5),
+        (1, 14, 2, 0.1), (1, 13, 2, 0.9), (1, 12, 2, 0.5),
+        (1, 11, 1, 0.5), (1, 10, 1, 0.5),
+        (2, 25, 3, 0.8), (2, 24, 3, 0.2),
+        (2, 23, 2, 0.3), (2, 22, 2, 0.3), (2, 21, 2, 0.3), (2, 20, 2, 0.3),
+    ]
+    truth_rows = [(1, 13), (1, 10), (1, 16), (2, 20), (2, 21), (2, 99)]
+    levels = (0, 1, 2, 3)
+    scored = spark.createDataFrame(
+        scored_rows, "query_id int, neighbor_id int, prn int, score double"
+    )
+    truth = spark.createDataFrame(truth_rows, "query_id int, neighbor_id int")
+
+    for desc in (True, False):
+        want = {}
+        for p in levels:
+            cand = [r for r in scored_rows if r[2] <= p]
+            top3 = set()
+            for q in {r[0] for r in cand}:
+                ranked = sorted(
+                    (r for r in cand if r[0] == q),
+                    key=lambda r: (-r[3] if desc else r[3], r[1]),
+                )
+                top3 |= {(q, r[1]) for r in ranked[:3]}
+            n_hit = sum(t in top3 for t in truth_rows)
+            want[p] = (
+                len(truth_rows),
+                n_hit,
+                round(n_hit / len(truth_rows), 6),
+                len(cand),
+            )
+        order = F.desc("score") if desc else F.asc("score")
+        got = {
+            r["nprobe"]: (
+                r["n_truth_slots"], r["n_hit"], r["recall_at_3"],
+                r["n_candidates"],
+            )
+            for r in _nested_level_recall(
+                spark, scored, truth, levels, order
+            ).collect()
+        }
+        assert got == want, (desc, got, want)
+    assert want[0] == (6, 0, 0.0, 0)
+
+
 def test_twolevel_assign_plan_shape(spark):
     """The two-level fit is invisible to plan_lint (its registered
     query reads from localCheckpoint scans), so pin the assignment's
@@ -490,8 +553,8 @@ def test_serving_truth_fingerprint_invalidation(spark):
 
 def test_overlap_order_and_error_propagation():
     """overlap (r11 wave 2) must return thunk results in
-    CALL order regardless of completion order (the serving evals zip
-    level results back to their nprobe constants positionally), and a
+    CALL order regardless of completion order (the serving evals
+    unpack their upfront checkpoints positionally), and a
     failing thunk's exception must reach the caller exactly as in the
     sequential form (the PartitionFilters assert relies on this to
     keep failing queries loudly)."""
