@@ -16,6 +16,7 @@ Subpackages
 -----------
 - ``session``    SparkSession factory (AQE on, UTC, tuned shuffle partitions)
 - ``catalog``    parquet table registration / temp views
+- ``oracle``     the "hash-identical" compare against the DuckDB oracles
 - ``schemas``    StructType registry for the reference's star schema + raw feeds
 - ``plans``      query plans: the reference's report queries, the five
                  table-derivation pipelines, and the oracle-checked inventory

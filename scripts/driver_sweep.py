@@ -1,24 +1,28 @@
 #!/usr/bin/env python
-"""Full driver-contract sweep: run EVERY `__spark_entry__.queries()` entry
-on a stock, driver-like SparkSession (default confs — ANSI on, nanos
-parquet unreadable, non-UTC timezone) and hash-compare against
-`oracle_sql()` in DuckDB, mirroring the driver's t2 canonicalization
-(sorted column names, order-insensitive rows, floats rounded to 6dp).
+"""Driver-contract sweep: run `__spark_entry__.queries()` entries and
+hash-compare each against its `oracle_sql()` in DuckDB on the same
+parquet, through `flu_data_pipeline_spark.oracle.compare` (the driver's
+t2 compare: sorted column names, order-insensitive rows, floats rounded
+to 6dp; the rules are in that module).
 
-This is the strongest local predictor of CORRECTNESS_r{N}.json: the
-round-1 postmortem showed engine-session-only testing hid 17/19 driver
-failures. Usage:
+By default every query runs on a STOCK, driver-like SparkSession
+(default confs: ANSI on, nanos parquet unreadable, non-UTC timezone), the
+strongest local predictor of CORRECTNESS_r{N}.json: the round-1
+postmortem showed engine-session-only testing hid 17/19 driver failures.
+``--engine-session`` runs on ``get_spark()``'s session instead, the fast
+loop for checking named queries at a bigger scale factor. Usage:
 
     python scripts/driver_sweep.py [sf_dir]          # default sf0.01
     python scripts/driver_sweep.py --only name1,name2
+    python scripts/driver_sweep.py --engine-session --only name1,name2 <sf0.1 dir>
 
-Prints one line per query and a final summary; exits non-zero on any
-failure.
+Prints one line per query and a final summary; exits 1 on any failure
+and 2, before Spark starts, on a name ``--only`` does not know.
 """
 
 from __future__ import annotations
 
-import math
+import argparse
 import os
 import sys
 import time
@@ -27,45 +31,16 @@ import traceback
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def canonicalize(value):
-    import datetime
-    import decimal
+def build_session(engine: bool):
+    if engine:
+        from flu_data_pipeline_spark.session import get_spark
 
-    if value is None:
-        return None
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        return round(value, 6)
-    if isinstance(value, decimal.Decimal):
-        return round(float(value), 6)
-    if isinstance(value, (datetime.date, datetime.datetime)):
-        return str(value)
-    return value
-
-
-def canon_rows(columns, rows):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    return sorted(tuple(repr(canonicalize(row[i])) for i in order) for row in rows)
-
-
-def main() -> int:
-    import duckdb
+        return get_spark(app_name="driver-sweep")
     from pyspark.sql import SparkSession
-
-    sf_dir = "/root/testdata/sf0.01"
-    only = None
-    args = sys.argv[1:]
-    while args:
-        a = args.pop(0)
-        if a == "--only":
-            only = set(args.pop(0).split(","))
-        else:
-            sf_dir = a
 
     # A deliberately STOCK session: no engine confs. ensure_session_defaults
     # inside the builders must make every query work here.
-    spark = (
+    return (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
         .appName("driver-sweep")
         .config("spark.sql.shuffle.partitions", "200")
@@ -74,49 +49,46 @@ def main() -> int:
         .getOrCreate()
     )
 
-    import __spark_entry__ as entry
-    from flu_data_pipeline_spark.catalog import TESTDATA_TABLES
 
-    con = duckdb.connect()
-    for name in TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01")
+    ap.add_argument("--only", type=lambda s: s.split(","), help="name1,name2,...")
+    ap.add_argument("--engine-session", action="store_true",
+                    help="run on get_spark()'s session, not a stock one")
+    args = ap.parse_args(argv)
+
+    import duckdb
+
+    import __spark_entry__ as entry
+    from flu_data_pipeline_spark.oracle import compare, fetch, register_tables
 
     qs, oracles = entry.queries(), entry.oracle_sql()
-    names = [n for n in qs if only is None or n in only]
+    unknown = [n for n in args.only or () if n not in qs]
+    if unknown:
+        print(f"unknown registry queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    names = [n for n in qs if args.only is None or n in args.only]
+    spark = build_session(args.engine_session)
+    con = duckdb.connect()
+    register_tables(con, args.sf_dir)
+
     failures = []
     t_all = time.time()
     for i, name in enumerate(names):
         t0 = time.time()
         try:
-            sdf = qs[name](spark, sf_dir)
-            s_cols = sdf.columns
+            sdf = qs[name](spark, args.sf_dir)
             s_rows = [tuple(r) for r in sdf.collect()]
             if name not in oracles:
                 print(f"[{i+1}/{len(names)}] {name}: rows-only ({len(s_rows)} rows) "
                       f"{time.time()-t0:.1f}s")
                 continue
-            d_res = con.execute(oracles[name])
-            d_cols = [c[0] for c in d_res.description]
-            d_rows = d_res.fetchall()
-            ok_schema = sorted(s_cols) == sorted(d_cols)
-            ok_count = len(s_rows) == len(d_rows)
-            ok_hash = ok_schema and ok_count and (
-                canon_rows(s_cols, s_rows) == canon_rows(d_cols, d_rows)
-            )
-            status = "OK" if ok_hash else "MISMATCH"
-            if not ok_hash:
+            failure = compare(sdf.columns, s_rows, *fetch(con, oracles[name]))
+            if failure:
                 failures.append(name)
-                detail = (f" spark_cols={sorted(s_cols)} duck_cols={sorted(d_cols)}"
-                          if not ok_schema else
-                          f" spark_rows={len(s_rows)} duck_rows={len(d_rows)}"
-                          if not ok_count else " value-hash diff")
-            else:
-                detail = f" ({len(s_rows)} rows)"
-            print(f"[{i+1}/{len(names)}] {name}: {status}{detail} {time.time()-t0:.1f}s")
+            status = f"MISMATCH {failure}" if failure else f"OK ({len(s_rows)} rows)"
+            print(f"[{i+1}/{len(names)}] {name}: {status} {time.time()-t0:.1f}s")
         except Exception:
             failures.append(name)
             tb = traceback.format_exc().strip().splitlines()

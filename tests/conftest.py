@@ -1,10 +1,11 @@
-"""Shared fixtures: one SparkSession per test session, DuckDB oracle helper
-mirroring the driver's compare (row count + schema + order-insensitive
-value hash, floats rounded to 6dp)."""
+"""Shared fixtures: one SparkSession per test session, a DuckDB connection
+with a view per sf0.01 testdata table, and ``compare_query``, which runs a
+builder and its oracle and asserts they are hash-identical under
+``flu_data_pipeline_spark.oracle.compare`` (the same compare
+``scripts/driver_sweep.py`` uses; its rules are in that module)."""
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -13,7 +14,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from flu_data_pipeline_spark.catalog import TESTDATA_TABLES
+from flu_data_pipeline_spark.oracle import compare, fetch, register_tables
 from flu_data_pipeline_spark.session import get_spark
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
@@ -63,61 +64,14 @@ def spark_stock(spark):
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()
-    for name in TESTDATA_TABLES:
-        path = os.path.join(SF_ORACLE, f"{name}.parquet")
-        if os.path.exists(path):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {name} AS SELECT * FROM read_parquet('{path}')"
-            )
+    register_tables(con, SF_ORACLE)
     yield con
     con.close()
-
-
-def canonicalize(value):
-    """Round floats to 6dp, normalize date/time/Decimal to str, None stays."""
-    import datetime
-    import decimal
-
-    if value is None:
-        return None
-    if isinstance(value, float):
-        if math.isnan(value):
-            return "NaN"
-        return round(value, 6)
-    if isinstance(value, decimal.Decimal):
-        return round(float(value), 6)
-    if isinstance(value, (datetime.date, datetime.datetime)):
-        return str(value)
-    return value
-
-
-def result_key(columns, rows):
-    """Order-insensitive canonical form: sort columns by name, then rows."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    canon_rows = sorted(
-        tuple(repr(canonicalize(row[i])) for i in order) for row in rows
-    )
-    return [columns[i] for i in order], canon_rows
 
 
 def compare_query(spark, duck, name, builder, oracle, sf_dir=SF_ORACLE):
     """Driver-style compare of a Spark builder vs its DuckDB oracle."""
     sdf = builder(spark, sf_dir)
-    s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
-    d_res = duck.execute(oracle)
-    d_cols = [c[0] for c in d_res.description]
-    d_rows = d_res.fetchall()
-
-    assert sorted(s_cols) == sorted(d_cols), (
-        f"{name}: column mismatch spark={sorted(s_cols)} duck={sorted(d_cols)}"
-    )
-    assert len(s_rows) == len(d_rows), (
-        f"{name}: row count spark={len(s_rows)} duck={len(d_rows)}"
-    )
-    _, s_canon = result_key(s_cols, s_rows)
-    _, d_canon = result_key(d_cols, d_rows)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(s_canon, d_canon)) if a != b
-    ]
-    assert not mismatches, f"{name}: {len(mismatches)} row mismatches; first 3: {mismatches[:3]}"
+    failure = compare(sdf.columns, s_rows, *fetch(duck, oracle))
+    assert failure is None, f"{name}: {failure}"
