@@ -18,11 +18,30 @@ the session confs that change what inference returns
 re-infers. Its blind spot: a file rewritten in place keeping the same
 inode, size and ``mtime_ns`` keeps its old schema. The memo is in-process
 metadata only; nothing is persisted.
+
+The choke point also owns every table a query persists from the test
+tables (an index layout, a ground truth, a cleaned corpus), through
+:func:`derived_table`, the job a catalog's DDL does for a warehouse:
+
+- **path**: ``<repo>/.testdata/<kind>/<sf tag>/<name>``, the sf tag being
+  the basename of ``sf_dir``. ``rm -rf .testdata/<kind>`` resets a kind.
+- **identity**: the file state (as above) of each named source table
+  under ``sf_dir``, plus a params string naming the constants the build
+  reads, so editing one of them rebuilds too.
+- **freshness**: ``_SUCCESS`` is present in the path and its
+  ``_SRC_FINGERPRINT`` file holds the current identity. A source whose
+  file state cannot be read is never fresh.
+- **build**: a stale artifact is rebuilt by the caller's ``build(path)``,
+  which must leave a complete Spark write at ``path`` (its ``_SUCCESS``)
+  plus any siblings it owns; the identity is written to
+  ``_SRC_FINGERPRINT`` after it returns, so a build that fails midway is
+  never marked.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -61,12 +80,14 @@ INFERENCE_CONFS = (
 #: inference, never a schema served for a file state it does not match.
 _SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _raise(err: OSError) -> None:
     raise err
 
 
-def _file_state(path: str) -> tuple | None:
+def file_state(path: str) -> tuple | None:
     """Sorted ``(relpath, st_ino, st_mtime_ns, st_size)`` of every file
     under ``path`` (a single file is its own state), or None when the
     path cannot be listed on the local file system."""
@@ -91,7 +112,7 @@ def _file_state(path: str) -> tuple | None:
 
 def _read(spark: SparkSession, path: str) -> tuple[DataFrame, StructType]:
     """:func:`read_parquet` plus the schema it resolved."""
-    state = _file_state(path)
+    state = file_state(path)
     if state is None:
         df = spark.read.parquet(path)
         return df, df.schema
@@ -141,6 +162,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif f.name == "ts" and f.dataType.typeName() == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def derived_table(
+    kind: str,
+    sf_dir: str,
+    name: str,
+    sources: tuple[str, ...],
+    build: Callable[[str], object],
+    *,
+    params: str = "",
+    tag: str | None = None,
+    base_dir: str | None = None,
+    rebuild: bool = False,
+) -> str:
+    """Path of the persisted table ``name`` derived from the ``sources``
+    tables of ``sf_dir``, calling ``build(path)`` first only when it is
+    stale (the protocol is in the module docstring). ``tag`` replaces the
+    sf tag and ``base_dir`` the whole ``<repo>/.testdata/<kind>/<tag>``
+    directory; ``rebuild`` builds even a fresh artifact, for one that also
+    has state off disk."""
+    base = base_dir or os.path.join(
+        _REPO, ".testdata", kind, tag or os.path.basename(sf_dir.rstrip("/"))
+    )
+    path = os.path.join(base, name)
+    marker = os.path.join(path, "_SRC_FINGERPRINT")
+    states = tuple(
+        file_state(os.path.join(sf_dir, f"{src}.parquet")) for src in sources
+    )
+    identity = None if None in states else repr((states, params))
+    fresh = False
+    if identity is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
+        try:
+            with open(marker) as fh:
+                fresh = fh.read() == identity
+        except OSError:
+            pass
+    if rebuild or not fresh:
+        build(path)
+        if identity is not None:
+            with open(marker, "w") as fh:
+                fh.write(identity)
+    return path
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

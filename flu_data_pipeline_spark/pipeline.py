@@ -56,14 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from flu_data_pipeline_spark.catalog import read_parquet
 from flu_data_pipeline_spark.operators.materialize import job_label, overlap
 from flu_data_pipeline_spark.plans import flu_fixtures as fx
-from flu_data_pipeline_spark.plans.flu_tables import (
-    build_county_region,
-    build_healthcare,
-    build_historics,
-    build_illness,
-    build_temporal,
-    preprocess_rhino,
-)
+from flu_data_pipeline_spark.plans.flu_tables import derive_tables, preprocess_rhino
 from flu_data_pipeline_spark.schemas import PRIMARY_KEYS, STAR_SCHEMA
 from flu_data_pipeline_spark.session import ensure_session_defaults
 from flu_data_pipeline_spark.sources.readers import fetch_to_landing, read_csv
@@ -118,14 +111,7 @@ def build_tables(
     )
     census = read_csv(spark, landing["census"], _RAW_SCHEMAS["census"])
     fluview = read_csv(spark, landing["fluview"], _RAW_SCHEMAS["fluview"])
-    cr = build_county_region(census, rhino_pre)
-    return {
-        "county_region": cr,
-        "temporal": build_temporal(rhino_pre),
-        "illness": build_illness(rhino_pre, cr, fluview),
-        "healthcare": build_healthcare(rhino_pre, cr),
-        "historics": build_historics(fluview),
-    }
+    return derive_tables(rhino_pre, census, fluview)
 
 
 def assert_schemas(tables: dict[str, DataFrame]) -> None:

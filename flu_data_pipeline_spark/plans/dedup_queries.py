@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.catalog import file_state, load_table
 from flu_data_pipeline_spark.functions.hashing import (
     HASH64_MOD,
     MINHASH_COEFFS,
@@ -173,25 +173,22 @@ def _ngram_jaccard_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: shingles ("of the X") gain df proportionally to the corpus.
 _NGRAM_DF_CAP = 64
 
-#: Cached adaptive-gate statistic: (realpath(sf_dir), source
-#: fingerprint) -> max shingle document frequency. The gate depends
-#: only on the corpus bytes, so it is cached exactly like a catalog
-#: table statistic (ANALYZE): computed once per corpus, invalidated
-#: when the source parquet's size/mtime changes. First query on a new
+#: Cached adaptive-gate statistic: (realpath(sf_dir), documents file
+#: state) -> max shingle document frequency. The gate depends only on
+#: the corpus bytes, so it is cached exactly like a catalog table
+#: statistic (ANALYZE): computed once per corpus, invalidated when the
+#: source parquet's ``catalog.file_state`` changes. First query on a new
 #: corpus pays one postings count-aggregate; every later run branches
-#: for free.
-_NGRAM_MAX_DF_CACHE: dict[tuple[str, str], int] = {}
+#: for free. A corpus whose file state cannot be read recomputes.
+_NGRAM_MAX_DF_CACHE: dict[tuple[str, tuple | None], int] = {}
 
 
 def _max_shingle_df(spark: SparkSession, sf_dir: str) -> int:
     import os
 
-    from flu_data_pipeline_spark.plans.layout_queries import (
-        _src_fingerprint,
-    )
-
-    key = (os.path.realpath(sf_dir), _src_fingerprint(sf_dir, "documents"))
-    if key not in _NGRAM_MAX_DF_CACHE:
+    state = file_state(os.path.join(sf_dir, "documents.parquet"))
+    key = (os.path.realpath(sf_dir), state)
+    if state is None or key not in _NGRAM_MAX_DF_CACHE:
         docs = load_table(spark, sf_dir, "documents")
         posts = (
             docs.repartition(

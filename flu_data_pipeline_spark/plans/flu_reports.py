@@ -14,11 +14,7 @@ from pyspark.sql import functions as F
 from flu_data_pipeline_spark.plans.flu_tables import (
     FLU_CTES,
     _fixture_tables,
-    build_county_region,
-    build_healthcare,
-    build_historics,
-    build_illness,
-    build_temporal,
+    derive_tables,
 )
 from flu_data_pipeline_spark.plans.registry import register
 
@@ -140,15 +136,7 @@ def format_report(rows: list[dict], percent_cols: tuple[str, ...] = (),
 
 
 def _all_tables(spark: SparkSession):
-    rhino_pre, census, fluview = _fixture_tables(spark)
-    cr = build_county_region(census, rhino_pre)
-    return {
-        "county_region": cr,
-        "temporal": build_temporal(rhino_pre),
-        "illness": build_illness(rhino_pre, cr, fluview),
-        "healthcare": build_healthcare(rhino_pre, cr),
-        "historics": build_historics(fluview),
-    }
+    return derive_tables(*_fixture_tables(spark))
 
 
 @register(

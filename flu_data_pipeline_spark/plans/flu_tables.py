@@ -257,6 +257,22 @@ def build_historics(fluview: DataFrame) -> DataFrame:
     )
 
 
+def derive_tables(
+    rhino_pre: DataFrame, census: DataFrame, fluview: DataFrame
+) -> dict[str, DataFrame]:
+    """The five derived tables as lazy plans, in one fixed key order:
+    which builder takes which input, shared by the pipeline and the
+    reports."""
+    cr = build_county_region(census, rhino_pre)
+    return {
+        "county_region": cr,
+        "temporal": build_temporal(rhino_pre),
+        "illness": build_illness(rhino_pre, cr, fluview),
+        "healthcare": build_healthcare(rhino_pre, cr),
+        "historics": build_historics(fluview),
+    }
+
+
 # ---------------------------------------------------------------------------
 # DuckDB oracle: same derivations, declarative SQL over the same fixtures
 # ---------------------------------------------------------------------------

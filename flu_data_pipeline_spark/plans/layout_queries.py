@@ -20,11 +20,14 @@ oracle-checked (pure integer arithmetic — exact on both engines).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table, read_parquet
+from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
 from flu_data_pipeline_spark.plans.registry import register
+from flu_data_pipeline_spark.sources.writers import write_bucketed
 
 _BITS = 8  # 8 bits/dim → 16-bit Morton code, 256 z-buckets of 256 cells
 
@@ -616,65 +619,15 @@ def shard_rebalance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return modcmp.union(ringcmp).orderBy("scheme")
 
 
-def _src_fingerprint(sf_dir: str, table: str) -> str:
-    """Cheap identity of a source parquet table: name/size/mtime of its
-    file (or of every part file if it is a directory). Stored in a
-    sidecar next to materialized layout copies so a REGENERATED source
-    (new testdata drop, different machine) invalidates the cached
-    bucketed/partitioned copy instead of silently serving stale data."""
-    import os
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(path):
-        parts = sorted(
-            (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-            for e in os.scandir(path)
-            if e.is_file()
-        )
-        return repr(parts)
-    st = os.stat(path)
-    return f"{st.st_size}:{st.st_mtime_ns}"
-
-
-def _materialized_fresh(target: str, fingerprint: str) -> bool:
-    """True iff ``target`` holds a complete (_SUCCESS) materialization
-    built from exactly this source fingerprint."""
-    import os
-
-    marker = os.path.join(target, "_SRC_FINGERPRINT")
-    if not os.path.exists(os.path.join(target, "_SUCCESS")):
-        return False
-    try:
-        with open(marker) as fh:
-            return fh.read() == fingerprint
-    except OSError:
-        return False
-
-
-def _mark_materialized(target: str, fingerprint: str) -> None:
-    import os
-
-    with open(os.path.join(target, "_SRC_FINGERPRINT"), "w") as fh:
-        fh.write(fingerprint)
-
-
 def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per sf) a ship-month-partitioned copy of
-    lineitem under the repo's gitignored scratch dir — the physical
-    layout SURVEY §7's design rule prescribes for the fact table
-    (partition by coarse time prefix so dimension-derived filters prune
-    at the directory level). One file per month partition
-    (repartition on the partition column before the write), so file
-    counts are deterministic."""
-    import os
+    lineitem — the physical layout SURVEY §7's design rule prescribes
+    for the fact table (partition by coarse time prefix so
+    dimension-derived filters prune at the directory level). One file
+    per month partition (repartition on the partition column before the
+    write), so file counts are deterministic."""
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(repo, ".testdata", "dpp", tag, "lineitem_by_month")
-    fp = _src_fingerprint(sf_dir, "lineitem")
-    if not _materialized_fresh(target, fp):
+    def build(target: str) -> None:
         (
             load_table(spark, sf_dir, "lineitem")
             .withColumn(
@@ -685,8 +638,10 @@ def _dpp_fact_path(spark: SparkSession, sf_dir: str) -> str:
             .partitionBy("ship_month")
             .parquet(target)
         )
-        _mark_materialized(target, fp)
-    return target
+
+    return derived_table(
+        "dpp", sf_dir, "lineitem_by_month", ("lineitem",), build
+    )
 
 
 @register(
@@ -1129,36 +1084,28 @@ def _bucketed_table(
     """Materialize (once per session+sf) a bucketed, bucket-sorted copy
     of ``src`` keyed on ``key`` — the at-rest co-location layout that
     lets every subsequent join/aggregate on the key run WITHOUT a
-    shuffle. External table (explicit path under the repo's gitignored
-    scratch dir) so the data survives across sessions; the catalog
-    entry (which carries the bucket spec Spark's planner reads) is
-    re-created per session."""
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+    shuffle. External table (explicit path) so the data survives across
+    sessions; the catalog entry (which carries the bucket spec Spark's
+    planner reads) is re-created per session, so a session without it
+    rebuilds, and a stale copy is dropped before its rebuild."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"bkt_{src}_{tag}"
-    path = os.path.join(repo, ".testdata", "bucketed", tag, src)
-    fp = _src_fingerprint(sf_dir, src)
-    # Trust the catalog entry only while its external path is intact AND
-    # was built from the current source bytes: a persisted metastore row
-    # whose directory was cleaned would otherwise fail every query until
-    # manually dropped, and a regenerated source would silently serve a
-    # stale bucketed copy. On any mismatch, drop and rebuild.
-    if spark.catalog.tableExists(name) and not _materialized_fresh(path, fp):
+
+    def build(path: str) -> None:
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-    if not spark.catalog.tableExists(name):
-        (
-            load_table(spark, sf_dir, src)
-            .write.mode("overwrite")
-            .option("path", path)
-            .bucketBy(buckets, key)
-            .sortBy(key)
-            .saveAsTable(name)
+        write_bucketed(
+            load_table(spark, sf_dir, src), name, path, buckets, (key,)
         )
-        _mark_materialized(path, fp)
+
+    derived_table(
+        "bucketed",
+        sf_dir,
+        src,
+        (src,),
+        build,
+        tag=tag,
+        rebuild=not spark.catalog.tableExists(name),
+    )
     return name
 
 

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table, read_parquet
+from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.materialize import overlap
 from flu_data_pipeline_spark.plans.registry import register
@@ -3014,28 +3014,13 @@ def _ivf_layout_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     directory, so an nprobe-bounded search prunes at the DIRECTORY
     level and never opens the other lists' files. One file per list
     (repartition on the partition column before the write), so file
-    counts are deterministic. Reuses the layout-cache fingerprint
-    invalidation from layout_queries (regenerated source testdata
-    invalidates the cached index)."""
+    counts are deterministic. The identity pins the quantizer's
+    constants (k, iters), so editing one never serves the old lists."""
     import os
-
-    from flu_data_pipeline_spark.plans.layout_queries import (
-        _mark_materialized,
-        _materialized_fresh,
-        _src_fingerprint,
-    )
 
     from flu_data_pipeline_spark.operators.clustering import centroid_df
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = os.path.join(repo, ".testdata", "ivf", tag)
-    target = os.path.join(base, "embeddings_by_list")
-    cpath = os.path.join(base, "centroids")
-    fp = _src_fingerprint(sf_dir, "embeddings")
-    if not _materialized_fresh(target, fp):
+    def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         cents = kmeans_fit(
             emb, "embedding", "vec_id", k=_KMEANS_K, iters=_KMEANS_ITERS
@@ -3045,7 +3030,7 @@ def _ivf_layout_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         # re-run the whole Lloyd fit on every search
         centroid_df(spark, cents).coalesce(1).write.mode(
             "overwrite"
-        ).parquet(cpath)
+        ).parquet(os.path.join(os.path.dirname(target), "centroids"))
         (
             assign_best(emb, "embedding", "vec_id", cents, keep_vec=True)
             .select("vec_id", "embedding", F.col("cluster").alias("list_id"))
@@ -3054,8 +3039,16 @@ def _ivf_layout_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
             .partitionBy("list_id")
             .parquet(target)
         )
-        _mark_materialized(target, fp)
-    return target, cpath
+
+    target = derived_table(
+        "ivf",
+        sf_dir,
+        "embeddings_by_list",
+        ("embeddings",),
+        build,
+        params=f"k{_KMEANS_K}:t{_KMEANS_ITERS}",
+    )
+    return target, os.path.join(os.path.dirname(target), "centroids")
 
 
 def _assert_partition_pruned(df: DataFrame) -> None:
@@ -4258,12 +4251,10 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
     heaviest sf10 cells (frontier 108.2 s, r=6.20) bought FOUR times
     per suite run. The truth is a pure function of the embeddings
     table and the frozen (query window, k) constants, so it persists
-    next to the IVF layout under the same source-fingerprint
-    invalidation discipline (regenerated testdata -> rebuild;
-    negative-tested in tests/test_plans.py); the fingerprint
-    additionally pins the query window and k so a constant change can
-    never serve a stale truth. Build is ONE |Q|xN pass: both metrics
-    ride the same broadcast-join pair stream and the same
+    next to the IVF layout, its identity pinning the query window and
+    k so a constant change can never serve a stale truth. Build is ONE
+    |Q|xN pass: both metrics ride the same broadcast-join pair stream
+    and the same
     partitionBy(query_id) shuffle (two sort orders, one exchange);
     output is <= |Q| x 3 x 2 rows in one parquet file. Scale shape:
     identical to the per-query brute stages it replaces — queries
@@ -4271,25 +4262,9 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
     input — so the cached build costs what ONE serving eval's truth
     stage used to, and the other three (plus every rerun at an
     unchanged fingerprint) read ~300 rows."""
-    import os
-
     from flu_data_pipeline_spark.operators.clustering import sqdist
-    from flu_data_pipeline_spark.plans.layout_queries import (
-        _mark_materialized,
-        _materialized_fresh,
-        _src_fingerprint,
-    )
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(repo, ".testdata", "ivf", tag, "serving_truth")
-    fp = (
-        f"{_src_fingerprint(sf_dir, 'embeddings')}"
-        f":q[{_SRV_QLO},{_SRV_QHI}):top3"
-    )
-    if not _materialized_fresh(target, fp):
+    def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         queries = emb.filter(
             (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
@@ -4339,8 +4314,15 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         truth.coalesce(1).write.mode("overwrite").parquet(target)
-        _mark_materialized(target, fp)
-    return target
+
+    return derived_table(
+        "ivf",
+        sf_dir,
+        "serving_truth",
+        ("embeddings",),
+        build,
+        params=f"q[{_SRV_QLO},{_SRV_QHI}):top3",
+    )
 
 
 def _serving_truth(
@@ -7424,32 +7406,22 @@ def _nnd_graph_path(spark: SparkSession, sf_dir: str) -> str:
     NN-descent kNN graph as a (u, v, d9) parquet — the graph is an
     index artifact like the IVF layout and the serving truth: built
     once per corpus, consumed by downstream mining/serving queries at
-    read cost. Fingerprint pins the corpus AND the construction
-    constants (K, INIT, R, iters) so a parameter change can never
-    serve a stale graph."""
-    import os
+    read cost. Its identity pins the construction constants (K, INIT,
+    R, iters) so a parameter change can never serve a stale graph."""
 
-    from flu_data_pipeline_spark.plans.layout_queries import (
-        _mark_materialized,
-        _materialized_fresh,
-        _src_fingerprint,
-    )
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    target = os.path.join(repo, ".testdata", "ivf", tag, "nnd_graph")
-    fp = (
-        f"{_src_fingerprint(sf_dir, 'embeddings')}"
-        f":k{_NND_K}:i{_NND_INIT}:r{_NND_RREV}:t{_NND_ITERS}"
-    )
-    if not _materialized_fresh(target, fp):
+    def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         graphs, _, _ = _nnd_graphs(emb)
         graphs[-1].coalesce(1).write.mode("overwrite").parquet(target)
-        _mark_materialized(target, fp)
-    return target
+
+    return derived_table(
+        "ivf",
+        sf_dir,
+        "nnd_graph",
+        ("embeddings",),
+        build,
+        params=f"k{_NND_K}:i{_NND_INIT}:r{_NND_RREV}:t{_NND_ITERS}",
+    )
 
 
 @register(

@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from flu_data_pipeline_spark.catalog import load_table, read_parquet
+from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.dedup import tokenize
 from flu_data_pipeline_spark.plans.registry import register
@@ -4919,20 +4919,7 @@ def _cleaned_corpus_paths(
     import shutil
 
     from flu_data_pipeline_spark.operators.ranking import global_cumsum
-    from flu_data_pipeline_spark.plans.layout_queries import (
-        _mark_materialized,
-        _materialized_fresh,
-        _src_fingerprint,
-    )
     from flu_data_pipeline_spark.sources.writers import idempotent_append
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    base = base_dir or os.path.join(repo, ".testdata", "cleaned", tag)
-    corpus = os.path.join(base, "corpus")
-    manifest = os.path.join(base, "manifest")
 
     docs = load_table(spark, sf_dir, "documents")
     # lazy checkpoint (r11, guide §2.4): the span-mining plan feeds the
@@ -4959,8 +4946,8 @@ def _cleaned_corpus_paths(
         )
     )
 
-    fp = _src_fingerprint(sf_dir, "documents")
-    if not _materialized_fresh(corpus, fp):
+    def build(corpus: str) -> None:
+        base = os.path.dirname(corpus)
         shutil.rmtree(base, ignore_errors=True)
         idempotent_append(
             spark, cleaned, corpus, ("doc_id",), partition_cols=("source",)
@@ -5005,15 +4992,19 @@ def _cleaned_corpus_paths(
                 .alias("shard_id"),
             )
             .write.mode("overwrite")
-            .parquet(manifest)
+            .parquet(os.path.join(base, "manifest"))
         )
-        _mark_materialized(corpus, fp)
+
+    corpus = derived_table(
+        "cleaned", sf_dir, "corpus", ("documents",), build, base_dir=base_dir
+    )
     # The standing idempotence proof: replaying the full batch against
     # the existing table must append NOTHING (null-safe PK anti-join,
     # the reference's ON CONFLICT DO NOTHING at corpus scale).
     rerun_appended = idempotent_append(
         spark, cleaned, corpus, ("doc_id",), partition_cols=("source",)
     )
+    manifest = os.path.join(os.path.dirname(corpus), "manifest")
     return corpus, manifest, rerun_appended, spans
 
 

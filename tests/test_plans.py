@@ -13,6 +13,8 @@ properties live.
 
 from __future__ import annotations
 
+import pytest
+
 from flu_data_pipeline_spark.plans import REGISTRY
 
 from .conftest import SF_ORACLE
@@ -485,63 +487,45 @@ def test_twolevel_assign_plan_shape(spark):
     assert asg.count() == 200
 
 
-def test_ivf_layout_fingerprint_invalidation(spark):
-    """The materialized IVF index must rebuild when its source
-    fingerprint no longer matches (regenerated testdata must never be
-    served a stale index), and must NOT rebuild when it matches."""
+@pytest.mark.parametrize(
+    "artifact", ["dpp_fact", "ivf_layout", "nnd_graph", "serving_truth"]
+)
+def test_artifact_fingerprint_invalidation(spark, artifact):
+    """Each persisted artifact must rebuild when its source fingerprint
+    no longer matches (regenerated testdata must never be served a
+    stale index or truth), and must NOT rebuild when it matches. The
+    serving truth also pins its content: both metrics present, exactly
+    3 slots per (metric, query)."""
     import os
 
-    from flu_data_pipeline_spark.plans.similarity_queries import (
-        _ivf_layout_path,
-    )
+    from flu_data_pipeline_spark.plans import layout_queries as lq
+    from flu_data_pipeline_spark.plans import similarity_queries as sq
     from .conftest import SF_SMOKE
 
-    fact_path, _ = _ivf_layout_path(spark, SF_SMOKE)
-    success = os.path.join(fact_path, "_SUCCESS")
-    marker = os.path.join(fact_path, "_SRC_FINGERPRINT")
-    mtime1 = os.stat(success).st_mtime_ns
-    # fresh fingerprint → no rebuild
-    _ivf_layout_path(spark, SF_SMOKE)
-    assert os.stat(success).st_mtime_ns == mtime1
-    # corrupt the fingerprint → rebuild
-    with open(marker, "w") as fh:
-        fh.write("stale")
-    _ivf_layout_path(spark, SF_SMOKE)
-    assert os.stat(success).st_mtime_ns > mtime1
-    with open(marker) as fh:
-        assert fh.read() != "stale"
-
-
-def test_serving_truth_fingerprint_invalidation(spark):
-    """The persisted shared serving truth (VERDICT r10 #2) must rebuild
-    when its source fingerprint no longer matches (stale corpus ->
-    rebuild) and must NOT rebuild when it matches — same discipline as
-    the IVF layout. Also pins content: both metrics present, exactly 3
-    slots per (metric, query)."""
-    import os
-
-    from flu_data_pipeline_spark.plans.similarity_queries import (
-        _SRV_NQ,
-        _serving_truth_path,
-    )
-    from .conftest import SF_SMOKE
-
-    path = _serving_truth_path(spark, SF_SMOKE)
+    build = {
+        "dpp_fact": lambda: lq._dpp_fact_path(spark, SF_SMOKE),
+        "ivf_layout": lambda: sq._ivf_layout_path(spark, SF_SMOKE)[0],
+        "nnd_graph": lambda: sq._nnd_graph_path(spark, SF_SMOKE),
+        "serving_truth": lambda: sq._serving_truth_path(spark, SF_SMOKE),
+    }[artifact]
+    path = build()
     success = os.path.join(path, "_SUCCESS")
     marker = os.path.join(path, "_SRC_FINGERPRINT")
     mtime1 = os.stat(success).st_mtime_ns
     # fresh fingerprint → no rebuild
-    _serving_truth_path(spark, SF_SMOKE)
+    build()
     assert os.stat(success).st_mtime_ns == mtime1
     # corrupt the fingerprint → rebuild
     with open(marker, "w") as fh:
         fh.write("stale")
-    _serving_truth_path(spark, SF_SMOKE)
+    build()
     assert os.stat(success).st_mtime_ns > mtime1
     with open(marker) as fh:
         assert fh.read() != "stale"
+    if artifact != "serving_truth":
+        return
     rows = spark.read.parquet(path).collect()
-    assert len(rows) == _SRV_NQ * 3 * 2  # 2 metrics x |Q| x top-3
+    assert len(rows) == sq._SRV_NQ * 3 * 2  # 2 metrics x |Q| x top-3
     per = {}
     for r in rows:
         per.setdefault((r["metric"], r["query_id"]), set()).add(r["rn"])

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table, read_parquet
@@ -900,10 +901,72 @@ def test_read_parquet_concurrent_readers_get_their_own_schema(spark, tmp_path):
     assert got == [True] * 16
 
 
-def test_no_schema_inferring_parquet_read_outside_catalog():
-    """Every parquet read in the package goes through
-    ``catalog.read_parquet``, so a bare read that infers the schema with a
-    Spark job on every call cannot come back."""
+def test_derived_table_builds_only_when_stale(tmp_path):
+    """``catalog.derived_table`` calls the build only when the artifact
+    is missing, a source table was rewritten, the params changed, or a
+    source's file state cannot be read; otherwise it serves the path
+    it built, ``<repo>/.testdata/<kind>/<sf tag>/<name>``."""
+    import shutil
+
+    from flu_data_pipeline_spark.catalog import derived_table
+
+    sf_dir = tmp_path / f"sf_derived_{os.getpid()}"
+    sf_dir.mkdir()
+    (sf_dir / "src.parquet").write_bytes(b"v1")
+    kind_dir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        ".testdata",
+        "derived_table_test",
+    )
+    built = []
+
+    def build(path):
+        built.append(path)
+        os.makedirs(path, exist_ok=True)
+        open(os.path.join(path, "_SUCCESS"), "w").close()
+
+    def get(params="", sources=("src",)):
+        derived_table(
+            "derived_table_test", str(sf_dir), "t", sources, build, params=params
+        )
+        return len(built)
+
+    try:
+        assert get() == 1
+        assert built == [os.path.join(kind_dir, sf_dir.name, "t")]
+        # an unchanged source does not call the build
+        assert get() == 1
+        # a rewritten source rebuilds, once
+        (sf_dir / "src.parquet").write_bytes(b"v2, rewritten")
+        assert get() == 2
+        assert get() == 2
+        # changed params rebuild, once
+        assert get(params="k2") == 3
+        assert get(params="k2") == 3
+        # a source whose file state cannot be read is never fresh
+        assert get(sources=("src", "missing")) == 4
+        assert get(sources=("src", "missing")) == 5
+    finally:
+        shutil.rmtree(kind_dir, ignore_errors=True)
+
+
+#: Literals only ``catalog.py`` may hold: a bare parquet read (schema
+#: inference with a Spark job on every call; use ``catalog.read_parquet``)
+#: and the persisted-artifact path and marker (use
+#: ``catalog.derived_table``).
+_CATALOG_ONLY = {
+    "bare_parquet_read": r"\.read\s*\.\s*(parquet\s*\(|format\(\s*['\"]parquet)",
+    "testdata_path": r"['\"]\.testdata",
+    "artifact_marker": r"_SRC_FINGERPRINT",
+}
+
+
+@pytest.mark.parametrize("literal", sorted(_CATALOG_ONLY))
+def test_no_schema_inferring_parquet_read_outside_catalog(literal):
+    """Every parquet read and every persisted derived table in the
+    package goes through ``catalog``, so a bare read that infers the
+    schema with a Spark job on every call, or a second hand-rolled
+    artifact cache, cannot come back."""
     import glob
     import re
 
@@ -911,14 +974,14 @@ def test_no_schema_inferring_parquet_read_outside_catalog():
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "flu_data_pipeline_spark",
     )
-    bare = re.compile(r"\.read\s*\.\s*(parquet\s*\(|format\(\s*['\"]parquet)")
+    pattern = re.compile(_CATALOG_ONLY[literal])
     offenders = []
     for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
         if os.path.relpath(path, root) == "catalog.py":
             continue
         with open(path) as fh:
             text = fh.read()
-        for m in bare.finditer(text):
+        for m in pattern.finditer(text):
             line = text.count("\n", 0, m.start()) + 1
             offenders.append(f"{os.path.relpath(path, root)}:{line}")
-    assert not offenders, f"bare parquet reads (use catalog.read_parquet): {offenders}"
+    assert not offenders, f"{literal} outside catalog.py: {offenders}"
