@@ -34,7 +34,8 @@ carry the query's name as their job description. Job counts repeat
 exactly from run to run and executor CPU does not follow ambient host
 load the way wall time does, so the verdict is taken on work against
 one anchor, the previous ``bench_last.json`` at the same sf, over the
-queries both readings ran.
+queries both readings ran. A full sweep replaces the anchor; a run of
+named queries merges their work into it.
 
 ``compiles`` is the median per run of the generated-code compilations
 (Janino) the run caused, the count of Spark's ``CodegenMetrics``
@@ -131,13 +132,19 @@ def _read_sidecar(repo: str, sf) -> dict | None:
     return last.get("work") if last.get("sf") == sf else None
 
 
-def _write_sidecar(repo: str, line: str) -> None:
-    """Persist the JSON line to ``bench_last.json`` at the repo root: a
+def _write_sidecar(repo: str, rec: dict, merge: bool) -> None:
+    """Persist the record to ``bench_last.json`` at the repo root: a
     copy that survives a truncated stdout capture, and the next sweep's
-    anchor."""
+    anchor. A full sweep, or a run at another sf, replaces the anchor;
+    with ``merge`` (a run of named queries) the run's per-query work is
+    merged into the anchor at the same sf, so the next full sweep is
+    still compared over every query the anchor held."""
+    prior = _read_sidecar(repo, rec["sf"]) if merge else None
+    if prior:
+        rec = {**rec, "work": {**prior, **rec["work"]}}
     try:
         with open(os.path.join(repo, SIDECAR), "w") as fh:
-            fh.write(line + "\n")
+            fh.write(json.dumps(rec) + "\n")
     except OSError:
         pass
 
@@ -195,9 +202,9 @@ def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="flu_data_pipeline_spark-bench")
     queries = names or [n for n, q in REGISTRY.items() if q.bench]
-    line = json.dumps(sweep(spark, sf_dir, queries))
-    print(line)
-    _write_sidecar(ROOT, line)
+    rec = sweep(spark, sf_dir, queries)
+    print(json.dumps(rec))
+    _write_sidecar(ROOT, rec, merge=bool(names))
     spark.stop()
     return 0
 

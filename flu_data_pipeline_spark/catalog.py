@@ -174,14 +174,12 @@ def derived_table(
     params: str = "",
     tag: str | None = None,
     base_dir: str | None = None,
-    rebuild: bool = False,
 ) -> str:
     """Path of the persisted table ``name`` derived from the ``sources``
     tables of ``sf_dir``, calling ``build(path)`` first only when it is
     stale (the protocol is in the module docstring). ``tag`` replaces the
     sf tag and ``base_dir`` the whole ``<repo>/.testdata/<kind>/<tag>``
-    directory; ``rebuild`` builds even a fresh artifact, for one that also
-    has state off disk."""
+    directory."""
     base = base_dir or os.path.join(
         _REPO, ".testdata", kind, tag or os.path.basename(sf_dir.rstrip("/"))
     )
@@ -198,7 +196,7 @@ def derived_table(
                 fresh = fh.read() == identity
         except OSError:
             pass
-    if rebuild or not fresh:
+    if not fresh:
         build(path)
         if identity is not None:
             with open(marker, "w") as fh:

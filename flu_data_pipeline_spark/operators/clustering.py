@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.operators.materialize import barrier
+
 
 def sqdist(vec: Column, centroid: Column) -> Column:
     """Σ (x_i - c_i)² as a native left-fold in array order (double math)."""
@@ -420,8 +422,8 @@ def twolevel_kmeans_assigned(
     FREEZE it and assign later batches under the identical model via
     :func:`twolevel_assign` (the crawl-refresh shape: centroids still
     never touch the driver)."""
-    fine = fine_seeds(df, vec_col, id_col, stride, round_dp).localCheckpoint(
-        eager=False
+    fine = barrier(
+        fine_seeds(df, vec_col, id_col, stride, round_dp), "fine_seeds", eager=False
     )
     # The ONE driver-side collect: seed count folded together with a
     # dim check (min/max seed-vector length) so a mismatched `dim`
@@ -446,7 +448,7 @@ def twolevel_kmeans_assigned(
     coarse = fine.filter((F.col("fcl") % sc) == 0).select(
         F.expr(f"fcl div {sc}").alias("ccl"), "c"
     )
-    for _ in range(iters):
+    for it in range(iters):
         asg = twolevel_assign(
             df, vec_col, id_col, fine, coarse, nprobe, keep_vec=True
         )
@@ -484,12 +486,13 @@ def twolevel_kmeans_assigned(
                 F.transform("pairs", lambda p: p["av"]).alias("nc"),
             )
         )
-        fine = (
+        fine = barrier(
             fine.join(
                 upd.withColumnRenamed("cluster", "fcl"), "fcl", "left"
             )
-            .select("fcl", F.coalesce("nc", "c").alias("c"))
-            .localCheckpoint(eager=False)
+            .select("fcl", F.coalesce("nc", "c").alias("c")),
+            f"lloyd{it}",
+            eager=False,
         )
     asg = twolevel_assign(
         df, vec_col, id_col, fine, coarse, nprobe, keep_vec=keep_vec

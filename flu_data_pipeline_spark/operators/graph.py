@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.operators.materialize import barrier
+
 
 def connected_components(
     edges: DataFrame, src: str, dst: str, max_iter: int = 20
@@ -51,31 +53,31 @@ def connected_components(
     """
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = und.localCheckpoint(eager=True)
+    und = barrier(und, "cc_edges")
 
-    labels = (
+    labels = barrier(
         und.select(F.col("a").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        "cc_labels",
     )
     prev_sum = labels.agg(F.sum("label")).first()[0]
 
-    for _ in range(max_iter):
+    for it in range(max_iter):
         nbr_min = (
             und.join(labels, und["b"] == labels["node"])
             .groupBy("a")
             .agg(F.min("label").alias("nbr_label"))
         )
-        labels = (
+        labels = barrier(
             labels.join(nbr_min, labels["node"] == nbr_min["a"], "left")
             .select(
                 "node",
                 F.least(
                     F.col("label"), F.coalesce("nbr_label", F.col("label"))
                 ).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"cc_round{it}",
         )
         cur_sum = labels.agg(F.sum("label")).first()[0]
         if cur_sum == prev_sum:
@@ -123,16 +125,16 @@ def connected_components_star(
     u, v = "__cc_u", "__cc_v"
     L = edges.select(F.col(src).alias(u), F.col(dst).alias(v))
     # contract parity: self-loop-only nodes still get a (node, node) row
-    nodes0 = (
+    nodes0 = barrier(
         L.select(F.col(u).alias("node"))
         .union(L.select(F.col(v).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "star_nodes",
     )
-    L = L.filter(F.col(u) != F.col(v)).distinct().localCheckpoint(eager=True)
+    L = barrier(L.filter(F.col(u) != F.col(v)).distinct(), "star_edges")
     prev_cnt = L.count()
 
-    for _ in range(max_iter):
+    for it in range(max_iter):
         # ---- large-star ----
         S = L.union(L.select(F.col(v).alias(u), F.col(u).alias(v)))
         mins = (
@@ -163,7 +165,7 @@ def connected_components_star(
             .filter(F.col(u) != F.col(v))
             .distinct()
         )
-        new_L = small.localCheckpoint(eager=True)
+        new_L = barrier(small, f"star_round{it}")
         new_cnt = new_L.count()
         if new_cnt == prev_cnt and new_L.exceptAll(L).isEmpty():
             L = new_L
@@ -208,10 +210,10 @@ def bfs_hops(
     """
     sym = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = sym.union(sym.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    sym = sym.localCheckpoint(eager=True)
+    sym = barrier(sym, "bfs_edges")
 
     visited = sources.select("node").distinct().withColumn("dist", F.lit(0))
-    frontier = visited.localCheckpoint(eager=True)
+    frontier = barrier(visited, "bfs_seeds")
     visited = frontier
     for hop in range(1, max_hops + 1):
         reached = (
@@ -219,14 +221,14 @@ def bfs_hops(
             .select(F.col("d").alias("node"))
             .distinct()
         )
-        frontier = (
+        frontier = barrier(
             reached.join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .localCheckpoint(eager=True)
+            .withColumn("dist", F.lit(hop)),
+            f"bfs_frontier{hop}",
         )
         if frontier.isEmpty():
             break
-        visited = visited.union(frontier).localCheckpoint(eager=True)
+        visited = barrier(visited.union(frontier), f"bfs_visited{hop}")
     return visited
 
 
@@ -255,35 +257,35 @@ def pagerank(
     out-edges) is dropped, not redistributed — both engines implement
     the same convention, and the trade graph has none.
     """
-    nodes = (
+    nodes = barrier(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "pagerank_nodes",
     )
     n = nodes.count()  # one-time scalar; not a per-iteration collect
     out_w = edges.groupBy(src).agg(F.sum(weight).alias("w_out"))
-    norm = (
+    norm = barrier(
         edges.join(out_w, src)
         .select(
             F.col(src).alias("e_src"),
             F.col(dst).alias("e_dst"),
             (F.col(weight) / F.col("w_out")).alias("p"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "pagerank_norm",
     )
     # initial rank rounded by Spark's own ROUND (HALF_UP) so it matches
     # SQL oracles exactly; Python's builtin round is banker's
     ranks = nodes.withColumn(
         "rank", F.round(F.lit(1.0) / F.lit(float(n)), round_dp)
     )
-    for _ in range(iterations):
+    for it in range(iterations):
         contrib = (
             norm.join(ranks, norm["e_src"] == ranks["node"])
             .groupBy("e_dst")
             .agg(F.sum(F.col("p") * F.col("rank")).alias("mass"))
         )
-        ranks = (
+        ranks = barrier(
             nodes.join(contrib, nodes["node"] == contrib["e_dst"], "left")
             .select(
                 "node",
@@ -292,8 +294,8 @@ def pagerank(
                     + damping * F.coalesce("mass", F.lit(0.0)),
                     round_dp,
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"pagerank{it}",
         )
     return ranks
 
@@ -325,10 +327,10 @@ def kcore(
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    sym = sym.localCheckpoint(eager=True)
+    sym = barrier(sym, "kcore_edges")
 
     nodes = sym.select(F.col("a").alias("node")).distinct()
-    for _ in range(rounds):
+    for it in range(rounds):
         alive = (
             sym.join(nodes, sym["a"] == nodes["node"], "left_semi")
             .join(
@@ -337,12 +339,12 @@ def kcore(
                 "left_semi",
             )
         )
-        nodes = (
+        nodes = barrier(
             alive.groupBy("a")
             .agg(F.count(F.lit(1)).alias("deg"))
             .filter(F.col("deg") >= k)
-            .select(F.col("a").alias("node"))
-            .localCheckpoint(eager=True)
+            .select(F.col("a").alias("node")),
+            f"kcore{it}",
         )
     final_edges = (
         sym.join(nodes, sym["a"] == nodes["node"], "left_semi")

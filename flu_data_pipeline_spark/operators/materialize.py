@@ -1,5 +1,15 @@
 """Driver-side materialization helpers shared by the plans and the pipeline.
 
+The materialization rule: every driver-side boundary of a plan (a frame
+pinned so later plans read it instead of recomputing it, or so a loop's
+lineage stops growing) goes through :func:`barrier`, and nothing else in
+the package calls ``localCheckpoint``, ``checkpoint`` or ``persist``
+(a test fails on those literals outside this module). The policy is a
+local checkpoint: executor storage, no reliable-storage write, released
+with the session. The one other cache is ``sources.writers``'
+``idempotent_append``, scoped to a single append and unpersisted by it.
+
+:func:`barrier` pins a frame and names the jobs it runs.
 :func:`overlap` runs mutually independent blocking driver actions
 (eager checkpoints, probe collects, per-table loads) concurrently, so
 the scheduler back-fills executors freed by one job's stragglers with
@@ -14,7 +24,7 @@ from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def overlap(*thunks):
@@ -68,3 +78,21 @@ def job_label(spark: SparkSession, label: str):
         yield
     finally:
         sc.setJobDescription(prev)
+
+
+def barrier(df: DataFrame, label: str, *, eager: bool = True) -> DataFrame:
+    """``df`` materialized as a local checkpoint, with every job the
+    checkpoint submits labelled ``label`` through :func:`job_label`
+    (``outer/label`` under an outer label, such as the query name
+    ``bench.py`` sets).
+
+    ``eager=True`` computes the whole frame at the call. ``eager=False``
+    defers only the final stage: under AQE the checkpoint still plans
+    the final adaptive plan at the call, so every shuffle stage of the
+    frame's plan runs there, as jobs carrying the label. The final stage
+    runs when a consumer first reads the frame, under the consumer's
+    label. Either way the returned frame's plan is a scan of the
+    checkpointed rows, so later plans do not recompute or re-plan it.
+    """
+    with job_label(df.sparkSession, label):
+        return df.localCheckpoint(eager=eager)

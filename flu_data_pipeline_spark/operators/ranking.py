@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from flu_data_pipeline_spark.operators.materialize import barrier
+
 __all__ = [
     "global_rank",
     "global_ntile",
@@ -70,9 +72,7 @@ def global_rank(
     # Eager checkpoint: counts + rank must see ONE materialization of
     # the range exchange (its partitioner bounds come from a sampling
     # job; a second execution may sample different bounds).
-    d = d.withColumn(_LRANK, F.row_number().over(w)).localCheckpoint(
-        eager=True
-    )
+    d = barrier(d.withColumn(_LRANK, F.row_number().over(w)), "global_rank")
     counts = d.groupBy(_PID).agg(F.count(F.lit(1)).alias(_CNT))
     total = counts.agg(F.sum(_CNT).cast("bigint").alias(_N))
     # Cumulative offsets over the per-partition counts: a triangular
@@ -152,9 +152,12 @@ def global_cumsum(
     # Eager checkpoint: per-partition totals + the running sums must see
     # ONE materialization of the range exchange (sampled bounds — see
     # global_rank).
-    d = d.select(
-        "*", *(F.sum(v).over(w).alias(r) for v, r in zip(v_cols, runs))
-    ).localCheckpoint(eager=True)
+    d = barrier(
+        d.select(
+            "*", *(F.sum(v).over(w).alias(r) for v, r in zip(v_cols, runs))
+        ),
+        "global_cumsum",
+    )
     totals = d.groupBy(_PID).agg(
         *(F.sum(v).alias(t) for v, t in zip(v_cols, tots))
     )
@@ -212,9 +215,12 @@ def global_prefix_max(
         .rowsBetween(Window.unboundedPreceding, frame_hi)
     )
     # Eager checkpoint: same one-materialization contract as global_rank.
-    d = d.withColumn(
-        "__gm_run", F.max(value_col).over(w)
-    ).localCheckpoint(eager=True)
+    d = barrier(
+        d.withColumn(
+            "__gm_run", F.max(value_col).over(w)
+        ),
+        "global_prefix_max",
+    )
     totals = d.groupBy(_PID).agg(F.max(value_col).alias(_CNT))
     a, b = totals.alias("a"), totals.alias("b")
     offsets = (
@@ -267,12 +273,12 @@ def global_first_following(
     )
     wr = Window.partitionBy(_PID).orderBy(*order)
     # Eager checkpoint: same one-materialization contract as global_rank.
-    d = (
+    d = barrier(
         d.withColumn(
             "__gf_loc", F.first(value_col, ignorenulls=True).over(w)
         )
-        .withColumn("__gf_rn", F.row_number().over(wr))
-        .localCheckpoint(eager=True)
+        .withColumn("__gf_rn", F.row_number().over(wr)),
+        "global_first_following",
     )
     # First non-null value per partition, in order (one row/partition).
     firsts = (

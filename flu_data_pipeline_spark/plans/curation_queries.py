@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from flu_data_pipeline_spark.catalog import load_table
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.dedup import shingles_from_tokens, tokenize
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import REGISTRY, register
 
 # DuckDB equivalent of shingles_from_tokens∘tokenize (same as dedup oracle)
@@ -411,7 +412,7 @@ def curation_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tokenize->shingle->md5 pipeline executes twice (no CSE across
     # a self-join). localCheckpoint pins the 16-byte (doc_id, h) rows
     # once — the graph-query idiom. Measured 1.7x HERE (1.98->1.18 s at sf0.1); the same trick was A/B-tested on the dedup self-joins and left OUT there (ngram_jaccard 0.92->1.15 s — its derived frame is cheaper than the checkpoint barrier).
-    bg = bg.localCheckpoint(eager=True)
+    bg = barrier(bg, "bg")
     df = bg.groupBy("h").agg(F.count(F.lit(1)).alias("doc_freq"))
     return (
         bg.join(df, "h")
@@ -1477,15 +1478,15 @@ def curation_pipeline_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rank) and without the checkpoint each branch re-ran the full
     # tokenize + bigram-gate pipeline — 4 rows/doc of recompute for a
     # ~30-byte/doc frame.
-    gated = (
+    gated = barrier(
         toks.join(gate, "doc_id")
         .select(
             "doc_id",
             "source",
             F.md5("text").alias("content_md5"),
             F.size("t").cast("long").alias("n_tokens"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "gated",
     )
     w_dedup = Window.partitionBy("content_md5").orderBy("doc_id")
     deduped = (
@@ -2092,7 +2093,7 @@ def _qc_features(docs: DataFrame, with_source: bool = False) -> DataFrame:
             "x2"
         ),
     ]
-    return docs.select(*cols).select(*out_cols).localCheckpoint(eager=True)
+    return barrier(docs.select(*cols).select(*out_cols), "qc_features")
 
 
 def _qc_fit(feat: DataFrame) -> tuple[int, list[dict]]:
@@ -2296,7 +2297,7 @@ def curation_gate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     z = F.lit(b0) + F.lit(b1) * F.col("x1") + F.lit(b2) * F.col("x2")
     scored = feat.select("y", z.alias("z"))
     zb = scored.agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
-    bins = (
+    bins = barrier(
         scored.crossJoin(F.broadcast(zb))
         .groupBy(
             F.when(F.col("hi") == F.col("lo"), 0)
@@ -2314,8 +2315,8 @@ def curation_gate_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("y").cast("bigint").alias("np"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bins",
     )
     iso = isotonic_fit(bins)
     return (

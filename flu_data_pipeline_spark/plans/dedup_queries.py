@@ -34,6 +34,7 @@ from flu_data_pipeline_spark.operators.dedup import (
     simhash_near_pairs,
     tokenize,
 )
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import REGISTRY, register
 
 
@@ -300,7 +301,7 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
         # candidate-distinct + array-join insurance premium.
         return _ngram_jaccard_uncapped(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
-    arrs = (
+    arrs = barrier(
         docs.repartition(
             spark.sparkContext.defaultParallelism, F.col("doc_id")
         )
@@ -314,10 +315,10 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("sh_arr"),
         )
-        .withColumn("n_shingles", F.size("sh_arr"))
+        .withColumn("n_shingles", F.size("sh_arr")),
         # reused three times (postings + both sides of the pair join):
         # one materialization of the CPU-heavy shingle/hash pass
-        .localCheckpoint(eager=True)
+        "arrs",
     )
     posts = arrs.select("doc_id", F.explode("sh_arr").alias("sh"))
     # Hot shingles present: ONE shuffle of the postings builds the
@@ -1469,7 +1470,7 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # universal family) and the exact-Jaccard side explodes its distinct
     # elements — previously each pipeline re-tokenized and re-hashed the
     # corpus (md5-per-shingle dominates; measured ~1.4x on bench).
-    hashed = (
+    hashed = barrier(
         docs.repartition(spark.sparkContext.defaultParallelism, F.col("doc_id"))
         .select("doc_id", tokenize(F.col("text")).alias("tokens"))
         .filter(F.size("tokens") >= 3)
@@ -1478,8 +1479,8 @@ def dedup_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.transform(
                 shingles_from_tokens(F.col("tokens"), 3), lambda s: hash64(s)
             ).alias("h_arr"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "hashed",
     )
     sig = hashed.select(
         "doc_id",
@@ -1626,7 +1627,7 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac_col = F.col("c").cast("double") / (
         F.col("na") + F.col("nb") - F.col("c")
     )
-    pairs = (
+    pairs = barrier(
         a.join(
             b,
             (F.col("a.sh") == F.col("b.sh"))
@@ -1639,8 +1640,8 @@ def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.n_shingles").alias("nb"),
         )
         .agg(F.count(F.lit(1)).alias("c"))
-        .select("doc_a", "doc_b", jac_col.alias("j"))
-        .localCheckpoint(eager=True)
+        .select("doc_a", "doc_b", jac_col.alias("j")),
+        "pairs",
     )
     thresholds = F.array(*[F.lit(t) for t in _SWEEP_THRESHOLDS])
     swept = pairs.select(
@@ -1707,8 +1708,8 @@ def lsh_band_pair_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(docs, "doc_id", "text", NUM_HASHES)
-    banded = lsh_bands(sig, "doc_id", NUM_HASHES, BAND_SIZE).localCheckpoint(
-        eager=False
+    banded = barrier(
+        lsh_bands(sig, "doc_id", NUM_HASHES, BAND_SIZE), "banded", eager=False
     )
     a, b = banded.alias("a"), banded.alias("b")
     pairs = a.join(
@@ -1981,7 +1982,7 @@ def paragraph_rewrite_join_metric(
     docs = load_table(spark, sf_dir, "documents")
     # checkpoint truncates the explode lineage out of the probe plan so
     # the join node is unambiguous (same discipline as the LSH gate)
-    hashed = _paragraph_chunks(docs).localCheckpoint(eager=False)
+    hashed = barrier(_paragraph_chunks(docs), "hashed", eager=False)
     keepers = hashed.groupBy("h").agg(
         F.min(F.struct("doc_id", "pos")).alias("first")
     )
@@ -2196,13 +2197,16 @@ def sample_cluster_split_leakproof(
 
     docs = load_table(spark, sf_dir, "documents")
     sig = minhash_signatures(docs, "doc_id", "text", NUM_HASHES)
-    pairs = lsh_candidate_pairs(
-        sig, "doc_id", NUM_HASHES, BAND_SIZE
-    ).localCheckpoint(eager=True)
+    pairs = barrier(
+        lsh_candidate_pairs(
+            sig, "doc_id", NUM_HASHES, BAND_SIZE
+        ),
+        "pairs",
+    )
     cc = connected_components(pairs, "id_a", "id_b").select(
         F.col("node").alias("doc_id"), F.col("component")
     )
-    labeled = (
+    labeled = barrier(
         docs.select("doc_id")
         .join(cc, "doc_id", "left")
         .select(
@@ -2220,8 +2224,8 @@ def sample_cluster_split_leakproof(
             F.when(hash64(F.col("grp").cast("string")) % 100 < 90, "train")
             .otherwise("val")
             .alias("cluster_split"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "labeled",
     )
     a = labeled.select(
         F.col("doc_id").alias("id_a"),

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -722,33 +723,36 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("event_type").over(w).alias("prev"),
     ).filter(F.col("prev").isNotNull())
     t = seq.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("n"))
-    nrm = t.select(
-        "prev",
-        "cur",
-        F.round(
-            F.col("n").cast("double")
-            / F.sum("n").over(Window.partitionBy("prev")),
-            8,
-        ).alias("p"),
-    ).localCheckpoint(eager=True)
-    states = (
+    nrm = barrier(
+        t.select(
+            "prev",
+            "cur",
+            F.round(
+                F.col("n").cast("double")
+                / F.sum("n").over(Window.partitionBy("prev")),
+                8,
+            ).alias("p"),
+        ),
+        "nrm",
+    )
+    states = barrier(
         t.select(F.col("prev").alias("state"))
         .union(t.select("cur"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "states",
     )
     v = states.select(
         "state",
         F.when(F.col("state") == "purchase", 1.0).otherwise(0.0).alias("v"),
     )
     absorbing = F.col("state").isin("purchase", "error")
-    for _ in range(4):
+    for it in range(4):
         nv = (
             nrm.join(v, nrm.cur == v.state)
             .groupBy(F.col("prev").alias("state"))
             .agg(F.sum(F.col("p") * F.col("v")).alias("nv"))
         )
-        v = (
+        v = barrier(
             states.join(v, "state")
             .join(nv, "state", "left")
             .select(
@@ -756,8 +760,8 @@ def markov_absorption_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(absorbing, F.col("v"))
                 .otherwise(F.round(F.coalesce(F.col("nv"), F.lit(0.0)), 8))
                 .alias("v"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"v{it}",
         )
     return v.select(
         "state", F.round("v", 6).alias("p_purchase_within_4")

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.operators.ranking import global_cumsum
 from flu_data_pipeline_spark.plans.registry import register
 
@@ -1348,14 +1349,14 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cnt", "np", (F.col("__cum") - F.col("cnt")).alias("cb")
     )
     tot = per.agg(F.sum("cnt").cast("bigint").alias("n_total"))
-    bins = (
+    bins = barrier(
         cum.crossJoin(F.broadcast(tot))
         .groupBy(F.expr("cast((cb * 10) div n_total as int)").alias("bin"))
         .agg(
             F.sum("cnt").cast("bigint").alias("n"),
             F.sum("np").cast("bigint").alias("np"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "bins",
     )
     iso = isotonic_fit(bins)
     return (

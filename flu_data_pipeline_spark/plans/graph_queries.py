@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
 from flu_data_pipeline_spark.operators.graph import bfs_hops, kcore, pagerank
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 #: Shared oracle fragment: the sparsified supplier co-supply graph.
@@ -477,17 +478,17 @@ def sssp_weighted_cosupply(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = ew.select(F.col("u").alias("s"), F.col("v").alias("d"), "w").unionByName(
         ew.select(F.col("v").alias("s"), F.col("u").alias("d"), "w")
     )
-    sym = sym.localCheckpoint(eager=True)
+    sym = barrier(sym, "sym")
     dist = sym.agg(F.min("s").alias("node"), F.lit(0).cast("bigint").alias("dist"))
-    for _ in range(_SSSP_ROUNDS):
+    for it in range(_SSSP_ROUNDS):
         cand = dist.join(sym, dist.node == sym.s).select(
             F.col("d").alias("node"), (F.col("dist") + F.col("w")).alias("dist")
         )
-        dist = (
+        dist = barrier(
             dist.unionByName(cand)
             .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("dist").alias("dist")),
+            f"dist{it}",
         )
     return dist.orderBy("dist", "node").limit(50)
 
@@ -531,7 +532,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym = e.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
         e.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
-    sym = sym.localCheckpoint(eager=True)
+    sym = barrier(sym, "sym")
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
     )
@@ -596,7 +597,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_local_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _cosupply_edges(spark, sf_dir)
-    e = e.localCheckpoint(eager=True)
+    e = barrier(e, "edges")
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -730,21 +731,21 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pattern): every half-step references edges/nodes, and without
     # truncation the final plan would inline the fact join once per
     # reference — quadratic plan growth across the iterations.
-    edges = (
+    edges = barrier(
         li.join(orders, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
         .join(F.broadcast(supp), F.col("l_suppkey") == F.col("s_suppkey"))
         .groupBy(
             F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
         )
-        .agg(F.count(F.lit(1)).cast("double").alias("w"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("double").alias("w")),
+        "edges",
     )
-    nodes = (
+    nodes = barrier(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .localCheckpoint()
+        .distinct(),
+        "nodes",
     )
     nn = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     hub = nodes.crossJoin(F.broadcast(nn)).select(
@@ -761,9 +762,9 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col(group_as).alias("gnode"))
             .agg(F.sum(F.col("w") * F.col(score_col)).alias("raw"))
         )
-        raw = raw.localCheckpoint()  # referenced twice (join + total)
+        raw = barrier(raw, "raw")  # referenced twice (join + total)
         tot = raw.agg(F.sum("raw").alias("tot"))
-        return (
+        return barrier(
             nodes.join(raw, nodes["node"] == raw["gnode"], "left")
             .crossJoin(F.broadcast(tot))
             .select(
@@ -771,10 +772,10 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.round(
                     F.coalesce(F.col("raw"), F.lit(0.0)) / F.col("tot"), 8
                 ).alias(out_col),
-            )
+            ),
             # O(nodes)-sized: eager checkpoint keeps the per-iteration
             # plan constant instead of doubling every half-step
-            .localCheckpoint()
+            "half_step",
         )
 
     auth = None

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 from flu_data_pipeline_spark.sources.writers import write_bucketed
 
@@ -173,7 +174,7 @@ def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "zorder", "A7"),
 )
 def zorder_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    coded = _binned_coded(spark, sf_dir).localCheckpoint()
+    coded = barrier(_binned_coded(spark, sf_dir), "coded")
     z_spans = coded.groupBy(
         F.shiftright("z", 8).cast("int").alias("b")
     ).agg(
@@ -426,7 +427,7 @@ def hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("layout", "zorder", "A7", "A10"),
 )
 def hilbert_vs_zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    coded = _hilbert_coded(spark, sf_dir).localCheckpoint()
+    coded = barrier(_hilbert_coded(spark, sf_dir), "coded")
 
     def spans(bucket_col: str) -> DataFrame:
         return coded.groupBy(
@@ -1081,13 +1082,15 @@ def topk_window_group_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bucketed_table(
     spark: SparkSession, sf_dir: str, src: str, key: str, buckets: int = 8
 ) -> str:
-    """Materialize (once per session+sf) a bucketed, bucket-sorted copy
-    of ``src`` keyed on ``key`` — the at-rest co-location layout that
-    lets every subsequent join/aggregate on the key run WITHOUT a
-    shuffle. External table (explicit path) so the data survives across
-    sessions; the catalog entry (which carries the bucket spec Spark's
-    planner reads) is re-created per session, so a session without it
-    rebuilds, and a stale copy is dropped before its rebuild."""
+    """Materialize (once per sf) a bucketed, bucket-sorted copy of
+    ``src`` keyed on ``key`` — the at-rest co-location layout that lets
+    every subsequent join/aggregate on the key run WITHOUT a shuffle.
+    External table (explicit path) so the data survives across
+    sessions; a stale copy is dropped before its rebuild. The bucket
+    spec Spark's planner reads lives in the session catalog, not in the
+    files, so a session that finds a fresh copy it has no catalog entry
+    for registers one over the existing files instead of rewriting
+    them."""
     tag = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     name = f"bkt_{src}_{tag}"
 
@@ -1097,15 +1100,17 @@ def _bucketed_table(
             load_table(spark, sf_dir, src), name, path, buckets, (key,)
         )
 
-    derived_table(
-        "bucketed",
-        sf_dir,
-        src,
-        (src,),
-        build,
-        tag=tag,
-        rebuild=not spark.catalog.tableExists(name),
-    )
+    path = derived_table("bucketed", sf_dir, src, (src,), build, tag=tag)
+    if not spark.catalog.tableExists(name):
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}"
+            for f in load_table(spark, sf_dir, src).schema
+        )
+        spark.sql(
+            f"CREATE TABLE {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {buckets} BUCKETS "
+            f"LOCATION '{path}'"
+        )
     return name
 
 

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -475,10 +476,13 @@ def huber_irls_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_quantity", "l_extendedprice"
     )
-    pts = li.selectExpr(
-        "CAST(l_quantity AS BIGINT) AS x",
-        "CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS y",
-    ).localCheckpoint()
+    pts = barrier(
+        li.selectExpr(
+            "CAST(l_quantity AS BIGINT) AS x",
+            "CAST(FLOOR(l_extendedprice * 100) AS BIGINT) AS y",
+        ),
+        "pts",
+    )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m0 = pts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -492,8 +496,8 @@ def huber_irls_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .selectExpr("b", f"ROUND({_A_UNW}, 8) AS a", "CAST(0 AS BIGINT) AS n_down")
     )
     coefs = [c0]
-    for _ in range(2):
-        prev = coefs[-1].localCheckpoint()
+    for it in range(2):
+        prev = barrier(coefs[-1], f"irls{it}")
         w = pts.crossJoin(F.broadcast(prev.select("a", "b"))).selectExpr(
             "x", "y", f"{_HUBER_WQ} AS w"
         )

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -1347,15 +1348,18 @@ def skyline_2d_scale(part: DataFrame) -> DataFrame:
     # Eager checkpoint: the summary branch and the row branch must see
     # ONE materialization of the sampled range partitioner (same
     # pitfall as operators/ranking.py global_rank).
-    d = d.select(
-        "p_partkey",
-        "p_name",
-        "p_size",
-        "price_cents",
-        "__pid",
-        F.max("p_size").over(w_local).alias("local_cheaper"),
-        F.max("price_cents").over(w_pid).alias("pid_max_price"),
-    ).localCheckpoint(eager=True)
+    d = barrier(
+        d.select(
+            "p_partkey",
+            "p_name",
+            "p_size",
+            "price_cents",
+            "__pid",
+            F.max("p_size").over(w_local).alias("local_cheaper"),
+            F.max("price_cents").over(w_pid).alias("pid_max_price"),
+        ),
+        "ranked",
+    )
     # One row per partition: tiny at any scale.
     summ = d.groupBy("__pid").agg(
         F.max("price_cents").alias("max_price"),

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
-from flu_data_pipeline_spark.operators.materialize import overlap
+from flu_data_pipeline_spark.operators.materialize import barrier, overlap
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -699,10 +699,10 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment's partial agg (no re-join of emb on the id), and the
     # eager checkpoint stops the THREE downstream references (x side,
     # y side, final left join) from re-running the assignment.
-    d = (
+    d = barrier(
         assign_best(emb, "embedding", "vec_id", cents, keep_vec=True)
-        .withColumn("nrm", norm(F.col("embedding")))
-        .localCheckpoint(eager=True)
+        .withColumn("nrm", norm(F.col("embedding"))),
+        "assigned",
     )
     # Pin pair-join parallelism: tiny bytes, quadratic pairs — AQE
     # would coalesce to one partition and run the join single-task
@@ -824,7 +824,7 @@ def dedup_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
         stride=_SEMDEDUP_INIT_EVERY, iters=_KMEANS_ITERS, nprobe=2,
         keep_vec=True,
     )
-    d = (
+    d = barrier(
         asg.withColumn("nrm", norm(F.col("embedding")))
         .withColumn(
             "chunk",
@@ -833,8 +833,9 @@ def dedup_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"order by dist, vec_id) - 1) "
                 f"div {_SEMDEDUP_INIT_EVERY}"
             ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "assigned",
+        eager=False,
     )
     # Pin the pair join's parallelism: the frame is tiny in BYTES (AQE
     # would coalesce the exchange to one partition and run the whole
@@ -2002,8 +2003,8 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint both bounded frames (N rows / N^2 pairs) so the corpus
     # scan runs ONCE and the selection stages operate on materialized
     # tiny inputs (measured 9.3s -> sub-second at sf0.1 without this).
-    pool = pool.select("vec_id", "rel").localCheckpoint(eager=True)
-    pairs = pairs.localCheckpoint(eager=True)
+    pool = barrier(pool.select("vec_id", "rel"), "pool")
+    pairs = barrier(pairs, "pairs")
     lam, one_m = F.lit(MMR_LAMBDA), F.lit(round(1 - MMR_LAMBDA, 6))
     picks: list[DataFrame] = []
     sel: DataFrame | None = None  # selected vec_ids so far
@@ -2034,11 +2035,11 @@ def ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         # 1-row checkpoint per pick keeps the step chain linear (without
         # it pick_t re-executes every earlier pick's subplan).
-        pick = (
+        pick = barrier(
             scored.orderBy(F.desc("mmr"), F.asc("vec_id"))
             .limit(1)
-            .withColumn("sel_rank", F.lit(t))
-            .localCheckpoint(eager=True)
+            .withColumn("sel_rank", F.lit(t)),
+            f"pick{t}",
         )
         picks.append(pick)
         chosen = pick.select("vec_id")
@@ -2474,7 +2475,7 @@ def embedding_top_pc_power_iteration(
     import math
 
     emb = load_table(spark, sf_dir, "embeddings")
-    x = (
+    x = barrier(
         emb.select("vec_id", F.posexplode("embedding").alias("pos", "vf"))
         .select(
             "vec_id",
@@ -2482,8 +2483,8 @@ def embedding_top_pc_power_iteration(
             F.round(F.col("vf").cast("double") * 1_000_000, 0)
             .cast("long")
             .alias("xq"),
-        )
-        .localCheckpoint(eager=True)  # reused 2x per iteration
+        ),
+        "coords",  # reused 2x per iteration
     )
     vq = [1_000_000 if d == 1 else 0 for d in range(1, _PI_DIM + 1)]
     norm2 = None
@@ -2687,10 +2688,10 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, "embedding", "vec_id", k=_KMEANS_K, iters=_KMEANS_ITERS)
-    assigned = (
+    assigned = barrier(
         assign_best(emb, "embedding", "vec_id", cents, keep_vec=True)
-        .select("vec_id", "embedding", F.col("cluster").alias("cluster_id"))
-        .localCheckpoint(eager=True)
+        .select("vec_id", "embedding", F.col("cluster").alias("cluster_id")),
+        "assigned",
     )
     cdf = centroid_df(spark, cents)
     queries = emb.filter(
@@ -2699,7 +2700,7 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     wb = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
-    brute = (
+    brute = barrier(
         F.broadcast(queries)
         .join(
             emb.select(
@@ -2715,8 +2716,8 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("rn", F.row_number().over(wb))
         .filter(F.col("rn") <= 3)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
+        .select("query_id", "neighbor_id"),
+        "brute",
     )
     wprobe = Window.partitionBy("query_id").orderBy(
         F.asc("cdist"), F.asc("cluster")
@@ -2733,7 +2734,7 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("prn") <= max(_NPROBES))
     )
     # score once at the widest level; each level is the prn <= p slice
-    scored = (
+    scored = barrier(
         F.broadcast(ranked_probes)
         .join(
             assigned,
@@ -2745,8 +2746,8 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             "prn",
             cosine(F.col("q_emb"), F.col("embedding")).alias("cos_raw"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "scored",
     )
     return _nested_level_recall(
         spark, scored, brute, _NPROBES, F.desc("cos_raw")
@@ -3872,7 +3873,7 @@ def semdedup_drop_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
         stride=_SEMDEDUP_INIT_EVERY, iters=_KMEANS_ITERS, nprobe=2,
         keep_vec=True,
     )
-    d = (
+    d = barrier(
         asg.withColumn("nrm", norm(F.col("embedding")))
         .withColumn(
             "chunk",
@@ -3881,8 +3882,9 @@ def semdedup_drop_witnesses(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"order by dist, vec_id) - 1) "
                 f"div {_SEMDEDUP_INIT_EVERY}"
             ),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "assigned",
+        eager=False,
     )
     npart = spark.sparkContext.defaultParallelism
     x = d.select(
@@ -4012,13 +4014,17 @@ def semdedup_pair_cap_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, "embedding", "vec_id",
         stride=_SEMDEDUP_INIT_EVERY, iters=_KMEANS_ITERS, nprobe=2,
     )
-    d = asg.withColumn(
-        "chunk",
-        F.expr(
-            f"(row_number() over (partition by cluster "
-            f"order by dist, vec_id) - 1) div {_SEMDEDUP_INIT_EVERY}"
+    d = barrier(
+        asg.withColumn(
+            "chunk",
+            F.expr(
+                f"(row_number() over (partition by cluster "
+                f"order by dist, vec_id) - 1) div {_SEMDEDUP_INIT_EVERY}"
+            ),
         ),
-    ).localCheckpoint(eager=False)
+        "assigned",
+        eager=False,
+    )
     npart = spark.sparkContext.defaultParallelism
     x = d.select(
         F.col("vec_id").alias("vid_x"),
@@ -4294,11 +4300,11 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
         wl2 = Window.partitionBy("query_id").orderBy(
             F.asc("l2"), F.asc("neighbor_id")
         )
-        ranked = (
+        ranked = barrier(
             pairs.withColumn("rn_cos", F.row_number().over(wcos))
             .withColumn("rn_l2", F.row_number().over(wl2))
-            .filter((F.col("rn_cos") <= 3) | (F.col("rn_l2") <= 3))
-            .localCheckpoint(eager=True)  # <= 300 rows; built once
+            .filter((F.col("rn_cos") <= 3) | (F.col("rn_l2") <= 3)),
+            "ranked",  # <= 300 rows; built once
         )
         truth = ranked.filter(F.col("rn_cos") <= 3).select(
             F.lit("cos").alias("metric"),
@@ -4340,11 +4346,12 @@ def _serving_truth(
     for consumers that reference the truth in exactly one final-job
     branch (pq_rerank, binary rerank), where the eager form was a pure
     job barrier (r11 wave 2, guide §2.6/§5)."""
-    return (
+    return barrier(
         read_parquet(spark, _serving_truth_path(spark, sf_dir))
         .filter(F.col("metric") == metric)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=eager)
+        .select("query_id", "neighbor_id"),
+        "serving_truth",
+        eager=eager,
     )
 
 #: Spark-side SQ8 reconstruction (identical arithmetic to
@@ -4513,29 +4520,32 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _serving_truth(spark, sf_dir, "cos")
 
     def _bounds():
-        return emb.agg(
-            *[
-                F.min(F.col("embedding")[i].cast("double")).alias(f"lo{i}")
-                for i in range(64)
-            ],
-            *[
-                F.max(F.col("embedding")[i].cast("double")).alias(f"hi{i}")
-                for i in range(64)
-            ],
-        ).select(
-            F.array(*[F.col(f"lo{i}") for i in range(64)]).alias("lo"),
-            F.array(*[F.col(f"hi{i}") for i in range(64)]).alias("hi"),
-            # r11 (guide §2.4): the SQ8 codec bounds are query- and
-            # level-independent; without the checkpoint every nprobe
-            # level's scoring job re-ran this 128-aggregate full-corpus
-            # pass (~0.67 s x 4 of the 11 s total at sf0.1)
-        ).localCheckpoint(eager=True)
+        return barrier(
+            emb.agg(
+                *[
+                    F.min(F.col("embedding")[i].cast("double")).alias(f"lo{i}")
+                    for i in range(64)
+                ],
+                *[
+                    F.max(F.col("embedding")[i].cast("double")).alias(f"hi{i}")
+                    for i in range(64)
+                ],
+            ).select(
+                F.array(*[F.col(f"lo{i}") for i in range(64)]).alias("lo"),
+                F.array(*[F.col(f"hi{i}") for i in range(64)]).alias("hi"),
+                # r11 (guide §2.4): the SQ8 codec bounds are query- and
+                # level-independent; without the checkpoint every nprobe
+                # level's scoring job re-ran this 128-aggregate full-corpus
+                # pass (~0.67 s x 4 of the 11 s total at sf0.1)
+            ),
+            "bounds",
+        )
 
     def _ranked():
         wprobe = Window.partitionBy("query_id").orderBy(
             F.asc("cdist"), F.asc("cluster")
         )
-        return (
+        return barrier(
             queries.join(F.broadcast(cdf))
             .select(
                 "query_id",
@@ -4543,8 +4553,8 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "cluster",
                 sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
             )
-            .withColumn("prn", F.row_number().over(wprobe))
-            .localCheckpoint(eager=True)
+            .withColumn("prn", F.row_number().over(wprobe)),
+            "ranked",
         )
 
     # r11 wave 2 (guide §2.6): truth read, SQ8 bounds, and probe
@@ -4581,7 +4591,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
         F.expr(_SQ8_RECON_EXPR).alias("emb_sq8"),
     )
-    scored = (
+    scored = barrier(
         pruned_sq8.join(
             F.broadcast(probes),
             (F.col("list_id") == F.col("probe_cluster"))
@@ -4593,8 +4603,8 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "prn",
             cosine(F.col("q_emb"), F.col("embedding")).alias("cos_flat"),
             cosine(F.col("q_emb"), F.col("emb_sq8")).alias("cos_sq8"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "scored",
     )
     flat, sq8 = (
         _nested_level_recall(
@@ -4779,7 +4789,7 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize concurrently with the truth read and probe ranking
     # instead of serially inside the scoring job.
     def _codes():
-        return (
+        return barrier(
             vecsub.join(F.broadcast(centsub), "j")
             .select(
                 "vec_id",
@@ -4791,12 +4801,12 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .groupBy("vec_id", "j")
             .agg(F.min("dc").alias("best"))
-            .select("vec_id", "j", F.col("best.c").alias("code"))
-            .localCheckpoint(eager=True)
+            .select("vec_id", "j", F.col("best.c").alias("code")),
+            "codes",
         )
 
     def _adc():
-        return (
+        return barrier(
             vecsub.filter(
                 (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
             )
@@ -4809,23 +4819,23 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
                 .cast("long")
                 .alias("d9"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "adc",
         )
 
     def _ranked():
         wprobe = Window.partitionBy("query_id").orderBy(
             F.asc("cdist"), F.asc("cluster")
         )
-        return (
+        return barrier(
             queries.join(F.broadcast(cdf))
             .select(
                 "query_id",
                 "cluster",
                 sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
             )
-            .withColumn("prn", F.row_number().over(wprobe))
-            .localCheckpoint(eager=True)
+            .withColumn("prn", F.row_number().over(wprobe)),
+            "ranked",
         )
 
     # r11 wave 2 (guide §2.6): truth read, corpus PQ-encode, ADC
@@ -4860,7 +4870,7 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codes has exactly M rows per vector, and the ADC table carries
     # every (query, j, code) cell — the joins can neither drop nor
     # duplicate a candidate.
-    scored = (
+    scored = barrier(
         cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
         .join(
             F.broadcast(adc_r),
@@ -4869,8 +4879,8 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("code") == F.col("cent_id")),
         )
         .groupBy("query_id", "neighbor_id", "prn")
-        .agg(F.sum("d9").cast("long").alias("dist9"))
-        .localCheckpoint(eager=True)
+        .agg(F.sum("d9").cast("long").alias("dist9")),
+        "scored",
     )
     return (
         _nested_level_recall(
@@ -5049,16 +5059,16 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # through the argmin agg buffer 2 s slower here than this join —
     # which the planner executes as a broadcast of emb at bench scale.
     def _idx_pre():
-        return (
+        return barrier(
             assign_best(base, "embedding", "vec_id", cents)
             .select("vec_id", "cluster")
             .join(emb, "vec_id")
-            .select("vec_id", "cluster", "embedding")
-            .localCheckpoint(eager=True)
+            .select("vec_id", "cluster", "embedding"),
+            "idx_pre",
         )
 
     def _probes():
-        return (
+        return barrier(
             queries.join(F.broadcast(cdf))
             .select(
                 "query_id",
@@ -5070,8 +5080,8 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("prn") <= 2)
             .select(
                 "query_id", "q_emb", F.col("cluster").alias("probe_cluster")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "probes",
         )
 
     # r11 wave 2 (guide §2.6): the base-index build and the probe
@@ -5083,7 +5093,7 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(emb, "vec_id")
         .select("vec_id", "cluster", "embedding")
     )
-    idx_post = idx_pre.unionByName(idx_new).localCheckpoint(eager=True)
+    idx_post = barrier(idx_pre.unionByName(idx_new), "idx_post")
     wtop = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
@@ -5109,7 +5119,7 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _scored_post() -> DataFrame:
-        return (
+        return barrier(
             F.broadcast(probes)
             .join(
                 idx_post,
@@ -5120,8 +5130,8 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "query_id",
                 F.col("vec_id").alias("neighbor_id"),
                 cosine(F.col("q_emb"), F.col("embedding")).alias("cos_raw"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "scored_post",
         )
 
     # r11 wave 2 (guide §2.6): the candidate-scoring job and the two
@@ -5130,8 +5140,8 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the checkpointed probes) — overlap all three.
     scored_post, truth_post, truth_pre = overlap(
         _scored_post,
-        lambda: truth_over(emb).localCheckpoint(eager=True),
-        lambda: truth_over(base).localCheckpoint(eager=True),
+        lambda: barrier(truth_over(emb), "truth_post"),
+        lambda: barrier(truth_over(base), "truth_pre"),
     )
     # idx_pre is idx_post without the refresh rows, filed by the same
     # frozen quantizer, so the pre-phase candidates are exactly the
@@ -5318,7 +5328,7 @@ def embedding_pca_topk_deflation(
     import math
 
     emb = load_table(spark, sf_dir, "embeddings")
-    x = (
+    x = barrier(
         emb.select("vec_id", F.posexplode("embedding").alias("pos", "vf"))
         .select(
             "vec_id",
@@ -5326,8 +5336,8 @@ def embedding_pca_topk_deflation(
             F.round(F.col("vf").cast("double") * 1_000_000, 0)
             .cast("long")
             .alias("xq"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "coords",
     )
     rows = []
     for c in range(_PCA_K):
@@ -5384,7 +5394,7 @@ def embedding_pca_topk_deflation(
                     .alias("dotq")
                 )
             )
-            x = (
+            x = barrier(
                 x.join(dotf, "vec_id")
                 .select(
                     "vec_id",
@@ -5399,8 +5409,8 @@ def embedding_pca_topk_deflation(
                             + 0.5
                         ).cast("long")
                     ).alias("xq"),
-                )
-                .localCheckpoint(eager=True)
+                ),
+                f"deflate{c}",
             )
     return spark.createDataFrame(
         rows, "pc int, dim int, component double, eigval_est double"
@@ -5533,10 +5543,11 @@ def _semdedup_base_index(
         stride=_SEMDEDUP_INIT_EVERY, iters=_KMEANS_ITERS, nprobe=2,
         keep_vec=True, return_model=True,
     )
-    dbase = (
+    dbase = barrier(
         asgb.withColumn("nrm", norm(F.col("embedding")))
-        .withColumn("chunk", _semdedup_chunk_of())
-        .localCheckpoint(eager=False)
+        .withColumn("chunk", _semdedup_chunk_of()),
+        "dbase",
+        eager=False,
     )
     npart = spark.sparkContext.defaultParallelism
     cos = dot(F.col("emb_x"), F.col("emb_y")) / (
@@ -5562,7 +5573,7 @@ def _semdedup_base_index(
     # (the streaming twin and any sequential caller still get the
     # shared materialization they rely on).
     if not defer_kept:
-        kept = kept.localCheckpoint(eager=False)
+        kept = barrier(kept, "kept", eager=False)
     return kept, fine, coarse, npart
 
 
@@ -5596,9 +5607,15 @@ def _semdedup_incremental_frames(
     # 0.98 s/5 jobs + 0.43 s/8 jobs back-to-back at sf0.1). Overlap
     # them: same plans, same shuffles, same results — only the
     # wall-clock overlap changes, exactly the wave-2 frontier shape.
+    # The thunks do not both compute a shared lazy upstream: the fit's
+    # `fine`/`coarse` generations are materialized by dbase's barrier
+    # jobs before the fan-out, and only `kept` reads dbase (its input
+    # plan scans dbase and no fit frame; asgnew's scans the fit frames
+    # and embeddings, not dbase). `profile_query.py` at sf0.01: kept
+    # 5 jobs, asgnew 8, 69 for the query, as r12 profiled it.
     kept, asgnew = overlap(
-        lambda: kept_plan.localCheckpoint(eager=False),
-        lambda: asgnew_plan.localCheckpoint(eager=False),
+        lambda: barrier(kept_plan, "kept", eager=False),
+        lambda: barrier(asgnew_plan, "asgnew", eager=False),
     )
     return kept, asgnew, npart
 
@@ -6029,7 +6046,7 @@ def embedding_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the exact full-dim top-k is reused by every truncated variant —
     # checkpoint the Q*k-row set instead of re-ranking three times
-    full = topk(None).localCheckpoint(eager=True)
+    full = barrier(topk(None), "full")
     out: DataFrame | None = None
     for d in _MRL_DIMS:
         hits = (
@@ -6115,9 +6132,9 @@ def _pq_trained_codebooks(emb: DataFrame) -> DataFrame:
                 F.transform("pairs", lambda p: p["av"]).alias("nc"),
             )
         )
-        cb = (
+        cb = barrier(
             cb.join(F.broadcast(means), ["j", "cluster"], "left")
-            .select("j", "cluster", F.coalesce("nc", "csub").alias("csub"))
+            .select("j", "cluster", F.coalesce("nc", "csub").alias("csub")),
             # per-generation checkpoint (r11, guide §2.4): each
             # iteration's asg/means otherwise compound into ONE deep
             # plan whose analysis + nested broadcast stages dominated —
@@ -6128,7 +6145,8 @@ def _pq_trained_codebooks(emb: DataFrame) -> DataFrame:
             # train is ONE blocking job instead of one per iteration
             # (and the pq_rerank overlap thunk still drives all the
             # work, because the last checkpoint remains eager).
-            .localCheckpoint(eager=(_it == _PQ_TRAIN_ITERS - 1))
+            f"pq_train{_it}",
+            eager=(_it == _PQ_TRAIN_ITERS - 1),
         )
     return cb
 
@@ -6400,7 +6418,7 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         "j",
         F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
     )
-    codes = (
+    codes = barrier(
         vecsub.join(F.broadcast(cb), "j")
         .select(
             "vec_id",
@@ -6412,10 +6430,11 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("vec_id", "j")
         .agg(F.min("dc").alias("best"))
-        .select("vec_id", "j", F.col("best.c").alias("code"))
-        .localCheckpoint(eager=False)
+        .select("vec_id", "j", F.col("best.c").alias("code")),
+        "codes",
+        eager=False,
     )
-    adc = (
+    adc = barrier(
         vecsub.filter(
             (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
         )
@@ -6428,8 +6447,9 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
             .cast("long")
             .alias("d9"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "adc",
+        eager=False,
     )
     pruned = fact.select("vec_id", "list_id").filter(
         F.col("list_id").isin(ids)
@@ -6458,20 +6478,21 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     wshort = Window.partitionBy("query_id").orderBy(
         F.asc("dist9"), F.asc("neighbor_id")
     )
-    short = (
+    short = barrier(
         scored.withColumn("srn", F.row_number().over(wshort))
         .filter(F.col("srn") <= max(_RERANK_SIZES))
-        .select("query_id", "neighbor_id", "srn")
+        .select("query_id", "neighbor_id", "srn"),
         # eager=False (r11 wave 2): the shortlist feeds exactly one
         # consumer (the hydration below, itself eagerly checkpointed),
         # so the eager form was a pure job barrier; measured A/B vs
         # eager was a wash at sf0.1 (med 6.45 vs 6.59) — lazy kept for
         # the one-fewer-driver-barrier shape (guide §2.6/§5).
-        .localCheckpoint(eager=False)
+        "short",
+        eager=False,
     )
     # Stage 2: hydrate ONLY the shortlist (one broadcast equi-join into
     # the full-precision table) and re-rank by exact L2.
-    hydr = (
+    hydr = barrier(
         emb.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c_emb"),
@@ -6483,8 +6504,8 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "srn",
             sqdist(F.col("q_emb"), F.col("c_emb")).alias("l2"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "hydr",
     )
     # the shortlist depths are nested (srn <= size): every depth is a
     # slice of the one hydrated, exactly scored shortlist
@@ -6686,13 +6707,13 @@ def ann_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan stage by stage, which costs more than the three small jobs'
     # fixed overhead — the same deep-plan cliff _pq_trained_codebooks
     # documents. Kept eager; recorded so it isn't re-tried.)
-    short = (
+    short = barrier(
         ham.withColumn("srn", F.row_number().over(ws))
         .filter(F.col("srn") <= max(_BQ_SIZES))
-        .select("query_id", "neighbor_id", "srn")
-        .localCheckpoint(eager=True)
+        .select("query_id", "neighbor_id", "srn"),
+        "short",
     )
-    hydr = (
+    hydr = barrier(
         emb.select(
             F.col("vec_id").alias("neighbor_id"),
             F.col("embedding").alias("c_emb"),
@@ -6704,8 +6725,8 @@ def ann_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "srn",
             cosine(F.col("q_emb"), F.col("c_emb")).alias("cos"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "hydr",
     )
     # exact cosine truth (the metric binary signatures approximate)
     # from the SHARED persisted artifact (VERDICT r10 #2; _BQ_QLO/_QHI
@@ -6955,12 +6976,12 @@ def pq_rerank_hydration_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.asc("dist9"), F.asc("neighbor_id")
     )
     # attach q_emb BEFORE the checkpoint so the gate frame is ONE join
-    short = (
+    short = barrier(
         scored.withColumn("srn", F.row_number().over(wshort))
         .filter(F.col("srn") <= cap)
         .join(F.broadcast(queries), "query_id")
-        .select("query_id", "neighbor_id", "srn", "q_emb")
-        .localCheckpoint(eager=True)
+        .select("query_id", "neighbor_id", "srn", "q_emb"),
+        "short",
     )
     n_short = short.count()
     gate = (
@@ -7190,11 +7211,11 @@ def _nnd_graphs(
         .distinct()
     )
     if keep_cands:
-        init = init.localCheckpoint(eager=True)
-    g = topk(score(init)).localCheckpoint(eager=True)
+        init = barrier(init, "init")
+    g = barrier(topk(score(init)), "graph0")
     cands = [init]
     graphs = [g]
-    for _ in range(_NND_ITERS):
+    for it in range(_NND_ITERS):
         rev = (
             g.withColumn(
                 "rr",
@@ -7218,13 +7239,13 @@ def _nnd_graphs(
             .distinct()
         )
         if keep_cands:
-            cand = cand.localCheckpoint(eager=True)
+            cand = barrier(cand, f"cand{it + 1}")
         merged = (
             g.unionAll(score(cand))
             .groupBy("u", "v")
             .agg(F.min("d9").alias("d9"))
         )
-        g = topk(merged).localCheckpoint(eager=True)
+        g = barrier(topk(merged), f"graph{it + 1}")
         cands.append(cand)
         graphs.append(g)
     return graphs, cands, ncnt
@@ -7338,14 +7359,14 @@ def ann_nndescent_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample = emb.filter(
         (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
     ).select(F.col("vec_id").alias("u"), F.col("embedding").alias("u_emb"))
-    truth = (
+    truth = barrier(
         F.broadcast(sample)
         .join(right, F.col("u") != F.col("v"))
         .select("u", "v", d9(F.col("u_emb"), F.col("v_emb")).alias("d9"))
         .withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") <= _NND_K)
-        .select("u", "v")
-        .localCheckpoint(eager=True)
+        .select("u", "v"),
+        "truth",
     )
     slots = truth.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_truth_slots")
@@ -7699,7 +7720,7 @@ def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         vis = visited.unionAll(cand).distinct()
-        scored = (
+        scored = barrier(
             vis.join(corpus, "v")
             .join(F.broadcast(queries), "query_id")
             .select(
@@ -7708,8 +7729,8 @@ def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor(sqdist(F.col("q_emb"), F.col("v_emb")) * _PQ_SCALE)
                 .cast("long")
                 .alias("d9"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"scored{hop}",
         )
         beam = (
             scored.withColumn("rn", F.row_number().over(wbeam))

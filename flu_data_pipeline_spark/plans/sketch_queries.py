@@ -36,6 +36,7 @@ from flu_data_pipeline_spark.functions.hashing import (
     minhash_value_sql,
 )
 from flu_data_pipeline_spark.operators.dedup import tokenize
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 _TOKENS = "regexp_split_to_array(lower(trim(text)), '\\s+')"
@@ -115,11 +116,11 @@ def cms_term_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entry, not once per token occurrence — at 100 TB the vocabulary is
     # orders of magnitude smaller than the stream, and this groupBy is
     # map-side combined anyway.
-    exact = (
+    exact = barrier(
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        .withColumn("h", hash64("term") % HASH64_MOD)  # md5 ONCE per term
-        .localCheckpoint()  # sketch + top-k branches share one computation
+        .withColumn("h", hash64("term") % HASH64_MOD),  # md5 ONCE per term
+        "exact",  # sketch + top-k branches share one computation
     )
 
     def bucketed(df: DataFrame) -> DataFrame:

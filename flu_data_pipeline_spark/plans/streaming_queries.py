@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64_sql
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 from flu_data_pipeline_spark.plans.window_queries import SESSIONS_CTE_SQL
 
@@ -497,14 +498,15 @@ def _register_semdedup_stream() -> None:
         verdicts: list = []
 
         def _absorb(batch_df: DataFrame, _batch_id: int) -> None:
-            asgnew = (
+            asgnew = barrier(
                 twolevel_assign(
                     batch_df, "embedding", "vec_id",
                     fine, coarse, nprobe=2, keep_vec=True,
                 )
                 .withColumn("nrm", norm(F.col("embedding")))
-                .withColumn("chunk", _semdedup_chunk_of())
-                .localCheckpoint(eager=False)
+                .withColumn("chunk", _semdedup_chunk_of()),
+                "asgnew",
+                eager=False,
             )
             verdicts.extend(
                 _semdedup_refresh_verdict(asgnew, kept, npart).collect()

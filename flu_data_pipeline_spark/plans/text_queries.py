@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
 from flu_data_pipeline_spark.functions.hashing import hash64, hash64_sql
 from flu_data_pipeline_spark.operators.dedup import tokenize
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 #: tiny English-stopword list for the language-ID / quality heuristics
@@ -1142,16 +1143,17 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs one scan with a corpus-dwarfing one. Cluster caveat noted in
     # OPTIMIZATION_r12.md: localCheckpoint truncates lineage to
     # ephemeral executor storage (ADVICE r11 #3).
-    bigram = (
+    bigram = barrier(
         pairs.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("bc"))
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).alias("bc")),
+        "bigram",
+        eager=False,
     )
     unigram = bigram.groupBy("w1").agg(F.sum("bc").alias("uc"))
     vocab = all_toks.select(F.explode("toks").alias("w")).agg(
         F.countDistinct("w").alias("v")
     )
-    scored = (
+    scored = barrier(
         pairs.join(bigram, ["w1", "w2"])
         .join(unigram, "w1")
         .crossJoin(F.broadcast(vocab))
@@ -1167,14 +1169,15 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 6,
             ).alias("avg_logprob"),
-        )
+        ),
         # the per-doc score table is doc-cardinality (3 skinny columns
         # per doc — scale-safe to hold, unlike the token stream), and
         # curation_ccnet_ppl_buckets' global-ntile references it more
         # than once — without this, each reference re-runs the full
         # corpus scan+tokenize+score chain (measured: ccnet 1.6 -> 4.0 s
         # at sf0.1 when only the model table was checkpointed).
-        .localCheckpoint(eager=False)
+        "scored",
+        eager=False,
     )
     return scored
 
@@ -1927,7 +1930,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     )
     # The vocabulary frame is tiny (distinct words); checkpoint each
     # round so the returned plan doesn't re-derive v0 2^T times.
-    vocab = vocab.localCheckpoint(eager=True)
+    vocab = barrier(vocab, "vocab")
     merges: list[DataFrame] = []
     for t in range(1, BPE_MERGES + 1):
         syms = F.split(F.col("seq"), " ")
@@ -1952,10 +1955,11 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         # lazily the next vocab rewrite's eager checkpoint materializes
         # it in the same job (one job per merge round instead of two)
         # while the merge-table output still reads the materialized RDD.
-        best = (
+        best = barrier(
             pairs.orderBy(F.desc("c"), F.asc("x"), F.asc("y"))
-            .limit(1)
-            .localCheckpoint(eager=False)
+            .limit(1),
+            f"best{t}",
+            eager=False,
         )
         merges.append(best.withColumn("merge_rank", F.lit(t)))
         padded = F.concat(
@@ -1966,7 +1970,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             F.lit(" "), F.col("x"), F.lit("  "), F.col("y"), F.lit(" ")
         )
         repl = F.concat(F.lit(" "), F.col("x"), F.col("y"), F.lit(" "))
-        vocab = (
+        vocab = barrier(
             vocab.crossJoin(F.broadcast(best))
             .select(
                 "word",
@@ -1978,8 +1982,8 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                         F.lit(" "),
                     )
                 ).alias("seq"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"vocab{t}",
         )
     return vocab, merges
 
@@ -2187,7 +2191,7 @@ def _uni_iter_sql(it: int) -> str:
 def _uni_words(docs: DataFrame) -> DataFrame:
     """(word, cnt): the frequency-weighted training word table —
     whitespace words, lowercased, length-capped at _UNI_WMAX."""
-    return (
+    return barrier(
         docs.select(
             F.explode(
                 F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -2198,8 +2202,8 @@ def _uni_words(docs: DataFrame) -> DataFrame:
             & (F.length("word") <= _UNI_WMAX)
         )
         .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
+        "uni_words",
     )
 
 
@@ -2226,7 +2230,7 @@ def _uni_seed_vocab(words: DataFrame) -> DataFrame:
     vset = top.union(chars1).distinct()
     vc0 = cands.join(vset, "piece")
     tot0 = vc0.agg(F.sum("c").cast("double").alias("tot"))
-    return (
+    return barrier(
         vc0.crossJoin(F.broadcast(tot0))
         .select(
             "piece",
@@ -2235,8 +2239,8 @@ def _uni_seed_vocab(words: DataFrame) -> DataFrame:
             )
             .cast("long")
             .alias("s"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "uni_seed_vocab",
     )
 
 
@@ -2345,11 +2349,11 @@ def _uni_train(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     words = _uni_words(docs)
     vocab = _uni_seed_vocab(words)
     counts = None
-    for _ in range(_UNI_EM):
-        counts = (
+    for it in range(_UNI_EM):
+        counts = barrier(
             _uni_viterbi_pieces(words, vocab)
             .groupBy("piece")
-            .agg(F.sum("cnt").cast("bigint").alias("vc"))
+            .agg(F.sum("cnt").cast("bigint").alias("vc")),
             # eager=False (r11 wave 3, guide §2.4): counts feeds the
             # round's vocab checkpoint (and, in the final round, the
             # caller's output job) — the eager form was one extra
@@ -2357,7 +2361,8 @@ def _uni_train(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
             # inside the vocab checkpoint's job, halving the round's
             # barriers (the text_bpe_train_merges per-round-argmax
             # pattern).
-            .localCheckpoint(eager=False)
+            f"em{it}_counts",
+            eager=False,
         )
         sm = vocab.select("piece").join(counts, "piece", "left").select(
             "piece",
@@ -2366,7 +2371,7 @@ def _uni_train(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
             .alias("c"),
         )
         tot = sm.agg(F.sum("c").cast("double").alias("tot"))
-        vocab = (
+        vocab = barrier(
             sm.crossJoin(F.broadcast(tot))
             .select(
                 "piece",
@@ -2376,8 +2381,8 @@ def _uni_train(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
                 )
                 .cast("long")
                 .alias("s"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"em{it}_vocab",
         )
     return words, vocab, counts
 
@@ -2847,13 +2852,16 @@ def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    vocab = words.select(
-        "word",
-        "cnt",
-        F.array_join(F.regexp_extract_all("word", F.lit("."), 0), " ").alias(
-            "seq"
+    vocab = barrier(
+        words.select(
+            "word",
+            "cnt",
+            F.array_join(F.regexp_extract_all("word", F.lit("."), 0), " ").alias(
+                "seq"
+            ),
         ),
-    ).localCheckpoint(eager=True)
+        "vocab",
+    )
     merges: list[DataFrame] = []
     for t in range(1, _WP_MERGES + 1):
         syms = F.split(F.col("seq"), " ")
@@ -2889,7 +2897,7 @@ def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             ),
             "y",
         )
-        best = (
+        best = barrier(
             scored.orderBy(
                 F.desc(
                     F.col("c").cast("double") / (F.col("cx") * F.col("cy"))
@@ -2898,14 +2906,15 @@ def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                 F.asc("y"),
             )
             .limit(1)
-            .select("x", "y", "c", "cx", "cy")
+            .select("x", "y", "c", "cx", "cy"),
             # eager=False (r11 wave 3): the round's vocab rewrite is
             # eagerly checkpointed right below and materializes this
             # 1-row argmax in the same job — the eager form was a
             # separate blocking job per merge round just to pick one
             # row (the text_bpe_train_merges fix, applied to its
             # WordPiece sibling).
-            .localCheckpoint(eager=False)
+            f"best{t}",
+            eager=False,
         )
         merges.append(best.withColumn("merge_rank", F.lit(t)))
         padded = F.concat(
@@ -2917,7 +2926,7 @@ def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             F.lit(" "), F.col("x"), F.lit("  "), F.col("y"), F.lit(" ")
         )
         repl = F.concat(F.lit(" "), F.col("x"), F.col("y"), F.lit(" "))
-        vocab = (
+        vocab = barrier(
             vocab.crossJoin(F.broadcast(best))
             .select(
                 "word",
@@ -2929,8 +2938,8 @@ def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
                         F.lit(" "),
                     )
                 ).alias("seq"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"vocab{t}",
         )
     return vocab, merges
 
@@ -3768,11 +3777,14 @@ _WINNOW_DF_CAP = 64
 )
 def dedup_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = _winnow_fingerprints(spark, sf_dir)
-    posts = fp.select(
-        "doc_id",
-        F.size("fps").cast("bigint").alias("n_fp"),
-        F.explode("fps").alias("f"),
-    ).localCheckpoint(eager=True)  # feeds the df filter AND both join sides
+    posts = barrier(
+        fp.select(
+            "doc_id",
+            F.size("fps").cast("bigint").alias("n_fp"),
+            F.explode("fps").alias("f"),
+        ),
+        "posts",
+    )  # feeds the df filter AND both join sides
     rare = (
         posts.groupBy("f")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -3886,7 +3898,7 @@ def _winnow_pos_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _win_min(j):
         return F.array_min(F.slice("h", j, w))
 
-    posts = (
+    posts = barrier(
         kg.select(
             "doc_id",
             "h",
@@ -3908,8 +3920,8 @@ def _winnow_pos_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "pos",
             F.element_at("h", F.col("pos")).alias("f"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "posts",
     )
     rare = (
         posts.groupBy("f")
@@ -3917,7 +3929,7 @@ def _winnow_pos_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("df") <= _WINNOW_DF_CAP)
         .select("f")
     )
-    return posts.join(rare, "f").localCheckpoint(eager=True)
+    return barrier(posts.join(rare, "f"), "winnow_pos_index")
 
 
 @register(
@@ -4859,9 +4871,9 @@ _REMOVAL_APPLY_CTES = f"""
 )
 def text_dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    spans = (
+    spans = barrier(
         _removal_plan_frame(docs)
-        .select("doc_id", "span_start", "span_end")
+        .select("doc_id", "span_start", "span_end"),
         # r11 wave 3 (guide §2.4): the span frame feeds FOUR consumers
         # (gaps_mid, gaps_tail, the no-span anti-join inside
         # _cleaned_text_frame, and the n_spans stats below) — without
@@ -4869,7 +4881,8 @@ def text_dedup_removal_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pipeline is planned and executed once per consumer. Lazy:
         # materialized inside the final job, no extra barrier (the
         # _cleaned_corpus_paths fix, applied to the verify query).
-        .localCheckpoint(eager=False)
+        "spans",
+        eager=False,
     )
     cleaned = _cleaned_text_frame(docs, spans)
     stats = spans.groupBy("doc_id").agg(
@@ -4927,10 +4940,11 @@ def _cleaned_corpus_paths(
     # removed-chars reconciliation scan; without it both evaluated the
     # full winnowing/span pipeline from scratch. Returned to the caller
     # so corpus_cleaned_write_pipeline reads the same materialization.
-    spans = (
+    spans = barrier(
         _removal_plan_frame(docs)
-        .select("doc_id", "span_start", "span_end", "bytes_removed")
-        .localCheckpoint(eager=False)
+        .select("doc_id", "span_start", "span_end", "bytes_removed"),
+        "spans",
+        eager=False,
     )
     cleaned = (
         _cleaned_text_frame(docs, spans)
@@ -5353,19 +5367,19 @@ def tokenizer_vocab_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     bunits = bmerges[0].select(F.concat("x", "y").alias("u"))
     for m in bmerges[1:]:
         bunits = bunits.union(m.select(F.concat("x", "y").alias("u")))
-    bunits = bunits.distinct().localCheckpoint(eager=True)
+    bunits = barrier(bunits.distinct(), "bunits")
     _, wmerges = _wp_train(docs)
     wunits = wmerges[0].select(F.concat("x", "y").alias("u"))
     for m in wmerges[1:]:
         wunits = wunits.union(m.select(F.concat("x", "y").alias("u")))
-    wunits = wunits.distinct().localCheckpoint(eager=True)
+    wunits = barrier(wunits.distinct(), "wunits")
     _, uvocab, ucounts = _uni_train(docs)
-    uunits = (
+    uunits = barrier(
         ucounts.join(uvocab, "piece")
         .filter(F.length("piece") >= 2)
         .select(F.col("piece").alias("u"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "uunits",
     )
     import math
 

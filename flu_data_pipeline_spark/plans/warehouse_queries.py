@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
 
 
@@ -1025,15 +1026,15 @@ def brand_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the join+aggregate FOUR times), so materialize the basket frame once
     # with an eager localCheckpoint; order-count rows are tiny (1 row per
     # order, few-byte brand arrays).
-    baskets = (
+    baskets = barrier(
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .select(
             F.col("l_orderkey").alias("orderkey"),
             F.col("p_brand").alias("brand"),
         )
         .groupBy("orderkey")
-        .agg(F.array_sort(F.collect_set("brand")).alias("brands"))
-        .localCheckpoint(eager=True)
+        .agg(F.array_sort(F.collect_set("brand")).alias("brands")),
+        "baskets",
     )
     norders = baskets.agg(F.count(F.lit(1)).cast("double").alias("n"))
     brand_n = (

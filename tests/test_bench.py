@@ -75,20 +75,33 @@ def test_verdict_compares_only_shared_queries():
 
 
 def test_bench_sidecar_roundtrip(tmp_path):
-    # the JSON line survives stdout-tail truncation via the
-    # bench_last.json sidecar, and anchors the next reading at its sf
-    line = json.dumps({"metric": "m", "value": 1.0, "queries": {},
-                       "sf": 0.1, "work": {"a": _work(1.0)}})
-    bench._write_sidecar(str(tmp_path), line)
+    # the record survives stdout-tail truncation via the bench_last.json
+    # sidecar, and anchors the next reading at its sf
+    rec = {"metric": "m", "value": 1.0, "queries": {}, "sf": 0.1,
+           "work": {"a": _work(1.0), "b": _work(2.0)}}
+    bench._write_sidecar(str(tmp_path), rec, merge=False)
     with open(tmp_path / "bench_last.json") as fh:
-        assert json.loads(fh.read()) == json.loads(line)
-    assert bench._read_sidecar(str(tmp_path), 0.1) == {"a": _work(1.0)}
+        assert json.loads(fh.read()) == rec
+    assert bench._read_sidecar(str(tmp_path), 0.1) == rec["work"]
     assert bench._read_sidecar(str(tmp_path), 0.01) is None
+    # a named-subset run merges its work into the same-sf anchor, so the
+    # next full sweep is still compared over every query
+    sub = {**rec, "work": {"a": _work(1.5)}}
+    bench._write_sidecar(str(tmp_path), sub, merge=True)
+    assert bench._read_sidecar(str(tmp_path), 0.1) == {
+        "a": _work(1.5), "b": _work(2.0)}
+    # a subset at another sf replaces it, and so does a full sweep
+    bench._write_sidecar(str(tmp_path), {**sub, "sf": 0.01}, merge=True)
+    assert bench._read_sidecar(str(tmp_path), 0.01) == {"a": _work(1.5)}
+    assert bench._read_sidecar(str(tmp_path), 0.1) is None
+    bench._write_sidecar(str(tmp_path), rec, merge=False)
+    bench._write_sidecar(str(tmp_path), {**rec, "work": {"c": _work(3.0)}},
+                         merge=False)
+    assert bench._read_sidecar(str(tmp_path), 0.1) == {"c": _work(3.0)}
     # a sidecar from before the work block, or a torn one, anchors nothing
-    bench._write_sidecar(str(tmp_path), json.dumps({"sf": 0.1, "value": 1.0}))
-    assert bench._read_sidecar(str(tmp_path), 0.1) is None
-    bench._write_sidecar(str(tmp_path), '{"sf": 0.1, "wo')
-    assert bench._read_sidecar(str(tmp_path), 0.1) is None
+    for text in (json.dumps({"sf": 0.1, "value": 1.0}), '{"sf": 0.1, "wo'):
+        (tmp_path / "bench_last.json").write_text(text)
+        assert bench._read_sidecar(str(tmp_path), 0.1) is None
 
 
 def test_median_work_is_per_key():
@@ -162,3 +175,28 @@ def test_warmed_query_timed_runs_compile_nothing(spark):
     runs = [bench.measure(spark, store, run)[1] for _ in range(3)]
     assert [r["compiles"] for r in runs] == [0, 0, 0]
     assert bench.median_work(runs)["compiles"] == 0
+
+
+def test_profile_query_rows_sum_to_the_pass(spark, tmp_path):
+    """``scripts/profile_query.py``: one row per barrier plus the query's
+    other jobs, whose jobs sum to the profiled pass's, and one input-plan
+    file per barrier checkpoint, each the plan before the checkpoint."""
+    spec = importlib.util.spec_from_file_location(
+        "profile_query_mod",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "scripts", "profile_query.py"),
+    )
+    pq = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pq)
+
+    rows = pq.profile(spark, "huber_irls_regression", SF_SMOKE, str(tmp_path))
+    *parts, total = rows
+    assert total["label"] == "total"
+    assert [r["label"] for r in parts] == ["pts", "irls0", "irls1", "(query)"]
+    assert sum(r["jobs"] for r in parts) == total["jobs"] > 0
+    files = sorted(os.listdir(tmp_path))
+    assert files == ["00_pts.txt", "01_irls0.txt", "02_irls1.txt"]
+    # the first barrier's input is the lineitem scan itself; later ones
+    # read the rows a previous checkpoint pinned
+    assert "Scan parquet" in (tmp_path / "00_pts.txt").read_text()
+    assert "Scan ExistingRDD" in (tmp_path / "01_irls0.txt").read_text()

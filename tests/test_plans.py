@@ -774,3 +774,52 @@ def test_pq_rerank_hydration_metric_negative(spark):
 
     assert hydrated_rows(dup=False) == 3   # == shortlist count
     assert hydrated_rows(dup=True) == 4    # duplicate widens the join
+
+
+def test_barrier_names_the_jobs_it_runs(spark):
+    """``barrier`` labels every job its checkpoint submits ``outer/label``:
+    all of an eager barrier's jobs, and a lazy barrier's AQE shuffle-stage
+    jobs at the call (its final stage runs later, under the consumer's
+    label). Barriers in sibling ``overlap`` thunks keep their own labels,
+    and the outer description is restored after each."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from flu_data_pipeline_spark.operators.materialize import (
+        barrier,
+        job_label,
+        overlap,
+    )
+    from perfbench.spans import StatusStore
+
+    store = StatusStore(spark)
+    sc = spark.sparkContext
+
+    def agg(n):  # one shuffle, so AQE runs a map stage before the result
+        return spark.range(n).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def descs(token):
+        jobs, _ = store._read()
+        return Counter(j.get("description") for j in jobs if j["jobId"] > token[0])
+
+    with job_label(spark, "outer"):
+        t = store.mark()
+        eager = barrier(agg(100), "eager")
+        n_eager = descs(t)["outer/eager"]
+        assert n_eager >= 2 and descs(t) == {"outer/eager": n_eager}
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+
+        t = store.mark()
+        lazy = barrier(agg(200), "lazy", eager=False)
+        assert set(descs(t)) == {"outer/lazy"}
+        t = store.mark()
+        assert lazy.agg(F.sum("count")).first()[0] == 200
+        assert "outer/lazy" not in descs(t) and descs(t)["outer"] >= 1
+
+        t = store.mark()
+        a, b = overlap(lambda: barrier(agg(300), "a"), lambda: barrier(agg(400), "b"))
+        assert descs(t) == {"outer/a": n_eager, "outer/b": n_eager}
+        assert sc.getLocalProperty("spark.job.description") == "outer"
+    assert sc.getLocalProperty("spark.job.description") is None
+    assert [eager.count(), a.count(), b.count()] == [7, 7, 7]

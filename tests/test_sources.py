@@ -950,38 +950,75 @@ def test_derived_table_builds_only_when_stale(tmp_path):
         shutil.rmtree(kind_dir, ignore_errors=True)
 
 
-#: Literals only ``catalog.py`` may hold: a bare parquet read (schema
-#: inference with a Spark job on every call; use ``catalog.read_parquet``)
-#: and the persisted-artifact path and marker (use
-#: ``catalog.derived_table``).
-_CATALOG_ONLY = {
-    "bare_parquet_read": r"\.read\s*\.\s*(parquet\s*\(|format\(\s*['\"]parquet)",
-    "testdata_path": r"['\"]\.testdata",
-    "artifact_marker": r"_SRC_FINGERPRINT",
+#: Literals each held by one module only, as ``name: (module, pattern,
+#: a stray use the pattern must catch)``. ``catalog.py`` holds a bare
+#: parquet read (schema inference with a Spark job on every call; use
+#: ``catalog.read_parquet``) and the persisted-artifact path and marker
+#: (use ``catalog.derived_table``). ``operators/materialize.py`` holds
+#: every checkpoint and persist (use ``materialize.barrier``).
+#: ``sources/writers.py`` holds the one cache: ``idempotent_append``
+#: caches its anti-joined increment for a count and a write and
+#: unpersists it before returning, a lifetime scoped to one call that no
+#: barrier has, and ``etl_load`` measures it.
+_ONE_MODULE_ONLY = {
+    "bare_parquet_read": (
+        "catalog.py",
+        r"\.read\s*\.\s*(parquet\s*\(|format\(\s*['\"]parquet)",
+        "spark.read.parquet(path)",
+    ),
+    "testdata_path": (
+        "catalog.py", r"['\"]\.testdata", 'os.path.join(ROOT, ".testdata", "x")'
+    ),
+    "artifact_marker": (
+        "catalog.py", r"_SRC_FINGERPRINT", 'os.path.join(path, "_SRC_FINGERPRINT")'
+    ),
+    "local_checkpoint": (
+        "operators/materialize.py", r"localCheckpoint\(", "df.localCheckpoint()"
+    ),
+    "reliable_checkpoint": (
+        "operators/materialize.py", r"\.checkpoint\(", "df.checkpoint()"
+    ),
+    "persist": ("operators/materialize.py", r"\.persist\(", "df.persist()"),
+    "cache": ("sources/writers.py", r"\.cache\(\)", "df.cache()"),
 }
 
 
-@pytest.mark.parametrize("literal", sorted(_CATALOG_ONLY))
-def test_no_schema_inferring_parquet_read_outside_catalog(literal):
-    """Every parquet read and every persisted derived table in the
-    package goes through ``catalog``, so a bare read that infers the
-    schema with a Spark job on every call, or a second hand-rolled
-    artifact cache, cannot come back."""
+def _offenders(root: str, literal: str) -> list[str]:
+    """``path:line`` of every match of ``literal``'s pattern in the
+    package under ``root`` outside the module that may hold it."""
     import glob
     import re
 
+    module, pattern, _ = _ONE_MODULE_ONLY[literal]
+    found = []
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, root)
+        if rel == module:
+            continue
+        with open(path) as fh:
+            text = fh.read()
+        for m in re.finditer(pattern, text):
+            found.append(f"{rel}:{text.count(chr(10), 0, m.start()) + 1}")
+    return found
+
+
+@pytest.mark.parametrize("literal", sorted(_ONE_MODULE_ONLY))
+def test_no_schema_inferring_parquet_read_outside_catalog(literal, tmp_path):
+    """Every parquet read and every persisted derived table in the
+    package goes through ``catalog``, and every driver-side
+    materialization through ``materialize.barrier``, so a bare read that
+    infers the schema with a Spark job on every call, a second
+    hand-rolled artifact cache, or a checkpoint that picks its own
+    policy and names no jobs cannot come back. A stray copy of the
+    literal in another module is caught."""
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "flu_data_pipeline_spark",
     )
-    pattern = re.compile(_CATALOG_ONLY[literal])
-    offenders = []
-    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
-        if os.path.relpath(path, root) == "catalog.py":
-            continue
-        with open(path) as fh:
-            text = fh.read()
-        for m in pattern.finditer(text):
-            line = text.count("\n", 0, m.start()) + 1
-            offenders.append(f"{os.path.relpath(path, root)}:{line}")
-    assert not offenders, f"{literal} outside catalog.py: {offenders}"
+    module, _, stray = _ONE_MODULE_ONLY[literal]
+    offenders = _offenders(root, literal)
+    assert not offenders, f"{literal} outside {module}: {offenders}"
+
+    (tmp_path / "plans").mkdir()
+    (tmp_path / "plans" / "stray.py").write_text(stray + "\n")
+    assert _offenders(str(tmp_path), literal) == ["plans/stray.py:1"]
