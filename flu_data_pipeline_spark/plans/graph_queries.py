@@ -753,16 +753,18 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def half_step(scores: DataFrame, score_col: str, join_on: str,
-                  group_as: str, out_col: str) -> DataFrame:
+                  group_as: str, out_col: str, it: int) -> DataFrame:
         """One HITS half-iteration: push scores across edges (join on
         ``join_on``, sum per ``group_as`` endpoint), L1-normalize with a
-        broadcast total, round 8dp. Nodes with no mass get 0."""
+        broadcast total, round 8dp. Nodes with no mass get 0. Its two
+        barriers are labelled ``<out_col><it>_raw`` and ``<out_col><it>``,
+        so a profile reads each iteration's cost on its own row."""
         raw = (
             edges.join(scores, edges[join_on] == scores["node"])
             .groupBy(F.col(group_as).alias("gnode"))
             .agg(F.sum(F.col("w") * F.col(score_col)).alias("raw"))
         )
-        raw = barrier(raw, "raw")  # referenced twice (join + total)
+        raw = barrier(raw, f"{out_col}{it}_raw")  # referenced twice (join + total)
         tot = raw.agg(F.sum("raw").alias("tot"))
         return barrier(
             nodes.join(raw, nodes["node"] == raw["gnode"], "left")
@@ -775,13 +777,13 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             # O(nodes)-sized: eager checkpoint keeps the per-iteration
             # plan constant instead of doubling every half-step
-            "half_step",
+            f"{out_col}{it}",
         )
 
     auth = None
-    for _ in range(_HITS_ITERS):
-        auth = half_step(hub, "hub", "src", "dst", "auth")
-        hub = half_step(auth, "auth", "dst", "src", "hub")
+    for it in range(_HITS_ITERS):
+        auth = half_step(hub, "hub", "src", "dst", "auth", it)
+        hub = half_step(auth, "auth", "dst", "src", "hub", it)
     return (
         hub.join(auth, "node")
         .join(F.broadcast(nation), F.col("node") == F.col("n_nationkey"))

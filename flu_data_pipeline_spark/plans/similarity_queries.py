@@ -553,13 +553,17 @@ def array_predicate_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Iterative k-means (Lloyd's) with an exact unrolled SQL oracle
+# Iterative k-means (Lloyd's) with an exact unrolled SQL oracle.
+# _probe_ranks is the one IVF probe ranking: every query's distance and
+# rank to every trained centroid, ties broken as the assignment breaks them.
 # ---------------------------------------------------------------------------
 
 from flu_data_pipeline_spark.operators.clustering import (  # noqa: E402
     assign_best,
+    centroid_df,
     kmeans_fit,
     kmeans_oracle_sql,
+    sqdist,
     twolevel_assign,
     twolevel_kmeans_assigned,
     twolevel_kmeans_oracle_sql,
@@ -889,6 +893,23 @@ def dedup_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probe_ranks(queries: DataFrame, cdf: DataFrame) -> DataFrame:
+    """``queries`` (query_id, q_emb, ...) crossed with every centroid of
+    ``cdf`` (cluster, c): adds cluster, its sqdist ``cdist`` and the
+    probe rank ``prn`` by (cdist, cluster), assign_best's tie rule.
+    Unfiltered: a caller probes ``prn <= nprobe``."""
+    w = Window.partitionBy("query_id").orderBy(F.asc("cdist"), F.asc("cluster"))
+    return (
+        queries.join(F.broadcast(cdf))
+        .select(
+            *queries.columns,
+            "cluster",
+            sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
+        )
+        .withColumn("prn", F.row_number().over(w))
+    )
+
+
 # sqdist between a vector and a centroid list, pinned fold order (oracle)
 _SQDIST_IVF_SQL = (
     "list_reduce(list_transform(range(1, 64 + 1), "
@@ -954,8 +975,6 @@ _IVF_KMEANS_SEARCH_SQL = f""",
     tags=("similarity", "ivf", "clustering"),
 )
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import centroid_df, sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, "embedding", "vec_id", k=_KMEANS_K, iters=_KMEANS_ITERS)
     # r11 (guide §2.4): keep_vec rides the embedding through the
@@ -963,18 +982,11 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_best(
         emb, "embedding", "vec_id", cents, keep_vec=True
     ).select("vec_id", "embedding", F.col("cluster").alias("cluster_id"))
-    cdf = centroid_df(spark, cents)
-    wprobe = Window.partitionBy("query_id").orderBy(F.asc("cdist"), F.asc("cluster"))
+    queries = emb.filter(
+        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     probes = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105))
-        .join(F.broadcast(cdf))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "cluster",
-            sqdist(F.col("embedding"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
+        _probe_ranks(queries, centroid_df(spark, cents))
         .filter(F.col("prn") <= 2)
         .select("query_id", "q_emb", F.col("cluster").alias("probe_cluster"))
     )
@@ -1194,6 +1206,11 @@ def ann_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Product quantization (PQ) + asymmetric distance computation -----------
+# Every PQ builder shares these: _d9 is the fixed-point squared L2 each
+# ADC and graph score sums; _subvectors cuts a vector column into its
+# subspaces; _first_k_codebook is the untrained codebook; _pq_codes
+# encodes subvectors against a codebook; _pq_adc builds the query-side
+# distance table; _adc_scores sums a candidate's table lookups.
 
 _PQ_M = 8        # subspaces (64 dims / 8)
 _PQ_D = 8        # dims per subspace
@@ -1207,18 +1224,79 @@ _PQ_L2_SQL = (
 )
 
 
-def _l2sq(a: Column, b: Column) -> Column:
-    """Σ (a_i-b_i)² as a native left-fold (double, array order) — the
-    IEEE-identical twin of _PQ_L2_SQL."""
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _d9(a: Column, b: Column) -> Column:
+    """Squared L2 in integer nano-units, floor(sqdist * _PQ_SCALE): sums
+    of these are exact int64s, immune to aggregation order. sqdist is
+    the IEEE-identical twin of _PQ_L2_SQL (double casts, array-order
+    left fold)."""
+    return F.floor(sqdist(a, b) * _PQ_SCALE).cast("long")
+
+
+def _subvectors(df: DataFrame, vec: str, *keys: str) -> DataFrame:
+    """(keys..., j, sub): array column ``vec`` cut into its _PQ_M
+    subspaces of _PQ_D dims, one row per subspace j."""
+    j = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
+    return df.select(*keys, vec, j).select(
+        *keys,
+        "j",
+        F.expr(f"slice({vec}, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
+    )
+
+
+def _first_k_codebook(sub: DataFrame) -> DataFrame:
+    """The untrained codebook (j, cluster, csub) of a vec_id-keyed
+    :func:`_subvectors` frame: its first _PQ_K vectors' subvectors."""
+    return sub.filter(F.col("vec_id") < _PQ_K).select(
+        "j", F.col("vec_id").alias("cluster"), F.col("sub").alias("csub")
+    )
+
+
+def _pq_codes(sub: DataFrame, cb: DataFrame) -> DataFrame:
+    """Encode a :func:`_subvectors` frame against codebook ``cb`` (j,
+    cluster, csub): (keys..., j, code), each subvector's L2-nearest
+    entry, ties to the lower cluster, as a min-of-struct aggregate
+    (order-insensitive, combines map-side — no window shuffle)."""
+    keys = [c for c in sub.columns if c != "sub"]
+    return (
+        sub.join(F.broadcast(cb), "j")
+        .select(
+            *keys,
+            F.struct(
+                sqdist(F.col("sub"), F.col("csub")).alias("d"),
+                F.col("cluster").alias("c"),
+            ).alias("dc"),
+        )
+        .groupBy(*keys)
+        .agg(F.min("dc").alias("best"))
+        .select(*keys, F.col("best.c").alias("code"))
+    )
+
+
+def _pq_adc(qsub: DataFrame, cb: DataFrame) -> DataFrame:
+    """The ADC table of a query :func:`_subvectors` frame: (keys..., j,
+    code, d9), every query subvector's :func:`_d9` to every entry of
+    its subspace's codebook."""
+    keys = [c for c in qsub.columns if c != "sub"]
+    return qsub.join(F.broadcast(cb), "j").select(
+        *keys,
+        F.col("cluster").alias("code"),
+        _d9(F.col("sub"), F.col("csub")).alias("d9"),
+    )
+
+
+def _adc_scores(cand: DataFrame, codes: DataFrame, adc: DataFrame) -> DataFrame:
+    """``cand`` (query_id, neighbor_id, ...) grouped by its own columns
+    with ``dist9``, the sum of the neighbor's _PQ_M ADC lookups. The
+    serving callers' cand rows are distinct (a vector lives in one
+    list, which has one probe rank per query), codes holds _PQ_M rows
+    per vector and the ADC table every (query, j, code) cell, so the
+    joins neither drop nor duplicate a candidate: counting scored rows
+    counts candidates."""
+    return (
+        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
+        .join(F.broadcast(adc), ["query_id", "j", "code"])
+        .groupBy(*cand.columns)
+        .agg(F.sum("d9").cast("long").alias("dist9"))
     )
 
 
@@ -1294,59 +1372,17 @@ def _l2sq(a: Column, b: Column) -> Column:
 )
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    vecsub = (
-        emb.select("vec_id", "embedding", j_col)
-        .select(
-            "vec_id",
-            "j",
-            F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
-        )
-    )
-    centsub = (
-        emb.filter(F.col("vec_id") < _PQ_K)
-        .select(F.col("vec_id").alias("cent_id"), "embedding", j_col)
-        .select(
-            "cent_id",
-            "j",
-            F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("csub"),
-        )
-    )
-    # encode: L2-argmin centroid per (vec, subspace) as min-of-struct —
-    # order-insensitive, partial-aggregates map-side (no window shuffle)
-    codes = (
-        vecsub.join(F.broadcast(centsub), "j")
-        .select(
-            "vec_id",
-            "j",
-            F.struct(
-                _l2sq(F.col("sub"), F.col("csub")).alias("d"),
-                F.col("cent_id").alias("c"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "j")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "j", F.col("best.c").alias("code"))
-    )
+    vecsub = _subvectors(emb, "embedding", "vec_id")
+    cb = _first_k_codebook(vecsub)
+    codes = _pq_codes(vecsub, cb)
     # ADC distance table: 5 queries x M x K entries, broadcast to scoring
-    adc = (
+    adc = _pq_adc(
         vecsub.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105))
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(centsub), "j")
-        .select(
-            "query_id",
-            "j",
-            "cent_id",
-            F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
-            .cast("long")
-            .alias("d9"),
-        )
+        .withColumnRenamed("vec_id", "query_id"),
+        cb,
     )
     scored = (
-        codes.join(
-            F.broadcast(adc),
-            (codes.j == adc.j) & (codes.code == adc.cent_id),
-        )
+        codes.join(F.broadcast(adc), ["j", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d9").cast("long").alias("dist9"))
@@ -2684,8 +2720,6 @@ def _nprobe_sweep_oracle() -> str:
     tags=("similarity", "ivf", "quality", "eval"),
 )
 def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import centroid_df, sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     cents = kmeans_fit(emb, "embedding", "vec_id", k=_KMEANS_K, iters=_KMEANS_ITERS)
     assigned = barrier(
@@ -2693,7 +2727,6 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", F.col("cluster").alias("cluster_id")),
         "assigned",
     )
-    cdf = centroid_df(spark, cents)
     queries = emb.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
     ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
@@ -2719,19 +2752,8 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("query_id", "neighbor_id"),
         "brute",
     )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
-    ranked_probes = (
-        queries.join(F.broadcast(cdf))
-        .select(
-            "query_id",
-            "q_emb",
-            "cluster",
-            sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
-        .filter(F.col("prn") <= max(_NPROBES))
+    ranked_probes = _probe_ranks(queries, centroid_df(spark, cents)).filter(
+        F.col("prn") <= max(_NPROBES)
     )
     # score once at the widest level; each level is the prn <= p slice
     scored = barrier(
@@ -2888,7 +2910,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.struct(
-                _l2sq(F.col("embedding"), F.col("c_emb")).alias("d"),
+                sqdist(F.col("embedding"), F.col("c_emb")).alias("d"),
                 F.col("cl_id").alias("c"),
             ).alias("dc"),
         )
@@ -2909,31 +2931,9 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("r"),
         )
     )
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    ressub = resid.select("vec_id", "cl_id", "r", j_col).select(
-        "vec_id",
-        "cl_id",
-        "j",
-        F.expr(f"slice(r, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
-    )
-    cb = ressub.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("entry_id"), "j", F.col("sub").alias("csub")
-    )
-    codes = (
-        ressub.join(F.broadcast(cb), "j")
-        .select(
-            "vec_id",
-            "cl_id",
-            "j",
-            F.struct(
-                _l2sq(F.col("sub"), F.col("csub")).alias("d"),
-                F.col("entry_id").alias("c"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "cl_id", "j")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "cl_id", "j", F.col("best.c").alias("code"))
-    )
+    ressub = _subvectors(resid, "r", "vec_id", "cl_id")
+    cb = _first_k_codebook(ressub)
+    codes = _pq_codes(ressub, cb)
     # probe selection: top-NPROBE coarse lists per query (tiny cross)
     queries = emb.filter(
         (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
@@ -2949,42 +2949,32 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_emb",
             "cl_id",
             "c_emb",
-            _l2sq(F.col("q_emb"), F.col("c_emb")).alias("cd"),
+            sqdist(F.col("q_emb"), F.col("c_emb")).alias("cd"),
         )
         .withColumn("rn", F.row_number().over(wprobe))
         .filter(F.col("rn") <= _IVFPQ_NPROBE)
     )
     # per-probe ADC table from the query's residual vs that list's
     # centroid: queries x nprobe x M x K entries — broadcast-tiny
-    qres = probes.select(
-        "query_id",
-        "cl_id",
-        F.zip_with(
-            "q_emb", "c_emb", lambda x, y: x.cast("double") - y.cast("double")
-        ).alias("qr"),
-        j_col,
-    ).select(
-        "query_id",
-        "cl_id",
-        "j",
-        F.expr(f"slice(qr, j * {_PQ_D} + 1, {_PQ_D})").alias("qsub"),
-    )
-    adc = qres.join(F.broadcast(cb), "j").select(
-        "query_id",
-        "cl_id",
-        "j",
-        "entry_id",
-        F.floor(_l2sq(F.col("qsub"), F.col("csub")) * _PQ_SCALE)
-        .cast("long")
-        .alias("d9"),
+    adc = _pq_adc(
+        _subvectors(
+            probes.select(
+                "query_id",
+                "cl_id",
+                F.zip_with(
+                    "q_emb",
+                    "c_emb",
+                    lambda x, y: x.cast("double") - y.cast("double"),
+                ).alias("qr"),
+            ),
+            "qr",
+            "query_id",
+            "cl_id",
+        ),
+        cb,
     )
     scored = (
-        codes.join(
-            F.broadcast(adc),
-            (codes.cl_id == adc.cl_id)
-            & (codes.j == adc.j)
-            & (codes.code == adc.entry_id),
-        )
+        codes.join(F.broadcast(adc), ["cl_id", "j", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("d9").cast("long").alias("dist9"))
@@ -3005,7 +2995,9 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Materialized IVF index as a TABLE LAYOUT, self-proven partition pruning
+# Materialized IVF index as a TABLE LAYOUT, self-proven partition pruning.
+# _layout_slice is the layout's one serving edge: every reader gets its
+# probed lists through it, so every reader asserts the directory prune.
 # ---------------------------------------------------------------------------
 
 def _ivf_layout_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
@@ -3018,8 +3010,6 @@ def _ivf_layout_path(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     counts are deterministic. The identity pins the quantizer's
     constants (k, iters), so editing one never serves the old lists."""
     import os
-
-    from flu_data_pipeline_spark.operators.clustering import centroid_df
 
     def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
@@ -3066,6 +3056,21 @@ def _assert_partition_pruned(df: DataFrame) -> None:
             "partition pruning did not engage on the list_id-"
             "partitioned IVF layout scan; plan:\n" + plan[:2000]
         )
+
+
+def _layout_slice(
+    fact: DataFrame, probes: DataFrame
+) -> tuple[DataFrame, list[int]]:
+    """The layout's serving edge: collect the probed list ids of
+    ``probes.probe_cluster`` (O(queries x nprobe) ints, never data),
+    filter the list-partitioned ``fact`` to them, and assert the scan
+    prunes directories. Returns (pruned, ids)."""
+    ids = sorted(
+        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
+    )
+    pruned = fact.filter(F.col("list_id").isin(ids))
+    _assert_partition_pruned(pruned)
+    return pruned, ids
 
 
 @register(
@@ -3121,39 +3126,21 @@ def _assert_partition_pruned(df: DataFrame) -> None:
     bench=True,
 )
 def ivf_layout_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    cdf = read_parquet(spark, cents_path)
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
+    queries = emb.filter(
+        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     probes = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 102))
-        .join(F.broadcast(cdf))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "cluster",
-            sqdist(F.col("embedding"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
+        _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
-        .select("query_id", "q_emb", F.col("cluster").alias("probe_list"))
+        .select("query_id", "q_emb", F.col("cluster").alias("probe_cluster"))
     )
-    # serving edge: the probed list ids (O(queries x nprobe) ints)
-    probe_ids = sorted(
-        {r["probe_list"] for r in probes.select("probe_list").collect()}
-    )
-    pruned = fact.filter(F.col("list_id").isin(probe_ids))
-    # Living layout proof: the pruned scan must carry the list_id
-    # partition predicate in PartitionFilters (directory-level prune).
-    _assert_partition_pruned(pruned)
+    pruned, _ = _layout_slice(fact, probes)
     cand = pruned.join(
         F.broadcast(probes),
-        (F.col("list_id") == F.col("probe_list"))
+        (F.col("list_id") == F.col("probe_cluster"))
         & (F.col("vec_id") != F.col("query_id")),
     )
     wtop = Window.partitionBy("query_id").orderBy(
@@ -3272,8 +3259,6 @@ _IMBALANCE_FACTOR = 2.0
     tags=("similarity", "ivf", "layout", "incremental", "scale-proof"),
 )
 def ivf_index_ingest_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     cdf = read_parquet(spark, cents_path)
@@ -3378,40 +3363,26 @@ def ivf_index_ingest_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def rag_retrieval_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    cdf = read_parquet(spark, cents_path)
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
+    queries = emb.filter(
+        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     probes = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 102))
-        .join(F.broadcast(cdf))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            "cluster",
-            sqdist(F.col("embedding"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
+        _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
-        .select("query_id", "q_emb", F.col("cluster").alias("probe_list"))
+        .select("query_id", "q_emb", F.col("cluster").alias("probe_cluster"))
     )
-    probe_ids = sorted(
-        {r["probe_list"] for r in probes.select("probe_list").collect()}
-    )
-    pruned = fact.filter(F.col("list_id").isin(probe_ids))
+    pruned, _ = _layout_slice(fact, probes)
     wtop = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
     approx = (
         pruned.join(
             F.broadcast(probes),
-            (F.col("list_id") == F.col("probe_list"))
+            (F.col("list_id") == F.col("probe_cluster"))
             & (F.col("vec_id") != F.col("query_id")),
         )
         .select(
@@ -4157,7 +4128,6 @@ def semdedup_pair_cap_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def ivf_pruning_files_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
     from flu_data_pipeline_spark.operators.plan_metrics import (
         collect_with_metrics,
     )
@@ -4165,27 +4135,15 @@ def ivf_pruning_files_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    cdf = read_parquet(spark, cents_path)
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
+    queries = emb.filter(
+        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
+    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
     probes = (
-        emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 102))
-        .join(F.broadcast(cdf))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "cluster",
-            sqdist(F.col("embedding"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
+        _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
-        .select("query_id", F.col("cluster").alias("probe_list"))
+        .select("query_id", F.col("cluster").alias("probe_cluster"))
     )
-    probe_ids = sorted(
-        {r["probe_list"] for r in probes.collect()}
-    )
-    pruned = fact.filter(F.col("list_id").isin(probe_ids))
-    _assert_partition_pruned(pruned)
+    pruned, probe_ids = _layout_slice(fact, probes)
     probe = pruned.agg(
         F.count(F.lit(1)).cast("bigint").alias("rows_scanned")
     )
@@ -4268,8 +4226,6 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
     input — so the cached build costs what ONE serving eval's truth
     stage used to, and the other three (plus every rerun at an
     unchanged fingerprint) read ~300 rows."""
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
         queries = emb.filter(
@@ -4501,8 +4457,6 @@ _SQ8_RECON_EXPR = (
     bench=True,
 )
 def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
@@ -4542,20 +4496,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def _ranked():
-        wprobe = Window.partitionBy("query_id").orderBy(
-            F.asc("cdist"), F.asc("cluster")
-        )
-        return barrier(
-            queries.join(F.broadcast(cdf))
-            .select(
-                "query_id",
-                "q_emb",
-                "cluster",
-                sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-            )
-            .withColumn("prn", F.row_number().over(wprobe)),
-            "ranked",
-        )
+        return barrier(_probe_ranks(queries, cdf), "ranked")
 
     # r11 wave 2 (guide §2.6): truth read, SQ8 bounds, and probe
     # ranking are mutually independent blocking jobs — overlap them.
@@ -4570,12 +4511,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = ranked.filter(F.col("prn") <= max(_FRONTIER_NPROBES)).select(
         "query_id", "q_emb", F.col("cluster").alias("probe_cluster"), "prn"
     )
-    # serving edge: the probed list ids (tiny int set)
-    ids = sorted(
-        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
-    )
-    pruned = fact.filter(F.col("list_id").isin(ids))
-    _assert_partition_pruned(pruned)
+    pruned, _ = _layout_slice(fact, probes)
     # SQ8 reconstruction is query-INDEPENDENT: hoist it below the
     # probe join so the 64-element dequantize runs once per scanned
     # corpus row, not once per (candidate x query) pair — at 50
@@ -4750,8 +4686,6 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
@@ -4766,77 +4700,22 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _brute():
         return _serving_truth(spark, sf_dir, "l2")
 
-    # PQ encode (all vectors) + per-query ADC tables
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    vecsub = emb.select("vec_id", "embedding", j_col).select(
-        "vec_id",
-        "j",
-        F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
-    )
-    centsub = (
-        emb.filter(F.col("vec_id") < _PQ_K)
-        .select(F.col("vec_id").alias("cent_id"), "embedding", j_col)
-        .select(
-            "cent_id",
-            "j",
-            F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias(
-                "csub"
-            ),
-        )
-    )
+    vecsub = _subvectors(emb, "embedding", "vec_id")
+    cb = _first_k_codebook(vecsub)
 
     # codes/adc are eager (inside the overlap below), so they
     # materialize concurrently with the truth read and probe ranking
     # instead of serially inside the scoring job.
     def _codes():
-        return barrier(
-            vecsub.join(F.broadcast(centsub), "j")
-            .select(
-                "vec_id",
-                "j",
-                F.struct(
-                    _l2sq(F.col("sub"), F.col("csub")).alias("d"),
-                    F.col("cent_id").alias("c"),
-                ).alias("dc"),
-            )
-            .groupBy("vec_id", "j")
-            .agg(F.min("dc").alias("best"))
-            .select("vec_id", "j", F.col("best.c").alias("code")),
-            "codes",
-        )
+        return barrier(_pq_codes(vecsub, cb), "codes")
 
     def _adc():
         return barrier(
-            vecsub.filter(
-                (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-            )
-            .withColumnRenamed("vec_id", "query_id")
-            .join(F.broadcast(centsub), "j")
-            .select(
-                "query_id",
-                "j",
-                "cent_id",
-                F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
-                .cast("long")
-                .alias("d9"),
-            ),
-            "adc",
+            _pq_adc(_subvectors(queries, "q_emb", "query_id"), cb), "adc"
         )
 
     def _ranked():
-        wprobe = Window.partitionBy("query_id").orderBy(
-            F.asc("cdist"), F.asc("cluster")
-        )
-        return barrier(
-            queries.join(F.broadcast(cdf))
-            .select(
-                "query_id",
-                "cluster",
-                sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-            )
-            .withColumn("prn", F.row_number().over(wprobe)),
-            "ranked",
-        )
+        return barrier(_probe_ranks(queries, cdf).drop("q_emb"), "ranked")
 
     # r11 wave 2 (guide §2.6): truth read, corpus PQ-encode, ADC
     # tables, and probe ranking are mutually independent — overlap.
@@ -4848,40 +4727,13 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = ranked.filter(F.col("prn") <= max(_FRONTIER_NPROBES)).select(
         "query_id", F.col("cluster").alias("probe_cluster"), "prn"
     )
-    ids = sorted(
-        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
-    )
-    pruned = fact.select("vec_id", "list_id").filter(
-        F.col("list_id").isin(ids)
-    )
-    _assert_partition_pruned(pruned)
+    pruned, _ = _layout_slice(fact.select("vec_id", "list_id"), probes)
     cand = pruned.join(
         F.broadcast(probes),
         (F.col("list_id") == F.col("probe_cluster"))
         & (F.col("vec_id") != F.col("query_id")),
     ).select("query_id", F.col("vec_id").alias("neighbor_id"), "prn")
-    adc_r = (
-        adc.withColumnRenamed("query_id", "a_qid")
-        .withColumnRenamed("j", "a_j")
-    )
-    # Exactly one scored group per candidate pair, so counting scored
-    # rows counts candidates: (query_id, neighbor_id) is unique in cand
-    # (a vector lives in one list, which has one probe rank per query),
-    # codes has exactly M rows per vector, and the ADC table carries
-    # every (query, j, code) cell — the joins can neither drop nor
-    # duplicate a candidate.
-    scored = barrier(
-        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
-        .join(
-            F.broadcast(adc_r),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("j") == F.col("a_j"))
-            & (F.col("code") == F.col("cent_id")),
-        )
-        .groupBy("query_id", "neighbor_id", "prn")
-        .agg(F.sum("d9").cast("long").alias("dist9")),
-        "scored",
-    )
+    scored = barrier(_adc_scores(cand, codes, adc), "scored")
     return (
         _nested_level_recall(
             spark, scored, brute, _FRONTIER_NPROBES, F.asc("dist9")
@@ -5031,28 +4883,18 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import (
-        assign_best,
-        centroid_df,
-        sqdist,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings")
     is_new = (F.col("vec_id") % _INGEST_MOD) == _INGEST_REM
     base = emb.filter(~is_new)
     cents = kmeans_fit(
         base, "embedding", "vec_id", k=_KMEANS_K, iters=_KMEANS_ITERS
     )
-    cdf = centroid_df(spark, cents)
     queries = emb.filter(
         (F.col("vec_id") >= 100)
         & (F.col("vec_id") < 107)
         & ((F.col("vec_id") % _INGEST_MOD) != _INGEST_REM)
     ).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
     )
 
     # NOT keep_vec (r11): a measured A/B showed carrying the embedding
@@ -5069,14 +4911,7 @@ def ann_ingest_drift_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _probes():
         return barrier(
-            queries.join(F.broadcast(cdf))
-            .select(
-                "query_id",
-                "q_emb",
-                "cluster",
-                sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-            )
-            .withColumn("prn", F.row_number().over(wprobe))
+            _probe_ranks(queries, centroid_df(spark, cents))
             .filter(F.col("prn") <= 2)
             .select(
                 "query_id", "q_emb", F.col("cluster").alias("probe_cluster")
@@ -6087,12 +5922,7 @@ def _pq_trained_codebooks(emb: DataFrame) -> DataFrame:
     previous centroid. Nothing is collected: the codebook is a
     _PQ_M x _PQ_K = 128-row frame, broadcast where joined.
     """
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    sub = emb.select("vec_id", "embedding", j_col).select(
-        "vec_id",
-        "j",
-        F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
-    )
+    sub = _subvectors(emb, "embedding", "vec_id")
     cb = sub.filter(F.col("vec_id") < _PQ_K).select(
         "j",
         F.col("vec_id").alias("cluster"),
@@ -6107,7 +5937,7 @@ def _pq_trained_codebooks(emb: DataFrame) -> DataFrame:
                 "vec_id",
                 "j",
                 F.struct(
-                    _l2sq(F.col("sub"), F.col("csub")).alias("d"),
+                    sqdist(F.col("sub"), F.col("csub")).alias("d"),
                     F.col("cluster").alias("c"),
                     F.col("sub").alias("s"),
                 ).alias("dcs"),
@@ -6363,8 +6193,6 @@ def _pq_cb_sql() -> str:
     bench=True,
 )
 def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
@@ -6385,96 +6213,34 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # — the codebook Lloyd chain (two blocking checkpoint jobs) is
     # independent of the coarse-probe ranking + collect below, so the
     # two run overlapped (r11 wave 2, guide §2.6).
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
-
-    def _probes_and_ids():
+    def _probes_and_slice():
         probes = (
-            queries.join(F.broadcast(cdf))
-            .select(
-                "query_id",
-                "cluster",
-                sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-            )
-            .withColumn("prn", F.row_number().over(wprobe))
+            _probe_ranks(queries, cdf)
             .filter(F.col("prn") <= _RERANK_NPROBE)
             .select("query_id", F.col("cluster").alias("probe_cluster"))
         )
-        ids = sorted(
-            {
-                r["probe_cluster"]
-                for r in probes.select("probe_cluster").collect()
-            }
-        )
-        return probes, ids
+        pruned, _ = _layout_slice(fact.select("vec_id", "list_id"), probes)
+        return probes, pruned
 
-    cb, (probes, ids) = overlap(
-        lambda: _pq_trained_codebooks(emb), _probes_and_ids
-    )
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    vecsub = emb.select("vec_id", "embedding", j_col).select(
-        "vec_id",
-        "j",
-        F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
+    cb, (probes, pruned) = overlap(
+        lambda: _pq_trained_codebooks(emb), _probes_and_slice
     )
     codes = barrier(
-        vecsub.join(F.broadcast(cb), "j")
-        .select(
-            "vec_id",
-            "j",
-            F.struct(
-                _l2sq(F.col("sub"), F.col("csub")).alias("d"),
-                F.col("cluster").alias("c"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "j")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "j", F.col("best.c").alias("code")),
+        _pq_codes(_subvectors(emb, "embedding", "vec_id"), cb),
         "codes",
         eager=False,
     )
     adc = barrier(
-        vecsub.filter(
-            (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-        )
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "j")
-        .select(
-            "query_id",
-            "j",
-            F.col("cluster").alias("cent_id"),
-            F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
-            .cast("long")
-            .alias("d9"),
-        ),
+        _pq_adc(_subvectors(queries, "q_emb", "query_id"), cb),
         "adc",
         eager=False,
     )
-    pruned = fact.select("vec_id", "list_id").filter(
-        F.col("list_id").isin(ids)
-    )
-    _assert_partition_pruned(pruned)
     cand = pruned.join(
         F.broadcast(probes),
         (F.col("list_id") == F.col("probe_cluster"))
         & (F.col("vec_id") != F.col("query_id")),
     ).select("query_id", F.col("vec_id").alias("neighbor_id"))
-    adc_r = (
-        adc.withColumnRenamed("query_id", "a_qid")
-        .withColumnRenamed("j", "a_j")
-    )
-    scored = (
-        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
-        .join(
-            F.broadcast(adc_r),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("j") == F.col("a_j"))
-            & (F.col("code") == F.col("cent_id")),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d9").cast("long").alias("dist9"))
-    )
+    scored = _adc_scores(cand, codes, adc)
     wshort = Window.partitionBy("query_id").orderBy(
         F.asc("dist9"), F.asc("neighbor_id")
     )
@@ -6879,7 +6645,6 @@ def ann_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("similarity", "ann", "llm", "metrics"),
 )
 def pq_rerank_hydration_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
     from flu_data_pipeline_spark.operators.plan_metrics import (
         collect_with_metrics,
     )
@@ -6895,83 +6660,20 @@ def pq_rerank_hydration_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
     cb = _pq_trained_codebooks(emb)
-    j_col = F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("j")
-    vecsub = emb.select("vec_id", "embedding", j_col).select(
-        "vec_id",
-        "j",
-        F.expr(f"slice(embedding, j * {_PQ_D} + 1, {_PQ_D})").alias("sub"),
-    )
-    codes = (
-        vecsub.join(F.broadcast(cb), "j")
-        .select(
-            "vec_id",
-            "j",
-            F.struct(
-                _l2sq(F.col("sub"), F.col("csub")).alias("d"),
-                F.col("cluster").alias("c"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "j")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "j", F.col("best.c").alias("code"))
-    )
-    adc = (
-        vecsub.filter(
-            (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-        )
-        .withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(cb), "j")
-        .select(
-            "query_id",
-            "j",
-            F.col("cluster").alias("cent_id"),
-            F.floor(_l2sq(F.col("sub"), F.col("csub")) * _PQ_SCALE)
-            .cast("long")
-            .alias("d9"),
-        )
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.asc("cdist"), F.asc("cluster")
-    )
+    codes = _pq_codes(_subvectors(emb, "embedding", "vec_id"), cb)
+    adc = _pq_adc(_subvectors(queries, "q_emb", "query_id"), cb)
     probes = (
-        queries.join(F.broadcast(cdf))
-        .select(
-            "query_id",
-            "cluster",
-            sqdist(F.col("q_emb"), F.col("c")).alias("cdist"),
-        )
-        .withColumn("prn", F.row_number().over(wprobe))
+        _probe_ranks(queries, cdf)
         .filter(F.col("prn") <= _RERANK_NPROBE)
         .select("query_id", F.col("cluster").alias("probe_cluster"))
     )
-    ids = sorted(
-        {r["probe_cluster"] for r in probes.select("probe_cluster").collect()}
-    )
-    cand = (
-        fact.select("vec_id", "list_id")
-        .filter(F.col("list_id").isin(ids))
-        .join(
-            F.broadcast(probes),
-            (F.col("list_id") == F.col("probe_cluster"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    adc_r = (
-        adc.withColumnRenamed("query_id", "a_qid")
-        .withColumnRenamed("j", "a_j")
-    )
-    scored = (
-        cand.join(codes, F.col("neighbor_id") == F.col("vec_id"))
-        .join(
-            F.broadcast(adc_r),
-            (F.col("query_id") == F.col("a_qid"))
-            & (F.col("j") == F.col("a_j"))
-            & (F.col("code") == F.col("cent_id")),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d9").cast("long").alias("dist9"))
-    )
+    pruned, _ = _layout_slice(fact.select("vec_id", "list_id"), probes)
+    cand = pruned.join(
+        F.broadcast(probes),
+        (F.col("list_id") == F.col("probe_cluster"))
+        & (F.col("vec_id") != F.col("query_id")),
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"))
+    scored = _adc_scores(cand, codes, adc)
     wshort = Window.partitionBy("query_id").orderBy(
         F.asc("dist9"), F.asc("neighbor_id")
     )
@@ -7162,8 +6864,6 @@ def _nnd_graphs(
     count — and sort-merge's two per-join sorts are pure overhead on
     top (guide §3.1; measured at sf0.1: score 1.47 -> 0.94 s, candidate
     self-join 1.05 -> 0.68 s, hash-identical output)."""
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     left = emb.select(
         F.col("vec_id").alias("u"), F.col("embedding").alias("u_emb")
     )
@@ -7172,16 +6872,13 @@ def _nnd_graphs(
     )
     ncnt = emb.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
 
-    def d9(a: Column, b: Column) -> Column:
-        return F.floor(sqdist(a, b) * _PQ_SCALE).cast("long")
-
     def score(cand: DataFrame) -> DataFrame:
         """(u, v) pairs -> (u, v, d9) via two key joins into the
         embedding table (shuffle-bounded by the pair count)."""
         return (
             cand.join(left.hint("shuffle_hash"), "u")
             .join(right.hint("shuffle_hash"), "v")
-            .select("u", "v", d9(F.col("u_emb"), F.col("v_emb")).alias("d9"))
+            .select("u", "v", _d9(F.col("u_emb"), F.col("v_emb")).alias("d9"))
         )
 
     wtop = Window.partitionBy("u").orderBy(F.asc("d9"), F.asc("v"))
@@ -7336,15 +7033,10 @@ def _nnd_graphs(
 
 
 def ann_nndescent_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     emb = load_table(spark, sf_dir, "embeddings")
     right = emb.select(
         F.col("vec_id").alias("v"), F.col("embedding").alias("v_emb")
     )
-
-    def d9(a: Column, b: Column) -> Column:
-        return F.floor(sqdist(a, b) * _PQ_SCALE).cast("long")
 
     wtop = Window.partitionBy("u").orderBy(F.asc("d9"), F.asc("v"))
     graphs, cands, ncnt = _nnd_graphs(emb, keep_cands=True)
@@ -7362,7 +7054,7 @@ def ann_nndescent_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = barrier(
         F.broadcast(sample)
         .join(right, F.col("u") != F.col("v"))
-        .select("u", "v", d9(F.col("u_emb"), F.col("v_emb")).alias("d9"))
+        .select("u", "v", _d9(F.col("u_emb"), F.col("v_emb")).alias("d9"))
         .withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") <= _NND_K)
         .select("u", "v"),
@@ -7689,8 +7381,6 @@ def _beam_hop_sql(h: int) -> str:
     bench=True,
 )
 def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from flu_data_pipeline_spark.operators.clustering import sqdist
-
     g = read_parquet(spark, _nnd_graph_path(spark, sf_dir)).select("u", "v")
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(
@@ -7726,9 +7416,7 @@ def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "query_id",
                 "v",
-                F.floor(sqdist(F.col("q_emb"), F.col("v_emb")) * _PQ_SCALE)
-                .cast("long")
-                .alias("d9"),
+                _d9(F.col("q_emb"), F.col("v_emb")).alias("d9"),
             ),
             f"scored{hop}",
         )

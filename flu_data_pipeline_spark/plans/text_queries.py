@@ -791,6 +791,67 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+def _bm25(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """BM25 over BM25_TERMS: the per-(doc, term) frequencies ``tf``
+    (doc_id, dl, term, f) and the docs scoring above 0 (doc_id,
+    score). Corpus stats and per-term document frequencies are tiny
+    aggregates broadcast into the per-doc pass."""
+    docs_t = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
+    stats = docs_t.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg(F.size("t").cast("double")).alias("avgdl"),
+    )
+    terms = docs.sparkSession.createDataFrame(
+        [(t,) for t in BM25_TERMS], "term string"
+    )
+    tf = docs_t.crossJoin(F.broadcast(terms)).select(
+        "doc_id",
+        F.size("t").cast("double").alias("dl"),
+        "term",
+        F.size(F.expr("filter(t, x -> x = term)")).cast("double").alias("f"),
+    )
+    df_ = tf.groupBy("term").agg(
+        F.sum(F.when(F.col("f") > 0, 1).otherwise(0)).cast("double").alias("n_with")
+    )
+    idf = F.log(
+        (F.col("n_docs") - F.col("n_with") + 0.5) / (F.col("n_with") + 0.5) + 1
+    )
+    denom = F.col("f") + BM25_K1 * (
+        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
+    )
+    scored = (
+        tf.join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("doc_id")
+        .agg(F.sum(idf * F.col("f") * (BM25_K1 + 1) / denom).alias("score"))
+        .filter(F.col("score") > 0)
+    )
+    return tf, scored
+
+
+def _bm25_and_tf_top10(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The two rankings the rank-fusion evals compare: BM25's top 10
+    (doc_id, ra) by (6dp score, doc_id) and raw term frequency's top 10
+    (doc_id, rb) by (summed f, doc_id)."""
+    tf, bm25 = _bm25(docs)
+    wa = Window.orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
+    rank_a = (
+        bm25.withColumn("ra", F.row_number().over(wa))
+        .filter(F.col("ra") <= 10)
+        .select("doc_id", "ra")
+    )
+    plain = tf.groupBy("doc_id").agg(F.sum("f").alias("tf_sum")).filter(
+        F.col("tf_sum") > 0
+    )
+    wb = Window.orderBy(F.desc("tf_sum"), F.asc("doc_id"))
+    rank_b = (
+        plain.withColumn("rb", F.row_number().over(wb))
+        .filter(F.col("rb") <= 10)
+        .select("doc_id", "rb")
+    )
+    return rank_a, rank_b
+
+
 @register(
     "text_bm25_topk",
     oracle=f"""
@@ -835,38 +896,7 @@ BM25_B = 0.75
     tags=("text", "tfidf", "A7", "O3"),
 )
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    docs_t = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
-    stats = docs_t.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(F.size("t").cast("double")).alias("avgdl"),
-    )
-    terms = docs.sparkSession.createDataFrame(
-        [(t,) for t in BM25_TERMS], "term string"
-    )
-    tf = (
-        docs_t.crossJoin(F.broadcast(terms))
-        .select(
-            "doc_id",
-            F.size("t").cast("double").alias("dl"),
-            "term",
-            F.size(F.expr("filter(t, x -> x = term)")).cast("double").alias("f"),
-        )
-    )
-    df_ = tf.groupBy("term").agg(
-        F.sum(F.when(F.col("f") > 0, 1).otherwise(0)).cast("double").alias("n_with")
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("n_with") + 0.5) / (F.col("n_with") + 0.5) + 1
-    )
-    denom = F.col("f") + BM25_K1 * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-    scored = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * F.col("f") * (BM25_K1 + 1) / denom).alias("score"))
-        .filter(F.col("score") > 0)
-    )
+    _, scored = _bm25(load_table(spark, sf_dir, "documents"))
     w = Window.orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1255,52 +1285,7 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "eval", "O3", "A7"),
 )
 def ranking_rbo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    docs_t = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
-    stats = docs_t.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(F.size("t").cast("double")).alias("avgdl"),
-    )
-    terms = docs.sparkSession.createDataFrame(
-        [(t,) for t in BM25_TERMS], "term string"
-    )
-    tf = docs_t.crossJoin(F.broadcast(terms)).select(
-        "doc_id",
-        F.size("t").cast("double").alias("dl"),
-        "term",
-        F.size(F.expr("filter(t, x -> x = term)")).cast("double").alias("f"),
-    )
-    df_ = tf.groupBy("term").agg(
-        F.sum(F.when(F.col("f") > 0, 1).otherwise(0)).cast("double").alias("n_with")
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("n_with") + 0.5) / (F.col("n_with") + 0.5) + 1
-    )
-    denom = F.col("f") + BM25_K1 * (
-        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    bm25 = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * F.col("f") * (BM25_K1 + 1) / denom).alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    wa = Window.orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
-    rank_a = (
-        bm25.withColumn("ra", F.row_number().over(wa))
-        .filter(F.col("ra") <= 10)
-        .select("doc_id", "ra")
-    )
-    plain = tf.groupBy("doc_id").agg(F.sum("f").alias("tf_sum")).filter(
-        F.col("tf_sum") > 0
-    )
-    wb = Window.orderBy(F.desc("tf_sum"), F.asc("doc_id"))
-    rank_b = (
-        plain.withColumn("rb", F.row_number().over(wb))
-        .filter(F.col("rb") <= 10)
-        .select("doc_id", "rb")
-    )
+    rank_a, rank_b = _bm25_and_tf_top10(load_table(spark, sf_dir, "documents"))
     common = rank_a.join(rank_b, "doc_id")
     depths = spark.range(1, 11).select(F.col("id").alias("d"))
     ov = (
@@ -1682,57 +1667,7 @@ _RRF_K = 60
     tags=("text", "eval", "O3", "J5"),
 )
 def ranking_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    docs_t = docs.select("doc_id", tokenize(F.col("text")).alias("t"))
-    stats = docs_t.agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.avg(F.size("t").cast("double")).alias("avgdl"),
-    )
-    terms = docs.sparkSession.createDataFrame(
-        [(t,) for t in BM25_TERMS], "term string"
-    )
-    tf = docs_t.crossJoin(F.broadcast(terms)).select(
-        "doc_id",
-        F.size("t").cast("double").alias("dl"),
-        "term",
-        F.size(F.expr("filter(t, x -> x = term)")).cast("double").alias("f"),
-    )
-    df_ = tf.groupBy("term").agg(
-        F.sum(F.when(F.col("f") > 0, 1).otherwise(0))
-        .cast("double")
-        .alias("n_with")
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("n_with") + 0.5) / (F.col("n_with") + 0.5)
-        + 1
-    )
-    denom = F.col("f") + BM25_K1 * (
-        1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl")
-    )
-    bm25 = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("doc_id")
-        .agg(F.sum(idf * F.col("f") * (BM25_K1 + 1) / denom).alias("score"))
-        .filter(F.col("score") > 0)
-    )
-    wa = Window.orderBy(F.desc(F.round("score", 6)), F.asc("doc_id"))
-    rank_a = (
-        bm25.withColumn("ra", F.row_number().over(wa))
-        .filter(F.col("ra") <= 10)
-        .select("doc_id", "ra")
-    )
-    plain = (
-        tf.groupBy("doc_id")
-        .agg(F.sum("f").alias("tf_sum"))
-        .filter(F.col("tf_sum") > 0)
-    )
-    wb = Window.orderBy(F.desc("tf_sum"), F.asc("doc_id"))
-    rank_b = (
-        plain.withColumn("rb", F.row_number().over(wb))
-        .filter(F.col("rb") <= 10)
-        .select("doc_id", "rb")
-    )
+    rank_a, rank_b = _bm25_and_tf_top10(load_table(spark, sf_dir, "documents"))
     fused = (
         rank_a.withColumnRenamed("doc_id", "da")
         .join(

@@ -361,26 +361,51 @@ def test_aqe_skew_join_assertion_has_teeth(spark):
     REGISTRY["aqe_skew_join_split"].builder(spark, SF_ORACLE)
 
 
-def test_ivf_layout_pruning_assertion_has_teeth(spark):
-    """_assert_partition_pruned must RAISE on a flat (unpartitioned)
-    scan with the same logical filter — it checks the LAYOUT, not the
-    filter — and the registered query must build cleanly on the real
-    partitioned layout."""
-    import pytest
+#: Every registered builder that serves from the list-partitioned IVF
+#: layout (``similarity_queries._ivf_layout_path``).
+_IVF_LAYOUT_READERS = (
+    "ivf_layout_pruning_gain",
+    "rag_retrieval_hydrated",
+    "ivf_pruning_files_metric",
+    "ann_serving_frontier",
+    "ann_serving_frontier_pq",
+    "ann_serving_pq_rerank",
+    "pq_rerank_hydration_metric",
+)
+
+
+@pytest.mark.parametrize("reader", ("flat_scan",) + _IVF_LAYOUT_READERS)
+def test_ivf_layout_pruning_assertion_has_teeth(
+    spark, tmp_path, monkeypatch, reader
+):
+    """The partition-pruning assertion checks the LAYOUT, not the filter.
+    ``flat_scan``: _assert_partition_pruned must RAISE on a flat
+    (unpartitioned) scan with the same logical filter, and
+    ivf_layout_pruning_gain must build cleanly on the real partitioned
+    layout. Every other case hands one layout reader a flat copy of the
+    layout (same columns, real centroids) and requires it to raise, so
+    no reader can scan the layout without the assertion."""
     from pyspark.sql import functions as F
 
-    from flu_data_pipeline_spark.plans import REGISTRY
-    from flu_data_pipeline_spark.plans.similarity_queries import (
-        _assert_partition_pruned,
-    )
-    from .conftest import SF_ORACLE
+    from flu_data_pipeline_spark.plans import similarity_queries as sq
+    from .conftest import SF_SMOKE
 
-    flat = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").filter(
-        F.col("vec_id").isin([1, 2])
+    if reader == "flat_scan":
+        flat = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").filter(
+            F.col("vec_id").isin([1, 2])
+        )
+        with pytest.raises(AssertionError, match="partition pruning"):
+            sq._assert_partition_pruned(flat)
+        REGISTRY["ivf_layout_pruning_gain"].builder(spark, SF_ORACLE)
+        return
+    fact_path, cents_path = sq._ivf_layout_path(spark, SF_SMOKE)
+    flat_path = str(tmp_path / "embeddings_flat")
+    spark.read.parquet(fact_path).write.parquet(flat_path)
+    monkeypatch.setattr(
+        sq, "_ivf_layout_path", lambda spark, sf_dir: (flat_path, cents_path)
     )
     with pytest.raises(AssertionError, match="partition pruning"):
-        _assert_partition_pruned(flat)
-    REGISTRY["ivf_layout_pruning_gain"].builder(spark, SF_ORACLE)
+        REGISTRY[reader].builder(spark, SF_SMOKE)
 
 
 def test_nested_level_recall_matches_per_level_search(spark):
