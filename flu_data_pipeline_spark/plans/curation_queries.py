@@ -1716,9 +1716,7 @@ _UNIMAX_EPOCH_CAP = 4  # max epochs over any language's data
 def corpus_unimax_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_lang = (
-        docs.select(
-            "lang", F.size(F.split(F.lower(F.trim("text")), r"\s+")).alias("t")
-        )
+        docs.select("lang", F.size(tokenize(F.col("text"))).alias("t"))
         .groupBy("lang")
         .agg(F.sum("t").cast("bigint").alias("n_tokens"))
     )
@@ -1870,7 +1868,7 @@ def corpus_padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("t"),
+        F.size(tokenize(F.col("text"))).alias("t"),
     ).filter(F.col("t") > 0)
     nch = F.ceil(F.col("t") / F.lit(_PAD_L)).cast("bigint")
     chunks = toks.select(

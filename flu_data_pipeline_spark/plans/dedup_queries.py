@@ -1856,7 +1856,7 @@ def _paragraph_chunks(
     base = docs.select(
         "doc_id",
         *extra,
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("words"),
+        tokenize(F.col("text")).alias("words"),
     )
     chunks = base.select(
         "doc_id",

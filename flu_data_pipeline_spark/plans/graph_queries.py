@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import load_table
+from flu_data_pipeline_spark.operators.dedup import tokenize
 from flu_data_pipeline_spark.operators.graph import bfs_hops, kcore, pagerank
 from flu_data_pipeline_spark.operators.materialize import barrier
 from flu_data_pipeline_spark.plans.registry import register
@@ -849,7 +850,7 @@ _TR_TOPK = 15
 )
 def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    arr = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    arr = tokenize(F.col("text"))
     pairs = (
         docs.select(arr.alias("arr"))
         .filter(F.size("arr") >= 2)

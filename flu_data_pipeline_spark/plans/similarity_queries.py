@@ -556,6 +556,7 @@ def array_predicate_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Iterative k-means (Lloyd's) with an exact unrolled SQL oracle.
 # _probe_ranks is the one IVF probe ranking: every query's distance and
 # rank to every trained centroid, ties broken as the assignment breaks them.
+# _query_window is the one serving query set: a vec_id range of embeddings.
 # ---------------------------------------------------------------------------
 
 from flu_data_pipeline_spark.operators.clustering import (  # noqa: E402
@@ -893,6 +894,13 @@ def dedup_semdedup_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_window(emb: DataFrame, lo: int, hi: int) -> DataFrame:
+    """(query_id, q_emb): the embeddings with ``lo <= vec_id < hi``."""
+    return emb.filter((F.col("vec_id") >= lo) & (F.col("vec_id") < hi)).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
+    )
+
+
 def _probe_ranks(queries: DataFrame, cdf: DataFrame) -> DataFrame:
     """``queries`` (query_id, q_emb, ...) crossed with every centroid of
     ``cdf`` (cluster, c): adds cluster, its sqdist ``cdist`` and the
@@ -982,9 +990,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     assigned = assign_best(
         emb, "embedding", "vec_id", cents, keep_vec=True
     ).select("vec_id", "embedding", F.col("cluster").alias("cluster_id"))
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 105)
     probes = (
         _probe_ranks(queries, centroid_df(spark, cents))
         .filter(F.col("prn") <= 2)
@@ -1049,9 +1055,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _query_window(emb, 100, 105)
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
@@ -1143,9 +1147,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ann_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 105)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _query_window(emb, 100, 105)
     c = emb.select(
         F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("c_emb")
     )
@@ -2727,9 +2729,7 @@ def ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding", F.col("cluster").alias("cluster_id")),
         "assigned",
     )
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 105)
     wb = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
@@ -2935,9 +2935,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = _first_k_codebook(ressub)
     codes = _pq_codes(ressub, cb)
     # probe selection: top-NPROBE coarse lists per query (tiny cross)
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 105)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 105)
     wprobe = Window.partitionBy("query_id").orderBy(
         F.asc("cd"), F.asc("cl_id")
     )
@@ -3129,9 +3127,7 @@ def ivf_layout_pruning_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 102)
     probes = (
         _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
@@ -3367,9 +3363,7 @@ def rag_retrieval_hydrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 102)
     probes = (
         _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
@@ -3522,9 +3516,7 @@ def ann_sq8_asymmetric(spark: SparkSession, sf_dir: str) -> DataFrame:
     recon = emb.join(F.broadcast(bounds)).select(
         "vec_id", recon_expr.alias("r")
     )
-    q = emb.filter((F.col("vec_id") >= 100) & (F.col("vec_id") < 102)).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    q = _query_window(emb, 100, 102)
     wtop = Window.partitionBy("query_id").orderBy(
         F.desc("cos_raw"), F.asc("neighbor_id")
     )
@@ -4135,9 +4127,7 @@ def ivf_pruning_files_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= 100) & (F.col("vec_id") < 102)
-    ).select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb"))
+    queries = _query_window(emb, 100, 102)
     probes = (
         _probe_ranks(queries, read_parquet(spark, cents_path))
         .filter(F.col("prn") <= 2)
@@ -4228,12 +4218,7 @@ def _serving_truth_path(spark: SparkSession, sf_dir: str) -> str:
     unchanged fingerprint) read ~300 rows."""
     def build(target: str) -> None:
         emb = load_table(spark, sf_dir, "embeddings")
-        queries = emb.filter(
-            (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-        )
+        queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
         pairs = (
             F.broadcast(queries)
             .join(
@@ -4461,11 +4446,7 @@ def ann_serving_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
     cdf = read_parquet(spark, cents_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
     # exact cosine truth from the SHARED persisted artifact (round 11
     # — VERDICT r10 #2: was an in-query |Q|xN brute stage recomputed
     # by all four serving evals; same expressions, same tie-breaks,
@@ -4690,11 +4671,7 @@ def ann_serving_frontier_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
     cdf = read_parquet(spark, cents_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
     # exact L2 truth (PQ approximates L2 — same-metric ground truth)
     # from the SHARED persisted artifact (VERDICT r10 #2)
     def _brute():
@@ -6197,11 +6174,7 @@ def ann_serving_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
     cdf = read_parquet(spark, cents_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
     # exact L2 truth (the rerank stage shares this metric) from the
     # SHARED persisted artifact (VERDICT r10 #2). eager=False: the
     # truth is referenced by exactly one branch of the final job, so
@@ -6440,11 +6413,7 @@ def ann_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _bq_word(F.col("embedding"), 0).alias("w0"),
         _bq_word(F.col("embedding"), 1).alias("w1"),
     )
-    queries = emb.filter(
-        (F.col("vec_id") >= _BQ_QLO) & (F.col("vec_id") < _BQ_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _BQ_QLO, _BQ_QHI)
     qs = sig.join(
         F.broadcast(
             queries.select(F.col("query_id").alias("vec_id"), "query_id")
@@ -6654,11 +6623,7 @@ def pq_rerank_hydration_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact_path, cents_path = _ivf_layout_path(spark, sf_dir)
     fact = read_parquet(spark, fact_path)
     cdf = read_parquet(spark, cents_path)
-    queries = emb.filter(
-        (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
     cb = _pq_trained_codebooks(emb)
     codes = _pq_codes(_subvectors(emb, "embedding", "vec_id"), cb)
     adc = _pq_adc(_subvectors(queries, "q_emb", "query_id"), cb)
@@ -7383,11 +7348,7 @@ def _beam_hop_sql(h: int) -> str:
 def ann_nndescent_beam_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = read_parquet(spark, _nnd_graph_path(spark, sf_dir)).select("u", "v")
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(
-        (F.col("vec_id") >= _SRV_QLO) & (F.col("vec_id") < _SRV_QHI)
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
-    )
+    queries = _query_window(emb, _SRV_QLO, _SRV_QHI)
     corpus = emb.select(
         F.col("vec_id").alias("v"), F.col("embedding").alias("v_emb")
     )

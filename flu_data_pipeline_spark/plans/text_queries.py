@@ -7,7 +7,10 @@ expressions (no Python in the hot path), each DuckDB-oracle-checked.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from flu_data_pipeline_spark.catalog import derived_table, load_table, read_parquet
@@ -1804,7 +1807,11 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE vocabulary training (unrolled greedy merges)
+# BPE vocabulary training (unrolled greedy merges).
+# _word_counts is the (word, cnt) table every tokenizer trainer starts from.
+# _merge_train runs the merge rounds BPE and WordPiece share; each trainer
+# passes only how it ranks a round's pairs. _n_syms counts a trained word's
+# symbols.
 # ---------------------------------------------------------------------------
 
 BPE_MERGES = 4
@@ -1842,21 +1849,32 @@ def _bpe_step_sql(prev: str, t: int) -> str:
     )"""
 
 
-def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
-    """Run the BPE_MERGES-round greedy BPE trainer; returns the final
-    (word, cnt, seq) vocabulary frame and the per-round 1-row argmax
-    frames. Shared by text_bpe_train_merges (emits the merge table) and
-    text_bpe_encode_compression (applies the trained vocabulary)."""
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "word"
-            )
-        )
+def _word_counts(docs: DataFrame) -> DataFrame:
+    """(word, cnt): every whitespace word of ``docs.text`` with its
+    occurrence count."""
+    return (
+        docs.select(F.explode(tokenize(F.col("text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
-    vocab = words.select(
+
+
+def _n_syms() -> Column:
+    """Number of symbols in a merge-trained word's ``seq``."""
+    return F.size(F.split(F.col("seq"), " "))
+
+
+def _merge_train(
+    docs: DataFrame,
+    rounds: int,
+    pick: Callable[[DataFrame, DataFrame], DataFrame],
+) -> tuple[DataFrame, DataFrame]:
+    """Run ``rounds`` greedy merge rounds over ``docs``'s character-split
+    word table; returns the final (word, cnt, seq) vocabulary and every
+    round's winning pair (x, y, c, ..., merge_rank) as one frame.
+    ``pick(vocab, pairs)`` ranks the round's (x, y, c) adjacent-pair
+    counts and returns the 1-row winner."""
+    vocab = _word_counts(docs).select(
         "word",
         "cnt",
         F.array_join(
@@ -1867,7 +1885,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
     # round so the returned plan doesn't re-derive v0 2^T times.
     vocab = barrier(vocab, "vocab")
     merges: list[DataFrame] = []
-    for t in range(1, BPE_MERGES + 1):
+    for t in range(1, rounds + 1):
         syms = F.split(F.col("seq"), " ")
         pairs = (
             vocab.select("cnt", syms.alias("syms"))
@@ -1890,12 +1908,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
         # lazily the next vocab rewrite's eager checkpoint materializes
         # it in the same job (one job per merge round instead of two)
         # while the merge-table output still reads the materialized RDD.
-        best = barrier(
-            pairs.orderBy(F.desc("c"), F.asc("x"), F.asc("y"))
-            .limit(1),
-            f"best{t}",
-            eager=False,
-        )
+        best = barrier(pick(vocab, pairs), f"best{t}", eager=False)
         merges.append(best.withColumn("merge_rank", F.lit(t)))
         padded = F.concat(
             F.lit(" "), F.replace(F.col("seq"), F.lit(" "), F.lit("  ")),
@@ -1920,7 +1933,19 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
             ),
             f"vocab{t}",
         )
-    return vocab, merges
+    return vocab, reduce(DataFrame.union, merges)
+
+
+def _bpe_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The BPE_MERGES-round greedy BPE trainer: each round merges the
+    most frequent pair (ties pinned lexicographically)."""
+    return _merge_train(
+        docs,
+        BPE_MERGES,
+        lambda _, pairs: pairs.orderBy(
+            F.desc("c"), F.asc("x"), F.asc("y")
+        ).limit(1),
+    )
 
 
 @register(
@@ -1974,10 +1999,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
 )
 def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, merges = _bpe_train(load_table(spark, sf_dir, "documents"))
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.union(m)
-    return out.select(
+    return merges.select(
         "merge_rank",
         F.col("x").alias("sym_x"),
         F.col("y").alias("sym_y"),
@@ -1987,7 +2009,11 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Unigram-LM tokenizer (SentencePiece family) — Viterbi-EM re-estimation
+# Unigram-LM tokenizer (SentencePiece family) — Viterbi-EM re-estimation.
+# _piece_map gathers each word's scored substrings for the row-local DPs.
+# _bpe_uni_segs gives each word's piece count under BPE and the unigram LM;
+# _fertility_by_len turns such counts into the per-word-length fertility
+# table, each model's column one _pieces_per_word mean.
 # ---------------------------------------------------------------------------
 
 _UNI_L = 4       # max piece length (chars)
@@ -2124,20 +2150,13 @@ def _uni_iter_sql(it: int) -> str:
 
 
 def _uni_words(docs: DataFrame) -> DataFrame:
-    """(word, cnt): the frequency-weighted training word table —
-    whitespace words, lowercased, length-capped at _UNI_WMAX."""
+    """(word, cnt): the training word table, length-capped at
+    _UNI_WMAX (the filter is on the grouping key, so Catalyst runs it
+    below the aggregate)."""
     return barrier(
-        docs.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("word")
-        )
-        .filter(
-            (F.col("word") != "")
-            & (F.length("word") <= _UNI_WMAX)
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
+        _word_counts(docs).filter(
+            (F.col("word") != "") & (F.length("word") <= _UNI_WMAX)
+        ),
         "uni_words",
     )
 
@@ -2179,6 +2198,31 @@ def _uni_seed_vocab(words: DataFrame) -> DataFrame:
     )
 
 
+def _piece_map(words: DataFrame, vocab: DataFrame) -> DataFrame:
+    """(word, pm): each word's distinct substrings of <= _UNI_L chars
+    that ``vocab`` (piece, s) scores, as a piece -> score map."""
+    wsubs = words.select(
+        "word",
+        F.explode(
+            F.expr(
+                f"array_distinct(flatten(transform(sequence(1, "
+                f"length(word)), i -> transform(sequence(i, least(i + "
+                f"{_UNI_L} - 1, length(word))), "
+                f"e -> substring(word, i, e - i + 1)))))"
+            )
+        ).alias("piece"),
+    )
+    return (
+        wsubs.join(F.broadcast(vocab), "piece")
+        .groupBy("word")
+        .agg(
+            F.map_from_entries(
+                F.collect_list(F.struct("piece", "s"))
+            ).alias("pm")
+        )
+    )
+
+
 def _uni_viterbi_pieces(words: DataFrame, vocab: DataFrame) -> DataFrame:
     """(word, cnt, piece): every piece of every word's max-score
     segmentation under ``vocab``.
@@ -2197,27 +2241,7 @@ def _uni_viterbi_pieces(words: DataFrame, vocab: DataFrame) -> DataFrame:
     sf0.1 for the fertility query's three E-steps). ANSI note:
     map lookups use try_element_at (absent piece -> null -> candidate
     filtered), array indexes are in-bounds by construction."""
-    wsubs = words.select(
-        "word",
-        F.explode(
-            F.expr(
-                f"array_distinct(flatten(transform(sequence(1, "
-                f"length(word)), i -> transform(sequence(i, least(i + "
-                f"{_UNI_L} - 1, length(word))), "
-                f"e -> substring(word, i, e - i + 1)))))"
-            )
-        ).alias("piece"),
-    )
-    pmap = (
-        wsubs.join(F.broadcast(vocab), "piece")
-        .groupBy("word")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("piece", "s"))
-            ).alias("pm")
-        )
-    )
-    d = words.join(pmap, "word")
+    d = words.join(_piece_map(words, vocab), "word")
 
     def dp_step(acc, t):
         cands = F.filter(
@@ -2320,6 +2344,47 @@ def _uni_train(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
             f"em{it}_vocab",
         )
     return words, vocab, counts
+
+
+def _bpe_uni_segs(docs: DataFrame) -> DataFrame:
+    """(word, cnt, n_bpe, n_uni): every word both BPE and the unigram
+    LM train on, with its piece count under each model's final state
+    (BPE: the merged symbols; unigram: one more Viterbi pass)."""
+    bvocab, _ = _bpe_train(docs)
+    bseg = bvocab.select(
+        "word", "cnt", _n_syms().cast("bigint").alias("n_bpe")
+    )
+    words, uvocab, _ = _uni_train(docs)
+    useg = (
+        _uni_viterbi_pieces(words, uvocab)
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_uni"))
+    )
+    return bseg.join(useg, "word")
+
+
+def _pieces_per_word(n: str) -> Column:
+    """Pieces per word occurrence: the cnt-weighted mean of ``n``."""
+    return F.round(
+        F.sum(F.col("cnt") * F.col(n)).cast("double") / F.sum("cnt"), 6
+    )
+
+
+def _fertility_by_len(segs: DataFrame, *models: str) -> DataFrame:
+    """Per word length: distinct words, occurrences, and each model's
+    pieces per word from its ``n_<model>`` column."""
+    return (
+        segs.groupBy(F.length("word").cast("int").alias("word_len"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_words"),
+            F.sum("cnt").cast("bigint").alias("occurrences"),
+            *(
+                _pieces_per_word(f"n_{m}").alias(f"{m}_pieces_per_word")
+                for m in models
+            ),
+        )
+        .orderBy("word_len")
+    )
 
 
 @register(
@@ -2469,37 +2534,7 @@ def tokenizer_fertility_bpe_vs_unigram(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bvocab, _ = _bpe_train(docs)
-    bseg = bvocab.select(
-        "word",
-        "cnt",
-        F.size(F.split(F.col("seq"), " ")).cast("bigint").alias("n_bpe"),
-    )
-    words, uvocab, _ = _uni_train(docs)
-    useg = (
-        _uni_viterbi_pieces(words, uvocab)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_uni"))
-    )
-    return (
-        bseg.join(useg, "word")
-        .groupBy(F.length("word").cast("int").alias("word_len"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum("cnt").cast("bigint").alias("occurrences"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_bpe")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("bpe_pieces_per_word"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_uni")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("uni_pieces_per_word"),
-        )
-        .orderBy("word_len")
-    )
+    return _fertility_by_len(_bpe_uni_segs(docs), "bpe", "uni")
 
 
 def _uni_prune_sql() -> str:
@@ -2592,27 +2627,7 @@ def tokenizer_unigram_prune_scores(
         .filter(F.length("piece") >= 2)
         .select(F.col("piece").alias("word"), "vc", "s")
     )
-    wsubs = pw.select(
-        "word",
-        F.explode(
-            F.expr(
-                f"array_distinct(flatten(transform(sequence(1, "
-                f"length(word)), i -> transform(sequence(i, least(i + "
-                f"{_UNI_L} - 1, length(word))), "
-                f"e -> substring(word, i, e - i + 1)))))"
-            )
-        ).alias("piece"),
-    )
-    pmap = (
-        wsubs.join(F.broadcast(vocab), "piece")
-        .groupBy("word")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("piece", "s"))
-            ).alias("pm")
-        )
-    )
-    d = pw.join(pmap, "word")
+    d = pw.join(_piece_map(pw, vocab), "word")
     # the piece may not segment THROUGH itself: filter its own key out
     pm_excl = F.map_filter(
         F.col("pm"), lambda k, _: k != F.col("word")
@@ -2658,7 +2673,8 @@ def tokenizer_unigram_prune_scores(
 
 
 # ---------------------------------------------------------------------------
-# WordPiece tokenizer trainer — likelihood-scored merges
+# WordPiece tokenizer trainer — likelihood-scored merges.
+# _wp_pick is the WordPiece ranking _merge_train runs each round with.
 # ---------------------------------------------------------------------------
 
 _WP_MERGES = 4
@@ -2759,10 +2775,7 @@ def _wp_step_sql(prev: str, t: int) -> str:
 )
 def tokenizer_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     _, merges = _wp_train(load_table(spark, sf_dir, "documents"))
-    out = merges[0]
-    for m in merges[1:]:
-        out = out.union(m)
-    return out.select(
+    return merges.select(
         "merge_rank",
         F.col("x").alias("sym_x"),
         F.col("y").alias("sym_y"),
@@ -2773,110 +2786,39 @@ def tokenizer_wordpiece_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("merge_rank")
 
 
-def _wp_train(docs: DataFrame) -> tuple[DataFrame, list[DataFrame]]:
-    """Run the _WP_MERGES-round WordPiece trainer; returns the final
-    (word, cnt, seq) state and the per-round 1-row argmax frames
-    (x, y, c, cx, cy, merge_rank). Shared by tokenizer_wordpiece_train
-    and tokenizer_wordpiece_encode."""
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "word"
-            )
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+def _wp_pick(vocab: DataFrame, pairs: DataFrame) -> DataFrame:
+    """The round's WordPiece merge (x, y, c, cx, cy): the pair with the
+    highest likelihood score c(xy) / (c(x)*c(y)), ties lexicographic."""
+    symcnt = (
+        vocab.select("cnt", F.explode(F.split(F.col("seq"), " ")).alias("sym"))
+        .groupBy("sym")
+        .agg(F.sum("cnt").cast("bigint").alias("sc"))
     )
-    vocab = barrier(
-        words.select(
-            "word",
-            "cnt",
-            F.array_join(F.regexp_extract_all("word", F.lit("."), 0), " ").alias(
-                "seq"
-            ),
+    scored = pairs.join(
+        F.broadcast(
+            symcnt.select(F.col("sym").alias("x"), F.col("sc").alias("cx"))
         ),
-        "vocab",
+        "x",
+    ).join(
+        F.broadcast(
+            symcnt.select(F.col("sym").alias("y"), F.col("sc").alias("cy"))
+        ),
+        "y",
     )
-    merges: list[DataFrame] = []
-    for t in range(1, _WP_MERGES + 1):
-        syms = F.split(F.col("seq"), " ")
-        symcnt = (
-            vocab.select("cnt", F.explode(syms).alias("sym"))
-            .groupBy("sym")
-            .agg(F.sum("cnt").cast("bigint").alias("sc"))
+    return (
+        scored.orderBy(
+            F.desc(F.col("c").cast("double") / (F.col("cx") * F.col("cy"))),
+            F.asc("x"),
+            F.asc("y"),
         )
-        pairs = (
-            vocab.select("cnt", syms.alias("syms"))
-            .filter(F.size("syms") >= 2)
-            .select(
-                "cnt",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(syms) - 1), "
-                        "i -> struct(element_at(syms, i) AS a, "
-                        "element_at(syms, i + 1) AS b))"
-                    )
-                ).alias("u"),
-            )
-            .groupBy(F.col("u.a").alias("x"), F.col("u.b").alias("y"))
-            .agg(F.sum("cnt").cast("bigint").alias("c"))
-        )
-        scored = pairs.join(
-            F.broadcast(
-                symcnt.select(F.col("sym").alias("x"), F.col("sc").alias("cx"))
-            ),
-            "x",
-        ).join(
-            F.broadcast(
-                symcnt.select(F.col("sym").alias("y"), F.col("sc").alias("cy"))
-            ),
-            "y",
-        )
-        best = barrier(
-            scored.orderBy(
-                F.desc(
-                    F.col("c").cast("double") / (F.col("cx") * F.col("cy"))
-                ),
-                F.asc("x"),
-                F.asc("y"),
-            )
-            .limit(1)
-            .select("x", "y", "c", "cx", "cy"),
-            # eager=False (r11 wave 3): the round's vocab rewrite is
-            # eagerly checkpointed right below and materializes this
-            # 1-row argmax in the same job — the eager form was a
-            # separate blocking job per merge round just to pick one
-            # row (the text_bpe_train_merges fix, applied to its
-            # WordPiece sibling).
-            f"best{t}",
-            eager=False,
-        )
-        merges.append(best.withColumn("merge_rank", F.lit(t)))
-        padded = F.concat(
-            F.lit(" "),
-            F.replace(F.col("seq"), F.lit(" "), F.lit("  ")),
-            F.lit(" "),
-        )
-        pattern = F.concat(
-            F.lit(" "), F.col("x"), F.lit("  "), F.col("y"), F.lit(" ")
-        )
-        repl = F.concat(F.lit(" "), F.col("x"), F.col("y"), F.lit(" "))
-        vocab = barrier(
-            vocab.crossJoin(F.broadcast(best))
-            .select(
-                "word",
-                "cnt",
-                F.trim(
-                    F.replace(
-                        F.replace(padded, pattern, repl),
-                        F.lit("  "),
-                        F.lit(" "),
-                    )
-                ).alias("seq"),
-            ),
-            f"vocab{t}",
-        )
-    return vocab, merges
+        .limit(1)
+        .select("x", "y", "c", "cx", "cy")
+    )
+
+
+def _wp_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The _WP_MERGES-round WordPiece trainer (:func:`_wp_pick`)."""
+    return _merge_train(docs, _WP_MERGES, _wp_pick)
 
 
 #: longest trainable piece after _WP_MERGES binary merges
@@ -2965,19 +2907,8 @@ def _wp_encode_words(
     shared by tokenizer_wordpiece_encode, the tri-fertility table, and
     the split-disciplined fertility eval (train-only merges)."""
     _, merges = _wp_train(train_docs if train_docs is not None else docs)
-    prods = merges[0].select(F.concat("x", "y").alias("piece"))
-    for m in merges[1:]:
-        prods = prods.union(m.select(F.concat("x", "y").alias("piece")))
-    prods = prods.distinct()
-    words = (
-        docs.select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "word"
-            )
-        )
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
+    prods = merges.select(F.concat("x", "y").alias("piece")).distinct()
+    words = _word_counts(docs)
     # each word's distinct multi-char substrings that are trained pieces,
     # gathered into one map column (same broadcast-gather shape as the
     # unigram prune DP)
@@ -3138,46 +3069,11 @@ def _wp_encode_words(
 )
 def tokenizer_fertility_tri(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    bvocab, _ = _bpe_train(docs)
-    bseg = bvocab.select(
-        "word",
-        "cnt",
-        F.size(F.split(F.col("seq"), " ")).cast("bigint").alias("n_bpe"),
-    )
-    words, uvocab, _ = _uni_train(docs)
-    useg = (
-        _uni_viterbi_pieces(words, uvocab)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_uni"))
-    )
+    segs = _bpe_uni_segs(docs)
     wseg = _wp_encode_words(docs).select(
         "word", F.col("n_pieces").cast("bigint").alias("n_wp")
     )
-    return (
-        bseg.join(useg, "word")
-        .join(wseg, "word")
-        .groupBy(F.length("word").cast("int").alias("word_len"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_words"),
-            F.sum("cnt").cast("bigint").alias("occurrences"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_bpe")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("bpe_pieces_per_word"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_uni")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("uni_pieces_per_word"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_wp")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("wp_pieces_per_word"),
-        )
-        .orderBy("word_len")
-    )
+    return _fertility_by_len(segs.join(wseg, "word"), "bpe", "uni", "wp")
 
 
 _CHUNK_W = 10  # tokens per non-overlapping dedup chunk
@@ -4364,14 +4260,9 @@ def text_bpe_encode_compression(
 ) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     vocab, _ = _bpe_train(docs)
-    enc = vocab.select(
-        "word", F.size(F.split("seq", " ")).alias("n_syms")
-    )
+    enc = vocab.select("word", _n_syms().alias("n_syms"))
     docw = docs.select(
-        "source",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-            "word"
-        ),
+        "source", F.explode(tokenize(F.col("text"))).alias("word")
     )
     return (
         docw.join(F.broadcast(enc), "word")
@@ -5299,15 +5190,13 @@ def winnow_postings_cap_metric(
 def tokenizer_vocab_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     _, bmerges = _bpe_train(docs)
-    bunits = bmerges[0].select(F.concat("x", "y").alias("u"))
-    for m in bmerges[1:]:
-        bunits = bunits.union(m.select(F.concat("x", "y").alias("u")))
-    bunits = barrier(bunits.distinct(), "bunits")
+    bunits = barrier(
+        bmerges.select(F.concat("x", "y").alias("u")).distinct(), "bunits"
+    )
     _, wmerges = _wp_train(docs)
-    wunits = wmerges[0].select(F.concat("x", "y").alias("u"))
-    for m in wmerges[1:]:
-        wunits = wunits.union(m.select(F.concat("x", "y").alias("u")))
-    wunits = barrier(wunits.distinct(), "wunits")
+    wunits = barrier(
+        wmerges.select(F.concat("x", "y").alias("u")).distinct(), "wunits"
+    )
     _, uvocab, ucounts = _uni_train(docs)
     uunits = barrier(
         ucounts.join(uvocab, "piece")
@@ -5574,22 +5463,13 @@ def tokenizer_split_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_docs=labeled.filter(F.col("split") == "train").select("text"),
     ).select("word", "n_pieces")
     persplit = (
-        labeled.select(
-            "split",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "word"
-            ),
-        )
+        labeled.select("split", F.explode(tokenize(F.col("text"))).alias("word"))
         .groupBy("split", "word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
     )
     trwords = (
         labeled.filter(F.col("split") == "train")
-        .select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias(
-                "word"
-            )
-        )
+        .select(F.explode(tokenize(F.col("text"))).alias("word"))
         .distinct()
         .withColumn("seen", F.lit(1))
     )
@@ -5606,11 +5486,7 @@ def tokenizer_split_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("cnt") * F.col("n_pieces"))
             .cast("bigint")
             .alias("total_pieces"),
-            F.round(
-                F.sum(F.col("cnt") * F.col("n_pieces")).cast("double")
-                / F.sum("cnt"),
-                6,
-            ).alias("fertility"),
+            _pieces_per_word("n_pieces").alias("fertility"),
             oov_occ.alias("oov_occurrences"),
             F.round(
                 oov_occ.cast("double") / F.sum("cnt"), 6

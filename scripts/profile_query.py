@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import sys
 import textwrap
 import time
@@ -43,8 +44,8 @@ SF = "/root/testdata/sf0.01"
 #: (distributed ranking, curve layouts, one-pass CV, sketches, incremental
 #: dedup, self-proving layout and AQE gates, executed-metric probes)
 SHOWCASE = (
-    "scd2_priority_history", "grouping_sets_revenue", "subq_exists_late_ship",
-    "ts_forward_fill", "centroid_cosine_matrix", "skew_salted_term_counts",
+    "grouping_sets_revenue",
+    "ts_forward_fill", "skew_salted_term_counts",
     "cdc_snapshot_diff", "zorder_pruning_gain", "pagerank_trade_graph",
     "dq_constraint_report", "mannwhitney_rank_sum", "spearman_rho_ranks",
     "hilbert_vs_zorder_locality", "curation_js_divergence", "cv_kfold_regression",
@@ -52,28 +53,25 @@ SHOWCASE = (
     "events_survival_km", "stump_best_split", "embedding_jl_distortion",
     "huber_irls_regression", "ann_mmr_rerank", "ranking_ndcg_eval",
     "kendall_tau_daily", "quantile_histogram_sketch", "embedding_dim_stats",
-    "split_leakage_audit", "text_textrank_keywords", "dedup_incremental_ingest",
-    "text_bpe_train_merges", "abtest_cuped_adjustment", "shard_rebalance_audit",
+    "split_leakage_audit", "text_textrank_keywords",
+    "abtest_cuped_adjustment", "shard_rebalance_audit",
     "skew_salted_dim_join", "text_chunk_dedup_ratio",
     "incremental_partition_manifest", "curation_hash_stratified_sample",
-    "dedup_lsh_recall_audit", "text_repetition_rules", "curation_pipeline_funnel",
-    "cdc_changelog_compaction", "events_rate_limit_audit", "join_range_bin_windows",
-    "multimodal_bytes_shard_pack", "embedding_top_pc_power_iteration",
+    "cdc_changelog_compaction", "events_rate_limit_audit",
+    "multimodal_bytes_shard_pack",
     "events_variant_extract", "embedding_centroid_drift",
-    "customer_rfm_segments_scale", "ntile_equidepth_scale", "skyline_price_size_scale",
-    "dpp_pruning_gain", "bucketed_join_no_shuffle", "dedup_ngram_jaccard_capped",
+    "ntile_equidepth_scale",
+    "dedup_ngram_jaccard_capped",
     "text_winnow_density", "dedup_winnow_overlap", "curation_dsir_selection",
-    "corpus_unimax_allocation", "ann_ivf_pq", "sample_es_topk", "dedup_semdedup",
-    "curation_ccnet_ppl_buckets", "corpus_concat_chunk_packing",
-    "dedup_components_scale", "dedup_cluster_size_histogram", "dedup_semdedup_scale",
-    "ivf_layout_pruning_gain", "ivf_index_ingest_maintenance", "aqe_skew_join_split",
-    "text_dedup_removal_plan", "text_hashed_linear_classifier",
+    "corpus_unimax_allocation", "ann_ivf_pq", "sample_es_topk",
+    "dedup_components_scale", "dedup_cluster_size_histogram",
+    "ivf_index_ingest_maintenance",
     "corpus_padding_waste_audit", "text_bpe_encode_compression", "ann_sq8_asymmetric",
     "text_e2e_semantic_neighbors", "contamination_semantic_check",
     "aqe_coalesce_shuffle_read",
     # executed-metric gates: the returned frames are local one-row results;
     # the documented value is the probe plan they assert on (docstrings)
-    "semdedup_pair_cap_metric", "lsh_band_pair_metric", "ivf_pruning_files_metric",
+    "semdedup_pair_cap_metric", "lsh_band_pair_metric",
     "eval_isotonic_calibration", "pq_rerank_hydration_metric",
     "sample_group_split_leakproof", "curation_doremi_apply",
 )
@@ -148,10 +146,16 @@ def _row(label: str, w: dict, wall: float) -> dict:
 
 
 def plans_md(spark, sf_dir: str) -> str:
-    """PLANS.md: each bench and showcase query's executed plan."""
-    names = [n for n, q in REGISTRY.items() if q.bench] + [
-        n for n in SHOWCASE if n in REGISTRY
-    ]
+    """PLANS.md: each bench and showcase query's executed plan, written
+    so that unchanged code regenerates it byte for byte: scan metadata is
+    never truncated (Spark cuts it at a width, so ids of another digit
+    count cut it elsewhere), ``#<id>``, ``plan_id=<n>`` and the counter
+    in a Python lambda's variable name (``lambda x_<n>``, which counts
+    every lambda the process built before, derived-table builds included)
+    are renumbered per section in order of first appearance, and the
+    checkout root reads ``<repo>``."""
+    spark.conf.set("spark.sql.maxMetadataStringLength", str(2**31 - 1))
+    names = [n for n, q in REGISTRY.items() if q.bench] + list(SHOWCASE)
     out = [
         "# PLANS — executed physical plans of the headline queries",
         "",
@@ -160,13 +164,22 @@ def plans_md(spark, sf_dir: str) -> str:
         "nodes (pushdown + pruning reach the format reader), broadcast vs",
         "shuffle join selection per the 2MB policy, exchange counts (the",
         "shuffle budget each docstring claims), and Expand/Window/TakeOrdered",
-        "physical operators backing the declarative plans.",
+        "physical operators backing the declarative plans. Expression ids,",
+        "`plan_id`s and lambda variable numbers are renumbered per section and",
+        "the checkout root reads `<repo>`, so unchanged code regenerates this",
+        "file byte for byte.",
         "",
     ]
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     for name in names:
         qd = REGISTRY[name]
         plan = qd.builder(spark, sf_dir)._jdf.queryExecution().explainString(mode)
+        for pattern in (r"(?<=#)\d+", r"(?<=plan_id=)\d+", r"(?<=lambda [xyz]_)\d+"):
+            ids: dict[str, str] = {}
+            plan = re.sub(pattern,
+                          lambda m: ids.setdefault(m.group(), str(len(ids) + 1)),
+                          plan)
+        plan = plan.replace(ROOT, "<repo>")
         out += [f"## {name}" + ("  _(bench)_" if qd.bench else ""), "",
                 "\n".join(textwrap.wrap(" ".join(qd.doc.split()), width=76)), "",
                 # NUL bytes appear when a plan renders an empty-string

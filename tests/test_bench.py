@@ -177,10 +177,7 @@ def test_warmed_query_timed_runs_compile_nothing(spark):
     assert bench.median_work(runs)["compiles"] == 0
 
 
-def test_profile_query_rows_sum_to_the_pass(spark, tmp_path):
-    """``scripts/profile_query.py``: one row per barrier plus the query's
-    other jobs, whose jobs sum to the profiled pass's, and one input-plan
-    file per barrier checkpoint, each the plan before the checkpoint."""
+def _profile_query():
     spec = importlib.util.spec_from_file_location(
         "profile_query_mod",
         os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -188,7 +185,14 @@ def test_profile_query_rows_sum_to_the_pass(spark, tmp_path):
     )
     pq = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(pq)
+    return pq
 
+
+def test_profile_query_rows_sum_to_the_pass(spark, tmp_path):
+    """``scripts/profile_query.py``: one row per barrier plus the query's
+    other jobs, whose jobs sum to the profiled pass's, and one input-plan
+    file per barrier checkpoint, each the plan before the checkpoint."""
+    pq = _profile_query()
     rows = pq.profile(spark, "huber_irls_regression", SF_SMOKE, str(tmp_path))
     *parts, total = rows
     assert total["label"] == "total"
@@ -200,3 +204,14 @@ def test_profile_query_rows_sum_to_the_pass(spark, tmp_path):
     # read the rows a previous checkpoint pinned
     assert "Scan parquet" in (tmp_path / "00_pts.txt").read_text()
     assert "Scan ExistingRDD" in (tmp_path / "01_irls0.txt").read_text()
+
+
+def test_plans_md_writes_each_query_once():
+    """``PLANS.md`` writes every bench query, then every ``SHOWCASE``
+    query, so a showcase name that is also a bench query would be a
+    second copy of the same section."""
+    pq = _profile_query()
+    bench_names = {n for n, q in pq.REGISTRY.items() if q.bench}
+    assert not bench_names & set(pq.SHOWCASE)
+    assert len(set(pq.SHOWCASE)) == len(pq.SHOWCASE)
+    assert set(pq.SHOWCASE) <= set(pq.REGISTRY)

@@ -959,7 +959,8 @@ def test_derived_table_builds_only_when_stale(tmp_path):
 #: ``sources/writers.py`` holds the one cache: ``idempotent_append``
 #: caches its anti-joined increment for a count and a write and
 #: unpersists it before returning, a lifetime scoped to one call that no
-#: barrier has, and ``etl_load`` measures it.
+#: barrier has, and ``etl_load`` measures it. ``operators/dedup.py``
+#: holds the one whitespace word split (use ``dedup.tokenize``).
 _ONE_MODULE_ONLY = {
     "bare_parquet_read": (
         "catalog.py",
@@ -980,6 +981,11 @@ _ONE_MODULE_ONLY = {
     ),
     "persist": ("operators/materialize.py", r"\.persist\(", "df.persist()"),
     "cache": ("sources/writers.py", r"\.cache\(\)", "df.cache()"),
+    "whitespace_tokens": (
+        "operators/dedup.py",
+        r"F\.split\(\s*F\.lower\(\s*F\.trim",
+        'F.split(F.lower(F.trim(F.col("text"))), r"\\s+")',
+    ),
 }
 
 
