@@ -149,6 +149,22 @@ def _write_sidecar(repo: str, rec: dict, merge: bool) -> None:
         pass
 
 
+def run_query(spark, store: StatusStore, name: str,
+              sf_dir: str) -> tuple[list[float], list[dict]]:
+    """Warm registry query ``name`` up at ``sf_dir``, then time it
+    ``TIMED_RUNS`` times into the noop sink, every job labelled with the
+    name; returns each timed run's seconds and work."""
+    builder = REGISTRY[name].builder
+
+    def run() -> None:
+        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    with job_label(spark, name):
+        run()  # warmup: JIT, codegen class and IO caches for THIS query
+        measured = [measure(spark, store, run) for _ in range(TIMED_RUNS)]
+    return [sec for sec, _ in measured], [work for _, work in measured]
+
+
 def sweep(spark, sf_dir: str, queries: list[str], repo: str = ROOT) -> dict:
     """Warm up and time each query, read its work, and take the verdict
     against the anchor in ``repo``; returns the record to print."""
@@ -160,18 +176,7 @@ def sweep(spark, sf_dir: str, queries: list[str], repo: str = ROOT) -> dict:
     work: dict[str, dict] = {}
     every_run: list[dict] = []
     for name in queries:
-        qd = REGISTRY[name]
-
-        def run() -> None:
-            qd.builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-        with job_label(spark, name):
-            run()  # warmup: JIT, codegen class and IO caches for THIS query
-            secs, runs = [], []
-            for _ in range(TIMED_RUNS):
-                sec, w = measure(spark, store, run)
-                secs.append(sec)
-                runs.append(w)
+        secs, runs = run_query(spark, store, name, sf_dir)
         timings[name] = round(min(secs[:3]), 4)
         medians[name] = round(statistics.median(secs), 4)
         work[name] = median_work(runs)

@@ -1,70 +1,68 @@
 #!/usr/bin/env python
-"""Scaling-curve measurement: run headline queries at sf0.001 / 0.01 /
-0.1 (1x / 10x / 100x rows) and report wall-time ratios.
+"""Scaling curve: run registry queries at each data decade and print
+SCALING.md's markdown.
 
-The 100 TB argument everyone hand-waves, measured instead: a plan whose
-time grows ~linearly (or better) across two decades of data — while the
-per-query constant overhead (session, planning, task launch) amortizes —
-is shuffle/partition-structured correctly; a plan that grows
+A plan whose time grows ~linearly (or better) across decades of data,
+while the per-query fixed cost (planning, job and task launch)
+amortizes, is shuffle/partition-structured correctly; a plan that grows
 super-linearly has a hidden quadratic (unblocked pair join, driver
-collect, exploding skew) and would NOT survive the next 100x.
+collect, exploding skew) and would not survive the next 100x.
 
-Usage: python scripts/scaling_check.py [--md] [--only name1,name2]
-(--md emits SCALING.md; --only restricts to the given registry names,
-for re-measuring individual rows without the full ~25-min sweep)
+    python scripts/scaling_check.py [--twins] [name ...]
 
-``--sf10-twins`` instead measures the SCALE-TWIN subset at sf1 AND
-sf10 (.testdata/sf10 — scripts/gen_sf1.py with 100 replicas) and
-emits the fifth-decade markdown section: best-of-2 at sf1, single
-run at sf10 (cells are minutes-long there; JIT/fixed overheads are
-<5% of the cell, unlike the sub-second cells where best-of-3
-matters). The brute ``dedup_semdedup`` twin is INCLUDED even though
-its N*k term is expected to go super-linear — the point of the pair
-is measuring the separation between it and the two-level scale path
-at the decade where the asymptote dominates.
+Without ``--twins`` it runs the bench set plus ``EXTRA_QUERIES`` (or
+only the named registry queries) at sf0.001, sf0.01, sf0.1 and, when
+``.testdata/sf1`` exists (``scripts/gen_sf1.py``), sf1. ``--twins``
+runs ``TWIN_QUERIES`` (or the named queries) at sf1 and sf10
+(``scripts/gen_sf1.py .testdata/sf10 <sf0.1 dir> 100``).
+
+Each cell is ``bench.run_query`` (a warm run, then 5 timed runs) and
+holds the median wall seconds and the median work; the warm run builds
+any persisted derived table outside the timed runs. A cell whose query
+raises holds the exception class and the sweep goes on, so one failure
+does not lose the hours of cells around it. Each cell, with its runs'
+seconds, goes to stderr as a JSON line when it completes; the table goes
+to stdout. Exits 1 when a query's ``jobs`` changes with size and
+``JOBS_VARY_WITH_SF`` does not list it, 2 on an unknown name.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-#: Round 5: the scaling table covers the FULL bench set (every registry
-#: entry flagged ``bench=True`` — the same queries BENCH_r{N}.json
-#: times), so the sf1 decade is measured for the whole headline
-#: surface, self-proving plan-assertion queries included. The extras
-#: below are historical SCALING.md members that are deliberately NOT
-#: in the headline bench (scale twins / insurance variants that exist
-#: for regimes the fixture doesn't produce) but whose curves the
-#: table exists to compare.
+#: Members of the table that are deliberately not in the bench set
+#: (scale twins and insurance variants for regimes the fixture does not
+#: produce) but whose curves the table exists to compare.
 EXTRA_QUERIES = [
     # two-stage distributed ranking, unrolled space-filling-curve math
     "spearman_rho_ranks",
     "hilbert_vs_zorder_locality",
     # substring dedup
     "text_chunk_dedup_ratio",
-    # salted hot-key join (self-proving ShuffledHashJoin since round 5)
+    # salted hot-key join (self-proving ShuffledHashJoin)
     "skew_salted_dim_join",
     # the global-ntile query vs its distributed exact-rank twin: the
     # pair the scaling table exists to compare (single-partition sort
     # growth vs range-shuffle growth; the twin is in the bench set)
     "customer_rfm_segments",
-    # df-capped near-dup twin (adaptive since round 5: falls through
-    # to the uncapped plan when max shingle df <= cap — this fixture)
+    # df-capped near-dup twin (adaptive: falls through to the uncapped
+    # plan when max shingle df <= cap, as on this fixture)
     "dedup_ngram_jaccard_capped",
     # winnowing fingerprints (O(n*w) map-side HOFs per doc), DSIR
     # importance scoring (explode + two aggregates)
     "text_winnow_density",
     "dedup_winnow_overlap",
     "curation_dsir_selection",
-    # round-9: the (e)-family migrated onto global_cumsum /
-    # global_prefix_max / global_first_following — their decade rows
-    # evidence that the migration's fixed-stage cost amortizes while
-    # the old single-partition distinct-value sort it replaced grew
-    # with N on one task
+    # the (e)-family on global_cumsum / global_prefix_max /
+    # global_first_following: their rows evidence that the fixed-stage
+    # cost amortizes, where the single-partition distinct-value sort
+    # they replaced grew with N on one task
     "eval_auc_purchase",
     "eval_pr_curve_purchase",
     "eval_calibration_bins",
@@ -81,34 +79,12 @@ EXTRA_QUERIES = [
     "text_zipf_fit",
 ]
 
-
-def _query_list() -> list[str]:
-    from flu_data_pipeline_spark.plans import REGISTRY
-
-    names = [n for n, q in REGISTRY.items() if q.bench]
-    names += [n for n in EXTRA_QUERIES if n not in names]
-    return names
-
-SFS = ["sf0.001", "sf0.01", "sf0.1"]
-
-#: sf1 (10x sf0.1) is repo-generated (scripts/gen_sf1.py), not driver
-#: data — included as a fourth decade when present.
-_SF1_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".testdata", "sf1",
-)
-_SF10_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    ".testdata", "sf10",
-)
-
-#: the scale-headline subset measured at the fifth decade (sf10,
-#: 60M lineitem rows / 500k documents / 200k embeddings): the
-#: queries whose 100 TB story rests on a named structural claim
-#: (two-level fit, distributed rank, banded candidates, partition
-#: pruning) paired where possible with the twin whose asymptote is
-#: known-worse, so the decade MEASURES the separation instead of
-#: extrapolating it.
+#: The scale-headline subset measured at the fifth decade (sf10, 60M
+#: lineitem rows / 500k documents / 200k embeddings): the queries whose
+#: 100 TB story rests on a named structural claim (two-level fit,
+#: distributed rank, banded candidates, partition pruning), paired
+#: where possible with the twin whose asymptote is known to be worse,
+#: so the decade measures the separation instead of extrapolating it.
 TWIN_QUERIES = [
     "dedup_semdedup_scale",       # two-level IVF fit + chunk-capped pairs
     "dedup_semdedup",             # brute N*k twin (expected super-linear)
@@ -120,36 +96,30 @@ TWIN_QUERIES = [
     "dedup_ngram_jaccard_capped",  # + adaptive hot-shingle df cap
     "ivf_layout_pruning_gain",    # partition-pruned IVF serving layout
     "rag_retrieval_hydrated",     # probe -> prune -> rerank -> hydrate
-    # round-7 additions:
     "ann_serving_frontier",       # recall/cost table off the layout
     "corpus_cleaned_write_pipeline",  # surgery -> partitioned write ->
                                   # shard manifest -> zero-delta replay
     "semdedup_pair_cap_metric",   # executed-metric pair bound at scale
-    # round-8 additions (VERDICT r7 #5):
     "ann_ingest_drift_recall",    # fixed-k fit, frozen-quantizer ingest
     "dedup_semdedup_incremental",  # two-level base fit + frozen-model
-                                  # refresh (rebuilt per VERDICT r7 #2)
+                                  # refresh
     "dedup_substring_clone_runs",  # df-capped positional postings join
     "tokenizer_unigram_viterbi_em",  # corpus scan -> vocab-bounded EM
-    # round-8 continuation additions:
     "dedup_paragraph_rewrite",    # explode -> groupBy-min -> join ->
                                   # ordered re-concat at 5M paragraphs
-    "paragraph_rewrite_join_metric",  # the move-once bound EXECUTED at
+    "paragraph_rewrite_join_metric",  # the move-once bound executed at
                                   # the fifth decade
     "curation_quality_classifier_train",  # 7 integer-sum GD scans over
                                   # 500k docs, 3-scalar driver state
-    # round-9 additions (VERDICT r8 #4 + the round's new/migrated rows):
     "embedding_matryoshka_recall",  # exact truth x 3 prefixes (eval)
     "tokenizer_wordpiece_encode",  # broadcast-piece-map greedy fold
     "tokenizer_fertility_tri",    # tri-trainer fertility comparison
     "curation_gate_calibration",  # equi-WIDTH bins + B^3 minimax solve
     "ann_serving_pq_rerank",      # trained-PQ shortlist -> exact rerank
-    "eval_isotonic_calibration",  # (e)-family migration representative:
+    "eval_isotonic_calibration",  # (e)-family representative:
                                   # equi-depth bins via global_cumsum
     "sample_cluster_split_leakproof",  # signatures -> banded pairs ->
                                   # components -> leakproof split
-    # round-10 additions (VERDICT r9 #4: round-9 rows unmeasured at the
-    # fifth decade):
     "ann_binary_hamming_rerank",  # sign-pack -> XOR+popcount shortlist
                                   # -> bounded exact-cosine rerank
     "tokenizer_split_fertility",  # train-split WordPiece -> per-split
@@ -159,190 +129,151 @@ TWIN_QUERIES = [
     "curation_doremi_mixture",    # GD proxy fit -> excess -> MW quotas
     "curation_doremi_apply",      # quotas -> per-doc pass counts via
                                   # global_rank (no per-source window)
-    # round-11 additions (VERDICT r10 #4/#5: the two serving rows with
-    # 4-decade rows but no sf10 cell, now cheap post-truth-sharing,
-    # plus the new graph-family member):
     "ann_serving_frontier_pq",    # untrained PQ rows of the frontier
     "pq_rerank_hydration_metric",  # executed hydration bound at scale
     "ann_nndescent_knn_graph",    # NN-descent rounds, rho-sampled
                                   # (K+R)^2-bounded local join
     "ann_nndescent_beam_search",  # graph-serving walk: budget is
                                   # B*K*hops per query, N-independent
-                                  # — the twin of the construction row
                                   # (build grows linearly, serving
-                                  # should read FLAT)
+                                  # should read flat)
 ]
 
+#: Queries whose job count legitimately changes with the data size, each
+#: with the reason. A job count that grows with data otherwise means a
+#: driver loop over data, which would not survive the next decade.
+JOBS_VARY_WITH_SF: dict[str, str] = {}
 
-def main() -> None:
-    from flu_data_pipeline_spark.plans import REGISTRY
-    from flu_data_pipeline_spark.session import get_spark
+SFS = ["sf0.001", "sf0.01", "sf0.1"]
+
+#: sf1 (10x sf0.1) and sf10 (100x) are repo-generated
+#: (scripts/gen_sf1.py), not driver data.
+_SF1_DIR = os.path.join(ROOT, ".testdata", "sf1")
+_SF10_DIR = os.path.join(ROOT, ".testdata", "sf10")
+
+
+def _ratio_name(lo: str, hi: str) -> str:
+    """``r10_1`` for sf0.001 -> sf0.01: row multiples of sf0.001."""
+    return "r%d_%d" % tuple(round(float(sf[2:]) * 1000) for sf in (hi, lo))
+
+
+def render(results: dict[str, dict[str, dict]]) -> str:
+    """The markdown table of ``results`` ({query: {sf: cell}}, the sfs in
+    run order): per sf the median wall seconds, then each decade's wall
+    ratio, then per sf the median ``jobs``, shuffle MB and peak execution
+    memory MB. A cell with an ``error`` shows the exception class."""
+    sfs = list(next(iter(results.values())))
+    decades = list(zip(sfs, sfs[1:]))
+    head = ([f"{sf} s" for sf in sfs] + [_ratio_name(*d) for d in decades]
+            + [f"{k} {'/'.join(sfs)}" for k in ("jobs", "shuffle MB", "peak MB")])
+    lines = ["| query | " + " | ".join(head) + " |",
+             "|---" * (len(head) + 1) + "|"]
+    for name, cells in results.items():
+        ok = {sf: c for sf, c in cells.items() if "error" not in c}
+        wall = [f"{ok[sf]['s']:.3f}" if sf in ok else cells[sf]["error"] for sf in sfs]
+        ratios = [f"{ok[hi]['s'] / ok[lo]['s']:.2f}" if {lo, hi} <= ok.keys() else "-"
+                  for lo, hi in decades]
+        work = ["/".join(fmt(ok[sf]) if sf in ok else "-" for sf in sfs) for fmt in (
+            lambda c: str(int(c["jobs"])),
+            lambda c: f"{c['shuffle_bytes'] / 1e6:.2f}",
+            lambda c: f"{c['peak_exec_mem_mb']:.0f}",
+        )]
+        lines.append(f"| {name} | " + " | ".join(wall + ratios + work) + " |")
+    return "\n".join(lines)
+
+
+def jobs_vary_unlisted(results: dict[str, dict[str, dict]],
+                       allowed: dict[str, str] = JOBS_VARY_WITH_SF) -> list[str]:
+    """The queries whose ``jobs`` differs across the sizes they ran at
+    and that ``allowed`` does not list."""
+    return [name for name, cells in results.items()
+            if name not in allowed
+            and len({c["jobs"] for c in cells.values() if "error" not in c}) > 1]
+
+
+def main(argv: list[str]) -> int:
+    from bench import REGISTRY, median_work, run_query
+    from flu_data_pipeline_spark.session import default_cpus, get_spark
+    from perfbench.spans import StatusStore
+
+    testdata = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
+    twins = "--twins" in argv
+    names = [a for a in argv if a != "--twins"]
+    unknown = [n for n in names if n not in REGISTRY]
+    if unknown:
+        print(f"unknown registry queries: {', '.join(unknown)}", file=sys.stderr)
+        return 2
+    if twins:
+        sfs = {"sf1": _SF1_DIR, "sf10": _SF10_DIR}
+        if not all(map(os.path.isdir, sfs.values())):
+            raise SystemExit("--twins needs .testdata/sf1 and .testdata/sf10: run "
+                             "python scripts/gen_sf1.py, then python scripts/"
+                             "gen_sf1.py .testdata/sf10 <sf0.1 dir> 100")
+        queries = names or TWIN_QUERIES
+    else:
+        sfs = {sf: os.path.join(testdata, sf) for sf in SFS}
+        if os.path.isdir(_SF1_DIR):
+            sfs["sf1"] = _SF1_DIR
+        queries = names or ([n for n, q in REGISTRY.items() if q.bench]
+                            + [n for n in EXTRA_QUERIES if not REGISTRY[n].bench])
 
     spark = get_spark(app_name="scaling_check")
-    testdata = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
-
-    def run_once(name: str, sf_dir: str) -> float:
-        # time builder + action (bench.py methodology): builders that
-        # checkpoint bounded intermediates (BPE, MMR) do real work at
-        # plan-construction time, which an action-only timer would miss
-        t0 = time.time()
-        df = REGISTRY[name].builder(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
-    if "--sf10-twins" in sys.argv:
-        if not os.path.isdir(_SF10_DIR):
-            raise SystemExit(
-                "no .testdata/sf10 — run: python scripts/gen_sf1.py "
-                f"{_SF10_DIR} /root/testdata/sf0.1 100"
-            )
-        # Pre-materialize the IVF serving layout for both scales OUTSIDE
-        # the timed cells: index build (quantizer fit + partitioned
-        # write) is a one-time cost a vector store amortizes across its
-        # serving lifetime — timing it inside a single query's cell
-        # reported a fake 28x decade for ivf_layout_pruning_gain while
-        # rag_retrieval_hydrated (same layout, already cached by the
-        # preceding cell) read 1.8x.
-        from flu_data_pipeline_spark.plans.similarity_queries import (
-            _ivf_layout_path,
-            _nnd_graph_path,
-            _serving_truth_path,
-        )
-        from flu_data_pipeline_spark.plans.text_queries import (
-            _cleaned_corpus_paths,
-        )
-
-        for d in (_SF1_DIR, _SF10_DIR):
-            _ivf_layout_path(spark, d)
-            # same one-time-artifact rule for the cleaned corpus: the
-            # timed cell measures readback + zero-delta replay (the
-            # steady state), not the initial build
-            _cleaned_corpus_paths(spark, d)
-            # round 11: the serving evals' shared exact truth is the
-            # same artifact class (built once per corpus fingerprint,
-            # read by every serving row) — pre-materialize so the
-            # cells measure steady-state serving
-            _serving_truth_path(spark, d)
-            # ... and the NN-descent graph index the beam-search row
-            # serves from (one-time build, the construction row above
-            # measures it; the serving cell must read the steady
-            # state)
-            _nnd_graph_path(spark, d)
-        # Best-of-2 everywhere except the brute semdedup twin at sf10:
-        # its single run is ~11 min of pure N*k join (noise <<1%), and
-        # the row exists to MEASURE that asymptote, not to tune it.
-        single_sf10 = {"dedup_semdedup"}
-        print("## sf10 — fifth decade (scale twins)\n")
-        print(
-            "Generated by `scripts/scaling_check.py --sf10-twins` "
-            "(.testdata/sf10 = 100x sf0.1 via scripts/gen_sf1.py, 60M "
-            "lineitem / 500k documents / 200k embeddings). Best-of-2 "
-            "per cell except the brute `dedup_semdedup` twin's sf10 "
-            "cell (single ~10-min run; the row exists to MEASURE the "
-            "N*k asymptote, and at that duration fixed overheads are "
-            "noise). The IVF serving layout is pre-materialized for "
-            "both scales before timing — index build is a one-time "
-            "cost a vector store amortizes, and timing it inside one "
-            "query's cell misread as a fake 28x decade while the next "
-            "query (same layout, now cached) read 1.8x.\n"
-        )
-        twins = TWIN_QUERIES
-        if "--only" in sys.argv:
-            wanted = sys.argv[sys.argv.index("--only") + 1].split(",")
-            unknown = [n for n in wanted if n not in TWIN_QUERIES]
-            if unknown:
-                raise SystemExit(f"--only: not twin queries {unknown}")
-            twins = wanted
-        print("| query | sf1 s | sf10 s | r10000_1000 |")
-        print("|---|---|---|---|")
-        for name in twins:
-            t1 = min(run_once(name, _SF1_DIR) for _ in range(2))
-            n10 = 1 if name in single_sf10 else 2
-            t10 = min(run_once(name, _SF10_DIR) for _ in range(n10))
-            print(
-                f"| {name} | {t1:.3f} | {t10:.3f} | {t10 / t1:.2f} |",
-                flush=True,
-            )
-        return
-
-    queries = _query_list()
-    if "--only" in sys.argv:
-        wanted = sys.argv[sys.argv.index("--only") + 1].split(",")
-        unknown = [n for n in wanted if n not in REGISTRY]
-        if unknown:
-            raise SystemExit(f"--only: unknown queries {unknown}")
-        queries = wanted
-    have_sf1 = os.path.isdir(_SF1_DIR)
-    sfs = SFS + (["sf1"] if have_sf1 else [])
-
-    results: dict[str, dict[str, float]] = {}
+    store = StatusStore(spark)
+    results: dict[str, dict[str, dict]] = {}
     for name in queries:
-        results[name] = {}
-        for sf in sfs:
-            sf_dir = (
-                _SF1_DIR if sf == "sf1" else os.path.join(testdata, sf)
-            )
-            best = min(run_once(name, sf_dir) for _ in range(3))
-            results[name][sf] = best
+        for sf, sf_dir in sfs.items():
+            try:
+                secs, runs = run_query(spark, store, name, sf_dir)
+                cell = {"s": round(statistics.median(secs), 4), **median_work(runs)}
+            except Exception as exc:  # noqa: BLE001 - the cell records it
+                secs, cell = [], {"error": type(exc).__name__}
+            results.setdefault(name, {})[sf] = cell
+            print(json.dumps({"query": name, "sf": sf, **cell,
+                              "runs_s": [round(x, 4) for x in secs]}),
+                  file=sys.stderr, flush=True)
 
-    md = "--md" in sys.argv
-    out = []
-    decades = "1000x" if have_sf1 else "100x"
-    if md:
-        out.append(
-            f"# SCALING — measured wall-time across {decades} of data\n"
-        )
-        out.append(
-            "Best-of-3 per cell on local[%s], noop sink (no pruning-away "
-            "of compute). `r10_1` = sf0.01/sf0.001 time ratio for 10x "
-            "rows; `r100_10` = sf0.1/sf0.01; `r1000_100` = sf1/sf0.1 "
-            "(sf1 is repo-synthesized 10x of sf0.1 — scripts/gen_sf1.py "
-            "— with TPC-H-style key remapping so join/group cardinality "
-            "scales, not duplicate multiplicity). Ratios well "
-            "under 10 mean fixed overheads still dominate (plan cost, "
-            "task launch) — headroom, not saturation; ratios near 10 are "
-            "linear scaling; ratios above 10 would flag a hidden "
-            "super-linearity. Generated by scripts/scaling_check.py.\n"
-            % os.environ.get("SPARK_GRAFT_CPUS", "32")
-        )
-        hdr = "| query | sf0.001 s | sf0.01 s | sf0.1 s "
-        sep = "|---|---|---|---"
-        if have_sf1:
-            hdr += "| sf1 s "
-            sep += "|---"
-        out.append(hdr + "| r10_1 | r100_10 "
-                   + ("| r1000_100 |" if have_sf1 else "|"))
-        out.append(sep + "|---|---" + ("|---|" if have_sf1 else "|"))
-    for name in queries:
-        r = results[name]
-        r1 = r["sf0.01"] / r["sf0.001"]
-        r2 = r["sf0.1"] / r["sf0.01"]
-        r3 = (r["sf1"] / r["sf0.1"]) if have_sf1 else None
-        if md:
-            row = (
-                f"| {name} | {r['sf0.001']:.3f} | {r['sf0.01']:.3f} | "
-                f"{r['sf0.1']:.3f} "
-            )
-            if have_sf1:
-                row += f"| {r['sf1']:.3f} "
-            row += f"| {r1:.2f} | {r2:.2f} "
-            row += f"| {r3:.2f} |" if have_sf1 else "|"
-            out.append(row)
-        else:
-            line = (
-                f"{name:34s} {r['sf0.001']:.3f}s {r['sf0.01']:.3f}s "
-                f"{r['sf0.1']:.3f}s"
-            )
-            if have_sf1:
-                line += f" {r['sf1']:.3f}s"
-            line += f"  x10: {r1:.2f}  x10: {r2:.2f}"
-            if have_sf1:
-                line += f"  x10: {r3:.2f}"
-            print(line)
-    if md:
-        out.append(_CATCHES_MD)
-        print("\n".join(out))
+    print((_TWINS_MD if twins else _HEADER_MD) % default_cpus())
+    print(render(results))
+    if not twins:
+        print(_CATCHES_MD)
+    drift = jobs_vary_unlisted(results)
+    if drift:
+        print(f"jobs change with sf, not in JOBS_VARY_WITH_SF: {', '.join(drift)}",
+              file=sys.stderr)
+    spark.stop()
+    return 1 if drift else 0
 
+
+_WORK_MD = (
+    "Each cell is `bench.run_query` on local[%s] (`$SPARK_GRAFT_CPUS`): a "
+    "warm run, which also builds any persisted derived table (IVF layout, "
+    "cleaned corpus, serving truth, kNN graph), then 5 timed runs into the "
+    "noop sink. `s` is their median wall seconds and `rX_Y` the ratio of "
+    "two sizes' medians, sizes in rows relative to sf0.001. The work "
+    "columns give one value per size, `/`-separated, each the median over "
+    "the 5 runs of Spark's status store for the run's jobs: `jobs`, "
+    "`shuffle MB` (read + write bytes / 1e6) and `peak MB` (the largest "
+    "stage's peak execution memory). A query's `jobs` may change with size "
+    "only if `JOBS_VARY_WITH_SF` in the script lists it with the reason.\n"
+)
+
+_HEADER_MD = (
+    "# SCALING — measured wall time and work across decades of data\n\n"
+    "Generated by `python scripts/scaling_check.py`. sf1 is "
+    "repo-synthesized 10x of sf0.1 (`scripts/gen_sf1.py`), with TPC-H-style "
+    "key remapping so join/group cardinality scales, not duplicate "
+    "multiplicity. " + _WORK_MD + "\nRatios well under 10 mean fixed "
+    "overheads still dominate (plan cost, job and task launch): headroom, "
+    "not saturation; ratios near 10 are linear scaling; ratios above 10 "
+    "flag a hidden super-linearity.\n"
+)
+
+_TWINS_MD = (
+    "## sf10 — fifth decade (scale twins)\n\n"
+    "Generated by `python scripts/scaling_check.py --twins` (.testdata/sf10 "
+    "= 100x sf0.1 via `scripts/gen_sf1.py`, 60M lineitem / 500k documents "
+    "/ 200k embeddings). " + _WORK_MD
+)
 
 #: Appended to the generated SCALING.md: regressions this table has
 #: caught — the reason it exists.
@@ -377,4 +308,4 @@ _CATCHES_MD = """
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main(sys.argv[1:]))

@@ -215,3 +215,55 @@ def test_plans_md_writes_each_query_once():
     assert not bench_names & set(pq.SHOWCASE)
     assert len(set(pq.SHOWCASE)) == len(pq.SHOWCASE)
     assert set(pq.SHOWCASE) <= set(pq.REGISTRY)
+
+
+def _scaling_check():
+    spec = importlib.util.spec_from_file_location(
+        "scaling_check_mod",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "scripts", "scaling_check.py"),
+    )
+    sc = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(sc)
+    return sc
+
+
+def _cell(s, jobs=3):
+    return {"s": s, **_work(0.1, jobs), "shuffle_bytes": 2_500_000,
+            "peak_exec_mem_mb": 64.4}
+
+
+def test_scaling_render_rows_ratios_and_errors():
+    """``scripts/scaling_check.py``'s table: a header naming each sf's
+    wall column, each decade's ratio of the medians and the per-sf work
+    columns, then one row per query; an errored cell shows its exception
+    class and leaves the ratios it would feed blank."""
+    sc = _scaling_check()
+    results = {
+        "q_ok": {"sf0.001": _cell(0.5), "sf0.01": _cell(1.0), "sf0.1": _cell(4.0)},
+        "q_err": {"sf0.001": _cell(0.5), "sf0.01": {"error": "Py4JJavaError"},
+                  "sf0.1": _cell(2.0, jobs=4)},
+    }
+    header, sep, *rows = sc.render(results).splitlines()
+    assert header == (
+        "| query | sf0.001 s | sf0.01 s | sf0.1 s | r10_1 | r100_10 "
+        "| jobs sf0.001/sf0.01/sf0.1 | shuffle MB sf0.001/sf0.01/sf0.1 "
+        "| peak MB sf0.001/sf0.01/sf0.1 |")
+    assert sep == "|---" * 9 + "|"
+    assert rows == [
+        "| q_ok | 0.500 | 1.000 | 4.000 | 2.00 | 4.00 | 3/3/3 | 2.50/2.50/2.50 "
+        "| 64/64/64 |",
+        "| q_err | 0.500 | Py4JJavaError | 2.000 | - | - | 3/-/4 | 2.50/-/2.50 "
+        "| 64/-/64 |",
+    ]
+
+
+def test_scaling_jobs_must_not_vary_with_sf_unless_listed():
+    sc = _scaling_check()
+    results = {
+        "flat": {"sf0.001": _cell(0.5), "sf0.01": _cell(1.0)},
+        "loop": {"sf0.001": _cell(0.5, jobs=5), "sf0.01": _cell(1.0, jobs=7)},
+        "err": {"sf0.001": _cell(0.5), "sf0.01": {"error": "Py4JJavaError"}},
+    }
+    assert sc.jobs_vary_unlisted(results, {"loop": "converges in more rounds"}) == []
+    assert sc.jobs_vary_unlisted(results, {}) == ["loop"]
