@@ -1868,12 +1868,14 @@ def _merge_train(
     docs: DataFrame,
     rounds: int,
     pick: Callable[[DataFrame, DataFrame], DataFrame],
+    trainer: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Run ``rounds`` greedy merge rounds over ``docs``'s character-split
     word table; returns the final (word, cnt, seq) vocabulary and every
     round's winning pair (x, y, c, ..., merge_rank) as one frame.
     ``pick(vocab, pairs)`` ranks the round's (x, y, c) adjacent-pair
-    counts and returns the 1-row winner."""
+    counts and returns the 1-row winner. Every barrier label starts with
+    ``trainer/``, so a query that runs two trainers profiles them apart."""
     vocab = _word_counts(docs).select(
         "word",
         "cnt",
@@ -1883,7 +1885,7 @@ def _merge_train(
     )
     # The vocabulary frame is tiny (distinct words); checkpoint each
     # round so the returned plan doesn't re-derive v0 2^T times.
-    vocab = barrier(vocab, "vocab")
+    vocab = barrier(vocab, f"{trainer}/vocab")
     merges: list[DataFrame] = []
     for t in range(1, rounds + 1):
         syms = F.split(F.col("seq"), " ")
@@ -1908,7 +1910,7 @@ def _merge_train(
         # lazily the next vocab rewrite's eager checkpoint materializes
         # it in the same job (one job per merge round instead of two)
         # while the merge-table output still reads the materialized RDD.
-        best = barrier(pick(vocab, pairs), f"best{t}", eager=False)
+        best = barrier(pick(vocab, pairs), f"{trainer}/best{t}", eager=False)
         merges.append(best.withColumn("merge_rank", F.lit(t)))
         padded = F.concat(
             F.lit(" "), F.replace(F.col("seq"), F.lit(" "), F.lit("  ")),
@@ -1931,7 +1933,7 @@ def _merge_train(
                     )
                 ).alias("seq"),
             ),
-            f"vocab{t}",
+            f"{trainer}/vocab{t}",
         )
     return vocab, reduce(DataFrame.union, merges)
 
@@ -1945,6 +1947,7 @@ def _bpe_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         lambda _, pairs: pairs.orderBy(
             F.desc("c"), F.asc("x"), F.asc("y")
         ).limit(1),
+        "bpe",
     )
 
 
@@ -2818,7 +2821,7 @@ def _wp_pick(vocab: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def _wp_train(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """The _WP_MERGES-round WordPiece trainer (:func:`_wp_pick`)."""
-    return _merge_train(docs, _WP_MERGES, _wp_pick)
+    return _merge_train(docs, _WP_MERGES, _wp_pick, "wp")
 
 
 #: longest trainable piece after _WP_MERGES binary merges

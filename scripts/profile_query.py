@@ -78,6 +78,27 @@ SHOWCASE = (
 
 COLS = ("wall_s", "jobs", "cpu_s", "shuffle_bytes", "peak_exec_mem_mb")
 
+#: Ids in a plan's text that count over the life of the process, not
+#: over the plan: expression ids (``#<n>``), ``plan_id=<n>``, the counter
+#: in a Python lambda's variable name (``lambda x_<n>``, which counts
+#: every lambda the process built before, derived-table builds included),
+#: RDD ids (``RDD[<n>]``), codegen stage ids (``[codegen id : <n>]``)
+#: and AQE query stage ids (a query stage's ``Arguments: <n>``).
+_RUN_IDS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(lambda [xyz]_)(\d+)", r"(RDD\[)(\d+)",
+            r"(\[codegen id : )(\d+)",
+            r"(QueryStage\n(?:(?:Input|Output) \[\d+\]: .*\n)?Arguments: )(\d+)")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with each kind of :data:`_RUN_IDS` renumbered in order of
+    first appearance and the checkout root read as ``<repo>``, so that
+    unchanged code writes the same text in any process."""
+    for pattern in _RUN_IDS:
+        ids: dict[str, str] = {}
+        plan = re.sub(pattern, lambda m: m.group(1) + ids.setdefault(
+            m.group(2), str(len(ids) + 1)), plan)
+    return plan.replace(ROOT, "<repo>")
+
 
 def profile(spark, name: str, sf_dir: str, out_dir: str) -> list[dict]:
     """Warm ``name``, profile one pass, write each barrier's input plan
@@ -126,7 +147,7 @@ def profile(spark, name: str, sf_dir: str, out_dir: str) -> list[dict]:
     for n, ex in enumerate(barriers):
         label = ex.description()[len(name) + 1:].replace("/", "_")
         with open(os.path.join(out_dir, f"{n:02d}_{label}.txt"), "w") as fh:
-            fh.write(ex.physicalPlanDescription())
+            fh.write(normalize_plan(ex.physicalPlanDescription()))
     return rows
 
 
@@ -149,11 +170,8 @@ def plans_md(spark, sf_dir: str) -> str:
     """PLANS.md: each bench and showcase query's executed plan, written
     so that unchanged code regenerates it byte for byte: scan metadata is
     never truncated (Spark cuts it at a width, so ids of another digit
-    count cut it elsewhere), ``#<id>``, ``plan_id=<n>`` and the counter
-    in a Python lambda's variable name (``lambda x_<n>``, which counts
-    every lambda the process built before, derived-table builds included)
-    are renumbered per section in order of first appearance, and the
-    checkout root reads ``<repo>``."""
+    count cut it elsewhere) and each section goes through
+    :func:`normalize_plan`."""
     spark.conf.set("spark.sql.maxMetadataStringLength", str(2**31 - 1))
     names = [n for n, q in REGISTRY.items() if q.bench] + list(SHOWCASE)
     out = [
@@ -173,13 +191,8 @@ def plans_md(spark, sf_dir: str) -> str:
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     for name in names:
         qd = REGISTRY[name]
-        plan = qd.builder(spark, sf_dir)._jdf.queryExecution().explainString(mode)
-        for pattern in (r"(?<=#)\d+", r"(?<=plan_id=)\d+", r"(?<=lambda [xyz]_)\d+"):
-            ids: dict[str, str] = {}
-            plan = re.sub(pattern,
-                          lambda m: ids.setdefault(m.group(), str(len(ids) + 1)),
-                          plan)
-        plan = plan.replace(ROOT, "<repo>")
+        plan = normalize_plan(
+            qd.builder(spark, sf_dir)._jdf.queryExecution().explainString(mode))
         out += [f"## {name}" + ("  _(bench)_" if qd.bench else ""), "",
                 "\n".join(textwrap.wrap(" ".join(qd.doc.split()), width=76)), "",
                 # NUL bytes appear when a plan renders an empty-string
